@@ -104,8 +104,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, threshold: Double, k: Int = 3,
       textCol: String = "text", idCol: String = "doc_id",
       prefixFilter: Boolean = false): DataFrame = {
-    val docs = Skew.fanIn(df, col(idCol))
-      .select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
+    val docs = df.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
       .withColumn("n_sh", size(col("sh")))
     if (prefixFilter) {
       val cand = prefixCandidates(docs, threshold)
@@ -453,11 +452,6 @@ object Dedup {
   def minhashPairs(df: DataFrame, threshold: Double, numHashes: Int = 64,
       bands: Int = 16, k: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // NOTE round-13: Skew.fanIn was tried here and measured a LOSS both
-    // ways (round-robin 1.27x, hash-by-id ~9x): the banded self-join and
-    // the two shingle refine joins dedupe their identical subtrees via
-    // ReuseExchange, and fanning by id collapses those exchanges so the
-    // whole signature pipeline re-plans as duplicated broadcast builds.
     val cand = minhashCandidates(df, numHashes, bands, k, textCol, idCol)
     // shingle arrays feed both sides of the refine join. NOT persisted: the
     // function returns a lazy frame, so a persist here could only be
@@ -584,8 +578,7 @@ object Dedup {
     // (engine-portable: the oracle computes the same arithmetic); positions
     // are bounded by doc length << 2^20
     val ord = lit(1L << 20)
-    val base = Skew.fanIn(df, col(idCol))
-      .select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("w"))
+    val base = df.select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("w"))
     // span digests travel as 16-byte binary (unhex(md5)) — half the
     // hex-string shuffle bytes; ownership is a MIN window over the digest,
     // not a groupBy + re-join: the re-join recomputed the whole

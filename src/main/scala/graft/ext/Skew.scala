@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation. Default posture is AQE (`spark.sql.adaptive.
@@ -29,45 +29,4 @@ object Skew {
   /** Top skewed keys by frequency — the diagnostic to decide salting. */
   def keyHistogram(df: DataFrame, key: String, topN: Int = 20): DataFrame =
     df.groupBy(col(key)).agg(count(lit(1)).as("n")).orderBy(col("n").desc).limit(topN)
-
-  /** Fan a narrow-input scan across the session's cores (opt guide §2.5:
-    * one huge unsplittable input — "repartition immediately after the
-    * read"). The corpus-pass operators (span hashing, shingling, n-gram
-    * scoring, tokenizer training) apply this to their input: a corpus
-    * arriving as fewer partitions than the session has cores — one file,
-    * one parquet row group, one gzip member — serializes every expensive
-    * map pass over it (measured: e7's three corpus passes ran 1 task each
-    * at sf0.1, 0.5-1.7 s per pass, on a 32-core session).
-    *
-    * Gated twice so it can never hurt at scale: only exchange-free
-    * scan-shaped plans (projections/filters/unions over leaves) are
-    * probed — anything already shuffled, joined or aggregated keeps its
-    * partitioning (probing those under AQE would also force eager stage
-    * materialization) — and the repartition fires only when the scan has
-    * fewer partitions than defaultParallelism; production inputs carry
-    * orders of magnitude more, making this a plan-identity no-op. When it
-    * fires, downstream self-joins over the fanned frame reuse ONE
-    * exchange (ReuseExchange), so the corpus moves at most once. */
-  def fanIn(df: DataFrame, by: Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val scanShaped = df.queryExecution.optimizedPlan.find {
-      case _: LocalRelation => true // tiny literal frames: nothing to fan
-      case _: LeafNode => false
-      case _: Project | _: Filter | _: Union | _: SubqueryAlias => false
-      case _ => true
-    }.isEmpty
-    if (!scanShaped) df
-    else {
-      val dp = df.sparkSession.sparkContext.defaultParallelism
-      // exchange-free plan: .rdd builds the physical RDD without running
-      // any job, so the partition probe is free
-      val n = df.rdd.getNumPartitions
-      if (n >= dp) df
-      // hash-distribute on the caller's key when given (cheaper than
-      // round-robin, whose retry-determinism pre-sort is paid per input
-      // row); round-robin only when no even high-cardinality key exists
-      else if (by.nonEmpty) df.repartition(dp, by: _*)
-      else df.repartition(dp)
-    }
-  }
 }

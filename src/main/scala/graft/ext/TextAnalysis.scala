@@ -522,10 +522,6 @@ object TextAnalysis {
       textCol: String = "text", keyCol: String = "doc_id"): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     require(topK > 0, "topK must be positive")
-    // NOTE round-13: Skew.fanIn was tried here and measured a 1.98x LOSS —
-    // bm25 runs TWO executions (the 1-row corpus-scalar agg, then the
-    // scoring query), each repaying the fan-in shuffle, while the map pass
-    // (tokenize + 3-term filter) is too cheap to amortize it.
     val toks = df.select(col(keyCol), tokens(col(textCol)).as("_toks"))
       .withColumn("_dl", size(col("_toks")).cast("long"))
     // two bounded corpus scalars (one 1-row aggregate)

@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.mutable.ArrayBuffer
 
 /** One data file registered by a commit. Paths are relative to the table's
@@ -137,7 +139,20 @@ object CommitLog {
   private def fileFor(tablePath: String, version: Long): Path =
     new Path(logDir(tablePath), f"$version%020d.json")
 
+  // ---- log-op counters ---------------------------------------------------
+  // Always on and process-wide: every log-dir listing and commit read bumps
+  // one counter, so the driver-side log cost of any operation is the
+  // difference of two [[logOps]] snapshots taken around it.
+  private val versionListings = new AtomicLong
+  private val checkpointListings = new AtomicLong
+  private val commitHits = new AtomicLong
+  private val commitMisses = new AtomicLong
+
+  private[graft] def logOps: LogOps = LogOps(versionListings.get, checkpointListings.get,
+    commitHits.get, commitMisses.get)
+
   def listVersions(tablePath: String, conf: Configuration): Seq[Long] = {
+    versionListings.incrementAndGet()
     val dir = logDir(tablePath)
     val f = fs(dir, conf)
     if (!f.exists(dir)) Seq.empty
@@ -342,7 +357,8 @@ object CommitLog {
   def read(tablePath: String, version: Long, conf: Configuration): Commit = {
     val key = s"$tablePath#$version"
     val cached = readCache.get(key)
-    if (cached != null) return cached
+    if (cached != null) { commitHits.incrementAndGet(); return cached }
+    commitMisses.incrementAndGet()
     val p = fileFor(tablePath, version)
     val in = fs(p, conf).open(p)
     val root = try mapper.readTree(in) finally in.close()
@@ -577,6 +593,7 @@ object CommitLog {
     new Path(logDir(tablePath), f"$version%020d.checkpoint.parquet")
 
   def listCheckpoints(tablePath: String, conf: Configuration): Seq[Long] = {
+    checkpointListings.incrementAndGet()
     val dir = logDir(tablePath)
     val f = fs(dir, conf)
     if (!f.exists(dir)) Seq.empty
@@ -761,11 +778,16 @@ object CommitLog {
 
   /** Live files at `asOf` (or latest): latest checkpoint ≤ asOf + commit
     * tail replay. */
-  def liveFiles(tablePath: String, asOf: Option[Long], conf: Configuration): Seq[FileAction] = {
-    val versions = listVersions(tablePath, conf)
+  def liveFiles(tablePath: String, asOf: Option[Long], conf: Configuration): Seq[FileAction] =
+    liveFiles(tablePath, listVersions(tablePath, conf), listCheckpoints(tablePath, conf), asOf, conf)
+
+  /** [[liveFiles]] over the caller's own version and checkpoint listings,
+    * so one pair of listings can resolve several versions. */
+  def liveFiles(tablePath: String, versions: Seq[Long], checkpoints: Seq[Long],
+      asOf: Option[Long], conf: Configuration): Seq[FileAction] = {
     if (versions.isEmpty) return Seq.empty
     val target = asOf.map(v => math.min(v, versions.last)).getOrElse(versions.last)
-    val cp = listCheckpoints(tablePath, conf).filter(_ <= target).lastOption
+    val cp = checkpoints.filter(_ <= target).lastOption
     val base = cp.map(readCheckpoint(tablePath, _, conf)).getOrElse(Seq.empty)
     val tail = versions.filter(v => v > cp.getOrElse(-1L) && v <= target)
       .map(read(tablePath, _, conf))
@@ -803,3 +825,16 @@ private[lake] case class CheckpointRow(
     colStats: Map[String, (String, String)],
     dv: Option[String], dvRows: Long, bytes: Long,
     colSums: Map[String, (String, Long)])
+
+/** A snapshot of [[CommitLog]]'s log-op counters: log-dir listings for
+  * versions and for checkpoints, and commit reads split into read-cache
+  * hits and misses (a miss parses the commit file). Subtract two
+  * snapshots to get the work done in between. */
+private[graft] case class LogOps(versionListings: Long, checkpointListings: Long,
+    commitHits: Long, commitMisses: Long) {
+  def commitReads: Long = commitHits + commitMisses
+
+  def -(o: LogOps): LogOps = LogOps(versionListings - o.versionListings,
+    checkpointListings - o.checkpointListings, commitHits - o.commitHits,
+    commitMisses - o.commitMisses)
+}

@@ -174,58 +174,53 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   def spec: TableSpec = latestCommit.spec
 
   /** Declared data schema (without meta columns). */
-  def schema: StructType =
-    DataType.fromJson(latestCommit.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = shapeAt(None).schema
+
+  /** Spec and schema as of a version (latest when None), from one log
+    * resolution; v<0 = "before v0": v0's. */
+  private[lake] def shapeAt(asOf: Option[Long]): Shape = {
+    val latest = latestVersion
+    Shape.of(CommitLog.read(path, asOf.fold(latest)(v => math.max(0L, math.min(v, latest))), conf))
+  }
 
   /** Schema as of a version — time travel reads use the schema that was
     * declared THEN (like Delta), so pre-evolution snapshots keep their
     * original shape. */
-  def schemaAt(asOf: Option[Long]): StructType = asOf match {
-    case None => schema
-    case Some(v) =>
-      val target = math.max(0L, math.min(v, latestVersion)) // v<0 = "before v0": v0's schema
-      DataType.fromJson(CommitLog.read(path, target, conf).schemaJson).asInstanceOf[StructType]
-  }
+  def schemaAt(asOf: Option[Long]): StructType = shapeAt(asOf).schema
 
   /** Spec as of a version (column mapping travels with the schema). */
-  private[graft] def specAt(asOf: Option[Long]): TableSpec = asOf match {
-    case None => spec
-    case Some(v) =>
-      val target = math.max(0L, math.min(v, latestVersion))
-      CommitLog.read(path, target, conf).spec
-  }
+  private[graft] def specAt(asOf: Option[Long]): TableSpec = shapeAt(asOf).spec
 
   /** Checkpoint-aware: latest checkpoint + commit tail, not a full replay. */
   private[graft] def liveFiles(asOf: Option[Long]): Seq[FileAction] =
     CommitLog.liveFiles(path, asOf, conf)
 
-  /** Record identity: (key, partition) when partitioned — Hudi's
-    * non-global-index semantics, where the same key in two partitions is
-    * two records. Used consistently by batch dedup, upsert contested
-    * splits, realtime merge, and compaction, so a partition-value change
-    * behaves identically on every path (new record; the old row stays). */
-  private def idCols: Seq[String] = spec.key +: spec.partition.toSeq
+  /** The commit window `(since, upTo]` (`upTo` = latest when None), from
+    * one listing of the log — see [[CommitWindow]]. */
+  private[graft] def window(since: Long, upTo: Option[Long]): CommitWindow = {
+    val versions = CommitLog.listVersions(path, conf)
+    new CommitWindow(path, conf, versions, since,
+      upTo.getOrElse(versions.lastOption.getOrElse(-1L)))
+  }
 
   /** Identity JOINS need a null-safe partition id: SQL `=` never matches a
     * NULL partition value, so a using-column join on the raw partition
     * column would treat every null-partition row as brand-new. Both sides
-    * get a sentinel-coalesced copy, join on it, drop it after. (groupBy —
-    * dedupLatest — is already null-safe and keeps using the raw columns.) */
-  private val PID = "_graft_pid"
-  private def withJoinIds(df: DataFrame): DataFrame = spec.partition match {
+    * get a sentinel-coalesced copy ([[PID]]), join on it, drop it after.
+    * (groupBy — dedupLatest — is already null-safe and keeps using the raw
+    * columns.) */
+  private def withJoinIds(df: DataFrame, sh: Shape): DataFrame = sh.spec.partition match {
     case Some(p) => df.withColumn(PID,
       coalesce(col(p).cast(StringType), lit("__HIVE_DEFAULT_PARTITION__")))
     case None => df
   }
-  private def joinIdCols: Seq[String] = spec.key +: spec.partition.map(_ => PID).toSeq
 
   // ---- reads -----------------------------------------------------------
 
   /** Snapshot read: CoW latest state; for MoR this is the `_rt` view
     * (matches `spark.read.format("hudi")` snapshot semantics, S2). */
   def read(asOf: Option[Long] = None): DataFrame =
-    if (spec.mor) realtime(asOf)
-    else ordered(readFiles(liveFiles(asOf), asOf = asOf), asOf)
+    if (spec.mor) realtime(asOf) else readOrdered(liveFiles(asOf), shapeAt(asOf))
 
   /** Snapshot read with file-level DATA SKIPPING for the pushed filters:
     * files whose commit-log stat ranges (record key, declared
@@ -241,15 +236,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       asOf: Option[Long] = None): DataFrame =
     readWherePruned(filters, identity, asOf)
 
-  /** Debug-only phase timer (GRAFT_MV_PHASES=1), shared by the pruned-read
-    * and write paths — zero overhead when the env is absent. */
-  private def dbgT[A](tag: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_MV_PHASES")) body
-    else {
-      val t0 = System.nanoTime(); val r = body
-      println(f"LTPHASE $tag ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-
   /** [[readWhere]] with an additional caller-supplied file-level pruner,
     * applied to the base/CoW actions AFTER the stats/bucket/bloom pass
     * (MoR log files are never pruned). The caller owns the pruner's
@@ -261,17 +247,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       extra: Seq[FileAction] => Seq[FileAction],
       asOf: Option[Long] = None): DataFrame = {
-    val live = dbgT("rwp-liveFiles")(liveFiles(asOf))
-    if (live.exists(_.log)) realtimePruned(asOf, filters, extra)
-    else {
-      val fsz = filters.map {
-        case org.apache.spark.sql.sources.In(c, vs) => s"In($c,${vs.length})"
-        case f => f.getClass.getSimpleName
-      }.mkString(",")
-      val pruned = dbgT(s"rwp-prune-n=${live.size}-f=$fsz")(extra(pruneByFilters(live, filters)))
-      val rf = dbgT(s"rwp-readFiles-n=${pruned.size}")(readFiles(pruned, asOf = asOf))
-      dbgT("rwp-ordered")(ordered(rf, asOf))
-    }
+    val live = liveFiles(asOf)
+    val sh = shapeAt(asOf)
+    if (live.exists(_.log)) realtimePruned(live, sh, filters, extra)
+    else readOrdered(extra(pruneByFilters(live, filters)), sh)
   }
 
   /** [[skipByStats]] + [[bucketSkip]] + [[bloomSkip]] for the DSv2 scan
@@ -325,22 +304,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     actions.filter { a =>
       if (!partitionColOf(a).contains(TableSpec.BUCKET_COL)) true
       else a.partitionValue.flatMap(_.toIntOption).forall(allowed.contains)
-    }
-  }
-
-  /** Physical column names present in a live graft-written file: the
-    * declared schema of the commit that wrote it, derived from the file's
-    * `_v=<writeId>/` dir (writeId / WRITE_SLOTS = version). Lets the v2
-    * scan serve ADDITIVELY evolved tables — files older than an added
-    * column simply surface nulls for it. None when the path doesn't carry
-    * a graft write-id (foreign/converted files — not v2-scan candidates). */
-  private[graft] def fileColumns(a: FileAction): Option[Set[String]] = {
-    val head = a.path.takeWhile(_ != '/')
-    if (!head.startsWith(s"$WRITE_ID=")) return None
-    head.drop(WRITE_ID.length + 1).toLongOption.map { wid =>
-      val v = wid / LakeTable.WRITE_SLOTS
-      DataType.fromJson(CommitLog.read(path, v, conf).schemaJson)
-        .asInstanceOf[StructType].fieldNames.toSet
     }
   }
 
@@ -539,7 +502,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** MoR `_ro`: base files only — stale until compaction (S9/J3). */
   def readOptimized(asOf: Option[Long] = None): DataFrame =
-    ordered(readFiles(liveFiles(asOf).filterNot(_.log), asOf = asOf), asOf)
+    readOrdered(liveFiles(asOf).filterNot(_.log), shapeAt(asOf))
 
   /** MoR `_rt`: base ∪ logs with latest-wins merge at read (J3).
     *
@@ -549,7 +512,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * contested rows. Read cost scales with log size, not table size: at
     * 100 TB that is the difference between a merge and a full re-shuffle. */
   def realtime(asOf: Option[Long] = None): DataFrame =
-    realtimePruned(asOf, Nil)
+    realtimePruned(liveFiles(asOf), shapeAt(asOf), Nil, identity)
 
   /** [[realtime]] with BASE-file pruning against `baseFilters`
     * (stats/bucket/bloom skipping; log files are never pruned — they are
@@ -558,30 +521,29 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * pruning only drops base files that cannot contain a matching key,
     * and the latest-wins merge of the remaining files is unchanged for
     * every surviving key. */
-  private def realtimePruned(asOf: Option[Long],
+  private def realtimePruned(live: Seq[FileAction], sh: Shape,
       baseFilters: Seq[org.apache.spark.sql.sources.Filter],
-      extra: Seq[FileAction] => Seq[FileAction] = identity): DataFrame = {
-    val live = liveFiles(asOf)
+      extra: Seq[FileAction] => Seq[FileAction]): DataFrame = {
     val (logActions, baseActions0) = live.partition(_.log)
     val baseActions = extra(
       if (baseFilters.isEmpty) baseActions0
       else pruneByFilters(baseActions0, baseFilters))
     if (logActions.isEmpty)
-      return ordered(readFiles(baseActions, asOf = asOf), asOf)
+      return readOrdered(baseActions, sh)
     val (tombActions, dataLogs) = logActions.partition(_.tombstone)
-    val base = withJoinIds(readFiles(baseActions, keepWriteId = true, asOf = asOf))
-    val logs = withJoinIds(readFiles(dataLogs, keepWriteId = true, asOf = asOf))
-    val tombs = tombMax(tombActions, asOf)
+    val base = withJoinIds(readFiles(baseActions, sh, keepWriteId = true), sh)
+    val logs = withJoinIds(readFiles(dataLogs, sh, keepWriteId = true), sh)
+    val tombs = tombMax(tombActions, sh)
     // tombstoned keys are contested too: their base rows must enter the
     // merge so the tombstone filter can kill them
-    val logKeys = contestedLogKeys(logs, tombs)
-    val passThrough = base.join(logKeys, joinIdCols, "left_anti")
+    val logKeys = contestedLogKeys(logs, tombs, sh)
+    val passThrough = base.join(logKeys, sh.joinIdCols, "left_anti")
     val contested = applyTombstones(
-      base.join(logKeys, joinIdCols, "left_semi").unionByName(logs), tombs)
-    val merged = dedupLatest(contested, idCols, spec.precombine, col(WRITE_ID))
+      base.join(logKeys, sh.joinIdCols, "left_semi").unionByName(logs), tombs, sh)
+    val merged = dedupLatest(contested, sh.idCols, sh.spec.precombine, col(WRITE_ID))
       .unionByName(passThrough)
       .drop(WRITE_ID, PID)
-    ordered(merged, asOf)
+    ordered(merged, sh)
   }
 
   /** Existence probe: the DISTINCT values of `keys`' `spec.key` column
@@ -601,7 +563,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val live = liveFiles(None)
     val present =
       if (live.exists(_.log)) realtime().select(col(spec.key))
-      else readFiles(pruneCandidates(live, k)).select(col(spec.key))
+      else readFiles(pruneCandidates(live, k), shapeAt(None)).select(col(spec.key))
     k.join(present, Seq(spec.key), "left_semi")
   }
 
@@ -614,43 +576,42 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   def readForKeys(keys: DataFrame): DataFrame = {
     val k = keys.select(col(spec.key)).filter(col(spec.key).isNotNull).distinct()
     val live = liveFiles(None)
-    if (live.exists(_.log)) realtime()
-    else ordered(readFiles(pruneCandidates(live, k)))
+    if (live.exists(_.log)) realtime() else readOrdered(pruneCandidates(live, k), shapeAt(None))
   }
 
   /** Max tombstone write-id per record identity — the one scan of the
     * (churn-bounded) tombstone files a read needs; both its consumers (the
     * contested-key union and the kill filter) reference the same subplan,
     * which Spark collapses via exchange reuse. */
-  private def tombMax(tombActions: Seq[FileAction],
-      asOf: Option[Long] = None): Option[DataFrame] =
+  private def tombMax(tombActions: Seq[FileAction], sh: Shape): Option[DataFrame] =
     if (tombActions.isEmpty) None
-    else Some(withJoinIds(readFiles(tombActions, keepWriteId = true, asOf = asOf))
-      .groupBy(joinIdCols.map(col): _*).agg(max(col(WRITE_ID)).as(TOMB_V)))
+    else Some(withJoinIds(readFiles(tombActions, sh, keepWriteId = true), sh)
+      .groupBy(sh.joinIdCols.map(col): _*).agg(max(col(WRITE_ID)).as(TOMB_V)))
 
   /** Kill rows superseded by a newer tombstone: a keyed MoR delete lands as
     * a tombstone log row ([[FileAction.tombstone]]) that deletes whatever
     * was live at its commit — any same-key row with a LOWER write-id; a
     * later upsert (higher write-id) reinserts the key. `df` must carry the
     * join ids and [[WRITE_ID]]. */
-  private def applyTombstones(df: DataFrame, tombs: Option[DataFrame]): DataFrame =
+  private def applyTombstones(df: DataFrame, tombs: Option[DataFrame], sh: Shape): DataFrame =
     tombs.fold(df) { t =>
-      df.join(t, joinIdCols, "left")
+      df.join(t, sh.joinIdCols, "left")
         .filter(col(TOMB_V).isNull || col(WRITE_ID) > col(TOMB_V))
         .drop(TOMB_V)
     }
 
   /** Contested identities of a MoR read: every data-log key plus every
     * tombstoned key (their base rows must enter the merge to be killed). */
-  private def contestedLogKeys(logs: DataFrame, tombs: Option[DataFrame]): DataFrame = {
-    val lk = logs.select(joinIdCols.map(col): _*)
-    tombs.fold(lk)(t => lk.unionByName(t.select(joinIdCols.map(col): _*))).distinct()
+  private def contestedLogKeys(logs: DataFrame, tombs: Option[DataFrame], sh: Shape): DataFrame = {
+    val lk = logs.select(sh.joinIdCols.map(col): _*)
+    tombs.fold(lk)(t => lk.unionByName(t.select(sh.joinIdCols.map(col): _*))).distinct()
   }
 
-  private def ordered(df: DataFrame, asOf: Option[Long] = None): DataFrame = {
-    val cols = META_COLS.map(col) ++ schemaAt(asOf).fieldNames.map(col)
-    df.select(cols: _*)
-  }
+  private def ordered(df: DataFrame, sh: Shape): DataFrame =
+    df.select(META_COLS.map(col) ++ sh.schema.fieldNames.map(col): _*)
+
+  private def readOrdered(actions: Seq[FileAction], sh: Shape): DataFrame =
+    ordered(readFiles(actions, sh), sh)
 
   /** Read a set of live files as one pruned, partition-aware scan. The
     * data schema is passed EXPLICITLY (no footer inference): files written
@@ -663,10 +624,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * right root) and the scans union. `relFile = true` attaches the
     * `_rel_file` column — the action-path-compatible identity the
     * touched-file detection passes join on — computed correctly per group. */
-  private def readFiles(actions: Seq[FileAction], keepWriteId: Boolean = false,
-      asOf: Option[Long] = None, relFile: Boolean = false,
-      keepPos: Boolean = false): DataFrame = {
-    val dataSchema = schemaAt(asOf)
+  private def readFiles(actions: Seq[FileAction], sh: Shape, keepWriteId: Boolean = false,
+      relFile: Boolean = false, keepPos: Boolean = false): DataFrame = {
+    val dataSchema = sh.schema
     if (actions.isEmpty) {
       val full = StructType(META_SCHEMA.fields ++ dataSchema.fields ++
         (if (keepWriteId) Seq(StructField(WRITE_ID, LongType)) else Nil) ++
@@ -678,7 +638,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // the write-id dir col are matched by name against the dir structure.
     // Data fields are requested under their PHYSICAL names (column
     // mapping) and aliased back to logical after the scan.
-    val cmap = specAt(asOf).columnMap
+    val cmap = sh.spec.columnMap
     val readSchema = StructType(
       META_SCHEMA.fields.filterNot(_.name == "_file_name") ++
         dataSchema.fields.map(f => f.copy(name = cmap.getOrElse(f.name, f.name))) ++
@@ -720,7 +680,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // column — genuine nulls included — are untouched. Zero overhead when
     // no existence default is declared (every absent-set is empty).
     val exDefaults: Map[String, String] = {
-      val ed = specAt(asOf).existenceDefaults
+      val ed = sh.spec.existenceDefaults
       if (ed.isEmpty) Map.empty
       else ed.filter { case (c, _) => dataSchema.fieldNames.contains(c) }
     }
@@ -825,22 +785,23 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     require(conformed.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every incoming row must match the predicate")
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     writeCommit("overwriteWhere", txn = txn, identityHigh = idHighs) { (writeId, commitTime) =>
-      val touched = readFiles(live, relFile = true)
+      val touched = readFiles(live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
       val batch = stampMeta(dedupBatch(conformed), commitTime)
       val kept = if (touched.isEmpty) Seq.empty else {
         val touchedSet = touched.toSet
         // surviving rows of touched files (cond NULL = survives, like DELETE)
-        val rows = readFiles(live.filter(a => touchedSet.contains(a.path)))
+        val rows = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
           .filter(!coalesce(cond, lit(false)))
           .drop("_file_name")
         // keyed-uniqueness guard (see scaladoc): an incoming key surviving
         // outside the predicate in a touched file would duplicate
-        val dup = withJoinIds(rows)
-          .join(withJoinIds(batch).select(joinIdCols.map(col): _*).distinct(),
-            joinIdCols, "left_semi")
+        val dup = withJoinIds(rows, sh)
+          .join(withJoinIds(batch, sh).select(sh.joinIdCols.map(col): _*).distinct(),
+            sh.joinIdCols, "left_semi")
         require(dup.isEmpty,
           "replaceWhere: an incoming record key also has rows NOT matching " +
             "the predicate — a key may not move across the replace boundary")
@@ -910,7 +871,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val fromMeta = cur.flatMap(_.partitionValue)
     val fromScan =
       if (old.isEmpty) Seq.empty
-      else readFiles(old).select(col(p).cast(StringType)).distinct()
+      else readFiles(old, shapeAt(None)).select(col(p).cast(StringType)).distinct()
         .collect().toSeq.flatMap(r => Option(r.getString(0)))
     (fromMeta ++ fromScan).distinct.sorted
   }
@@ -982,8 +943,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       idHighs: Map[String, Long] = Map.empty,
       expectedVersion: Option[Long] = None,
       txnMany: Map[String, Long] = Map.empty): LakeTable = {
-    val live = dbgT("cow-liveFiles")(liveFiles(None))
-    val candidates = dbgT(s"cow-pruneCandidates-n=${live.size}")(pruneCandidates(live, incoming))
+    val candidates = pruneCandidates(liveFiles(None), incoming)
+    val sh = shapeAt(None)
     // data columns of the batch, captured BEFORE stampMeta adds the meta
     // columns: the folded within-batch dedup hashes exactly these, so it
     // picks the same winner the old standalone dedupBatch did
@@ -997,11 +958,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       val (touchedPaths, rewriteSet) =
         if (candidates.isEmpty) (Seq.empty[String], inStamped)
         else {
-          val cand = withJoinIds(readFiles(candidates, keepWriteId = true, relFile = true))
-          val touched = dbgT(s"cow-touchedDetect-n=${candidates.size}")(cand
-            .join(withJoinIds(incoming).select(joinIdCols.map(col): _*).distinct(),
-              joinIdCols, "left_semi")
-            .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq)
+          val cand = withJoinIds(readFiles(candidates, sh, keepWriteId = true, relFile = true), sh)
+          val touched = cand
+            .join(withJoinIds(incoming, sh).select(sh.joinIdCols.map(col): _*).distinct(),
+              sh.joinIdCols, "left_semi")
+            .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
           if (touched.isEmpty) (touched, inStamped)
           else {
             // re-scan ONLY the touched files (the detection scan above is
@@ -1010,7 +971,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             // an N-ary expression with the touched-file count
             val touchedSet = touched.toSet
             val affected = readFiles(candidates.filter(a => touchedSet.contains(a.path)),
-                keepWriteId = true)
+                sh, keepWriteId = true)
               .withColumn(RANK, col(WRITE_ID))
               .drop(WRITE_ID, "_file_name")
             (touched, affected)
@@ -1021,7 +982,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           // all inserts (rewriteSet == inStamped): the within-batch dedup
           // runs standalone — greatest (precombine, full-row hash), the
           // same winner the old pre-dedup chose
-          dedupLatest(rewriteSet, idCols, spec.precombine, batchHash)
+          dedupLatest(rewriteSet, sh.idCols, sh.spec.precombine, batchHash)
         else {
           // contested split: rows rewritten only because they share a FILE
           // with a touched key pass through without entering the dedup
@@ -1034,12 +995,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           // One shuffle instead of two, and no persisted intermediate.
           // allowMissingColumns: under additive schema evolution the old
           // rows take nulls for the new columns.
-          val inKeys = withJoinIds(incoming).select(joinIdCols.map(col): _*).distinct()
-          val rewriteIds = withJoinIds(rewriteSet)
-          val passThrough = rewriteIds.join(inKeys, joinIdCols, "left_anti")
-          val contested = rewriteIds.join(inKeys, joinIdCols, "left_semi")
-            .unionByName(withJoinIds(inStamped), allowMissingColumns = true)
-          dedupLatest(contested, idCols, spec.precombine,
+          val inKeys = withJoinIds(incoming, sh).select(sh.joinIdCols.map(col): _*).distinct()
+          val rewriteIds = withJoinIds(rewriteSet, sh)
+          val passThrough = rewriteIds.join(inKeys, sh.joinIdCols, "left_anti")
+          val contested = rewriteIds.join(inKeys, sh.joinIdCols, "left_semi")
+            .unionByName(withJoinIds(inStamped, sh), allowMissingColumns = true)
+          dedupLatest(contested, sh.idCols, sh.spec.precombine,
             struct(col(RANK), batchHash))
             .unionByName(passThrough, allowMissingColumns = true)
             .drop(PID)
@@ -1054,6 +1015,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       copyFiles: Seq[String] = Seq.empty,
       idHighs: Map[String, Long] = Map.empty): LakeTable = {
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     writeCommit("upsert", newSchema = evolved, txn = txn,
       copyFiles = copyFiles, identityHigh = idHighs) { (writeId, commitTime) =>
       // within-batch dedup happens HERE (the incoming frame is raw): its
@@ -1068,10 +1030,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // twice (anti+semi joins would scan the live key column twice).
         // The scan covers only stats-candidate files: a key outside every
         // file's [min,max] range cannot be existing.
-        val existingKeys = withJoinIds(readFiles(pruneCandidates(live, incoming)))
-          .select(joinIdCols.map(col): _*).distinct()
+        val existingKeys = withJoinIds(readFiles(pruneCandidates(live, incoming), sh), sh)
+          .select(sh.joinIdCols.map(col): _*).distinct()
           .withColumn("_graft_exists", lit(true))
-        val tagged = withJoinIds(stamped).join(existingKeys, joinIdCols, "left")
+        val tagged = withJoinIds(stamped, sh).join(existingKeys, sh.joinIdCols, "left")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val newRows = tagged.filter(col("_graft_exists").isNull)
@@ -1156,9 +1118,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // (same guard optimize() uses) makes the rewrite well-defined.
     if (spec.mor && liveFiles(None).exists(_.log)) compact()
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     writeCommit("delete") { (writeId, _) =>
       // detection pass: column-pruned to cond's columns + the file name
-      val touched = readFiles(live, relFile = true)
+      val touched = readFiles(live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
       if (touched.isEmpty) Seq.empty
@@ -1166,7 +1129,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // rewrite pass: re-scan only the touched files (no literal isin —
         // the plan stays O(1) in the touched-file count)
         val touchedSet = touched.toSet
-        val kept = readFiles(live.filter(a => touchedSet.contains(a.path)))
+        val kept = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
           .filter(!coalesce(cond, lit(false)))
           .drop("_file_name")
         Seq(writeFiles(kept, writeId, log = false).copy(remove = touched))
@@ -1190,11 +1153,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   def deleteVectors(cond: Column): LakeTable = retrying {
     require(!spec.mor, "MoR deletes land as tombstone logs; deletion vectors are the CoW analog")
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     writeCommit("delete") { (writeId, _) =>
       val dvRel = s"$DV_DIR/${WRITE_ID}=$writeId"
       // detection scans DV-filtered rows: already-deleted positions can't
       // re-match, so the new sidecar unions cleanly with the old ones
-      val matched = readFiles(live, relFile = true, keepPos = true)
+      val matched = readFiles(live, sh, relFile = true, keepPos = true)
         .filter(cond)
         .select(col(REL_FILE).as("file"), col(DV_POS).as("pos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1249,7 +1213,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       // readFiles applies the DVs at scan time: what it returns IS the
       // purged content; meta columns ride along so rows keep their
       // original commit identity
-      val rows = readFiles(dvd).drop("_file_name")
+      val rows = readFiles(dvd, shapeAt(None)).drop("_file_name")
       Seq(writeFiles(rows, writeId, log = false).copy(remove = dvd.map(_.path)))
     }
   }
@@ -1275,15 +1239,16 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
     if (spec.mor && liveFiles(None).exists(_.log)) compact() // see delete()
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     writeCommit("update") { (writeId, commitTime) =>
-      val touched = readFiles(live, relFile = true)
+      val touched = readFiles(live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
       if (touched.isEmpty) Seq.empty
       else {
         val touchedSet = touched.toSet
         val hit = coalesce(cond, lit(false))
-        val base = readFiles(live.filter(a => touchedSet.contains(a.path)))
+        val base = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
         // ONE projection against the PRE-update row: the condition and
         // every assignment RHS see original values (standard UPDATE
         // semantics — `SET a = b, b = a` swaps; sequential withColumn
@@ -1312,44 +1277,41 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
   }
 
+  /** Record identity of a caller-supplied key frame: (key, partition) when
+    * the table is partitioned AND the frame carries the partition column —
+    * then only the matched partition's row dies; a bare key set keeps the
+    * historical global semantics (the key dies in every partition), as a
+    * shape whose identity has no partition. */
+  private def keyShape(keys: DataFrame, sh: Shape): Shape =
+    if (sh.spec.partition.exists(keys.columns.contains)) sh
+    else sh.copy(spec = sh.spec.copy(partition = None))
+
   /** Row-level delete by KEY SET (the `WHEN MATCHED … THEN DELETE` MERGE
     * path): stats-prune candidate files against the key range, narrow to
     * files actually holding a doomed key via a semi-join, rewrite only
     * those with an anti-join — no driver-side key list, no literal `isin`,
     * so the plan is O(1) in both key count and file count. */
-  /** Record identity of a caller-supplied key frame: (key, partition) when
-    * the table is partitioned AND the frame carries the partition column —
-    * then only the matched partition's row dies; a bare key set keeps the
-    * historical global semantics (the key dies in every partition). */
-  private case class KeyIdentity(idC: Seq[String], jc: Seq[String],
-      ids: DataFrame => DataFrame)
-  private def keyIdentity(keys: DataFrame): KeyIdentity = {
-    val byPartition = spec.partition.exists(keys.columns.contains)
-    KeyIdentity(
-      if (byPartition) idCols else Seq(spec.key),
-      if (byPartition) joinIdCols else Seq(spec.key),
-      df => if (byPartition) withJoinIds(df) else df)
-  }
-
   def deleteKeys(keys: DataFrame): LakeTable =
     if (spec.mor) deleteKeysMor(keys) else retrying {
     val live = liveFiles(None)
+    val sh = shapeAt(None)
     // keeping the raw partition column in `k` also lets pruneCandidates
-    // partition-prune (see keyIdentity for the semantics)
-    val KeyIdentity(idC, jc, ids) = keyIdentity(keys)
-    val k = ids(keys.select(idC.map(col): _*)).distinct()
+    // partition-prune (see keyShape for the semantics)
+    val ks = keyShape(keys, sh)
+    val k = withJoinIds(keys.select(ks.idCols.map(col): _*), ks).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       writeCommit("delete") { (writeId, _) =>
         val candidates = pruneCandidates(live, k)
-        val touched = ids(readFiles(candidates, relFile = true))
-          .join(k, jc, "left_semi")
+        val touched = withJoinIds(readFiles(candidates, sh, relFile = true), ks)
+          .join(k, ks.joinIdCols, "left_semi")
           .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
         if (touched.isEmpty) Seq.empty
         else {
           val touchedSet = touched.toSet
-          val kept = ids(readFiles(candidates.filter(a => touchedSet.contains(a.path))))
-            .join(k, jc, "left_anti")
+          val kept = withJoinIds(
+              readFiles(candidates.filter(a => touchedSet.contains(a.path)), sh), ks)
+            .join(k, ks.joinIdCols, "left_anti")
             .drop(PID)
             .drop("_file_name")
           Seq(writeFiles(kept, writeId, log = false).copy(remove = touched))
@@ -1369,18 +1331,19 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * compaction folds the tombstones away — ordinary MoR staleness. */
   private def deleteKeysMor(keys: DataFrame): LakeTable = retrying {
     val live = liveFiles(None)
-    val KeyIdentity(idC, jc, ids) = keyIdentity(keys)
-    val k = ids(keys.select(idC.map(col): _*)).distinct()
+    val sh = shapeAt(None)
+    val ks = keyShape(keys, sh)
+    val k = withJoinIds(keys.select(ks.idCols.map(col): _*), ks).distinct()
     writeCommit("delete") { (writeId, commitTime) =>
       // tombstone only keys that exist (stray keys would bloat the logs);
       // the existence probe is a key-column-pruned scan of stats-candidates.
       // The probe must see the full identity: a bare key set still needs
       // the live rows' partition values on the tombstone rows.
-      val existing = withJoinIds(readFiles(pruneCandidates(live, k)))
-        .join(k.select(jc.map(col): _*), jc, "left_semi")
-        .select(idCols.map(col): _*).distinct()
-      val row = schema.fields.map { f =>
-        if (idCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+      val existing = withJoinIds(readFiles(pruneCandidates(live, k), sh), sh)
+        .join(k.select(ks.joinIdCols.map(col): _*), ks.joinIdCols, "left_semi")
+        .select(sh.idCols.map(col): _*).distinct()
+      val row = sh.schema.fields.map { f =>
+        if (sh.idCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
       val doomed = stampMeta(existing.select(row.toSeq: _*), commitTime)
@@ -1407,17 +1370,18 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   private def mergedRewrite(live: Seq[FileAction]): DataFrame = {
     val (logActions, baseActions) = live.partition(_.log)
     val (tombActions, dataLogs) = logActions.partition(_.tombstone)
-    val base = withJoinIds(readFiles(baseActions, keepWriteId = true))
-    val logs = withJoinIds(readFiles(dataLogs, keepWriteId = true))
-    val tombs = tombMax(tombActions)
-    val logKeys = contestedLogKeys(logs, tombs)
-    val dupBaseKeys = base.groupBy(joinIdCols.map(col): _*).count()
-      .filter(col("count") > 1).select(joinIdCols.map(col): _*)
+    val sh = shapeAt(None)
+    val base = withJoinIds(readFiles(baseActions, sh, keepWriteId = true), sh)
+    val logs = withJoinIds(readFiles(dataLogs, sh, keepWriteId = true), sh)
+    val tombs = tombMax(tombActions, sh)
+    val logKeys = contestedLogKeys(logs, tombs, sh)
+    val dupBaseKeys = base.groupBy(sh.joinIdCols.map(col): _*).count()
+      .filter(col("count") > 1).select(sh.joinIdCols.map(col): _*)
     val contestedKeys = logKeys.union(dupBaseKeys).distinct()
-    val passThrough = base.join(contestedKeys, joinIdCols, "left_anti")
+    val passThrough = base.join(contestedKeys, sh.joinIdCols, "left_anti")
     val contested = applyTombstones(
-      base.unionByName(logs).join(contestedKeys, joinIdCols, "left_semi"), tombs)
-    dedupLatest(contested, idCols, spec.precombine, col(WRITE_ID))
+      base.unionByName(logs).join(contestedKeys, sh.joinIdCols, "left_semi"), tombs, sh)
+    dedupLatest(contested, sh.idCols, sh.spec.precombine, col(WRITE_ID))
       .unionByName(passThrough)
       .drop(WRITE_ID, "_file_name", PID)
   }
@@ -1540,7 +1504,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       }
     if (small.size < 2) return this // nothing to concatenate
     writeCommit("optimize") { (writeId, _) =>
-      val rows = readFiles(small).drop("_file_name")
+      val rows = readFiles(small, shapeAt(None)).drop("_file_name")
         .coalesce(math.max(1, small.size / 8))
       Seq(writeFiles(rows, writeId, log = false)
         .copy(remove = small.map(_.path)))
@@ -1552,8 +1516,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * latest-wins deduped. The pull reads only the files those commits
     * added (no full-table scan), which is the whole point of incremental
     * consumption at scale. */
-  def incremental(sinceVersion: Long, asOf: Option[Long] = None): DataFrame = {
-    val upTo = asOf.getOrElse(latestVersion)
+  def incremental(sinceVersion: Long, asOf: Option[Long] = None): DataFrame =
+    postImages(window(sinceVersion, asOf))
+
+  private def postImages(w: CommitWindow): DataFrame = {
+    val sh = w.shape
     // PHYSICAL-ONLY window (a compaction/zorder landing as its own
     // streaming micro-batch): every added file carries only pre-existing
     // rows, so the post-image set is empty by metadata proof. Without
@@ -1563,32 +1530,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // forbids at 100 TB. Mixed windows (catch-up spans) keep the
     // commit-time filter path: their genuine post-images may live only
     // inside the rewrite's files.
-    if (windowPhysicalOnly(sinceVersion, upTo))
-      return ordered(readFiles(Nil, asOf = Some(upTo)), Some(upTo))
-    val cs = commits // one log read for the window files + sinceTime
-    val added = cs
-      .filter(c => c.version > sinceVersion && c.version <= upTo)
-      .flatMap(_.add)
+    if (w.physicalOnly) return readOrdered(Nil, sh)
     // a file added then removed by a later included commit has been
     // rewritten — its surviving rows live in the newer file. Tombstone
     // files carry no post-images (MoR deletes are not surfaced, like
     // Hudi's incremental view) but LIVE tombstones must still suppress
     // post-images of rows they killed.
-    val live = liveFiles(Some(upTo))
+    val live = w.liveUpTo
     val livePaths = live.map(_.path).toSet
-    val files = added.filter(a => livePaths.contains(a.path) && !a.tombstone)
-    val df = withJoinIds(readFiles(files, keepWriteId = true, asOf = Some(upTo)))
-    val alive = applyTombstones(df, tombMax(live.filter(_.tombstone), Some(upTo)))
-      .drop(PID)
-    val deduped = dedupLatest(alive, idCols, spec.precombine, col(WRITE_ID)).drop(WRITE_ID)
+    val files = w.added.filter(a => livePaths.contains(a.path) && !a.tombstone)
+    val df = withJoinIds(readFiles(files, sh, keepWriteId = true), sh)
+    val alive = applyTombstones(df, tombMax(live.filter(_.tombstone), sh), sh).drop(PID)
+    val deduped = dedupLatest(alive, sh.idCols, sh.spec.precombine, col(WRITE_ID)).drop(WRITE_ID)
     // rewritten files carry old rows too — keep only rows stamped by the
     // included commits
-    val sinceTime = cs.find(_.version == sinceVersion).map(_.commitTime)
-    val recent = sinceTime match {
-      case Some(ct) => deduped.filter(col("_commit_time") > ct)
-      case None => deduped
-    }
-    ordered(recent, Some(upTo))
+    val recent = w.sinceTime.fold(deduped)(ct => deduped.filter(col("_commit_time") > ct))
+    ordered(recent, sh)
   }
 
   /** Delta change-data-feed-style read: every change in `(since, asOf]`
@@ -1621,102 +1578,98 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * files, which a CoW update necessarily rewrote. */
   def changes(since: Long, asOf: Option[Long] = None,
       includePreimages: Boolean = false): DataFrame = {
-    val upTo = asOf.getOrElse(latestVersion)
+    val w = window(since, asOf)
+    val sh = w.shape
+    val post = postImages(w)
     // physical-only window: no inserts, no updates, no deletes — empty
     // by metadata proof, skipping the rewritten/now key scans entirely
-    // (see [[incremental]]; a compaction otherwise costs two full reads
-    // here: the removed files AND the added files, to prove no change)
-    if (windowPhysicalOnly(since, upTo)) {
-      val empty = incremental(since, Some(upTo))
-      return empty.withColumn("_change_type", lit(""))
-        .filter(lit(false))
-    }
-    val post = incremental(since, Some(upTo))
-    val cs = commits // one log read for window + sinceTime
-    val window = cs.filter(c => c.version > since && c.version <= upTo)
-    val sinceTime = cs.find(_.version == since).map(_.commitTime)
+    // (a compaction otherwise costs two full reads here: the removed
+    // files AND the added files, to prove no change)
+    if (w.physicalOnly) return post.withColumn("_change_type", lit("")).filter(lit(false))
+    val joinIds = sh.joinIdCols.map(col)
     // record identity is (key, partition), same as every write path — a
     // null-safe PID join id plus the raw columns (delete rows carry both)
     def ids(df: DataFrame): DataFrame =
-      withJoinIds(df).select((idCols ++ spec.partition.map(_ => PID)).map(col): _*)
-    val removedPaths = window.flatMap(_.remove).toSet
-    val rewrittenRows = readFiles(
-      liveFiles(Some(since)).filter(a => removedPaths.contains(a.path)),
-      asOf = Some(since))
+      withJoinIds(df, sh).select((sh.idCols ++ sh.spec.partition.map(_ => PID)).map(col): _*)
+    val rewrittenRows = readFiles(w.removedLive, w.sinceShape)
     val rewrittenKeys = ids(rewrittenRows)
     val logKeys = {
-      val logAdded = window.flatMap(_.add).filter(_.log)
-      val fresh = readFiles(window.flatMap(_.add).filterNot(_.log), asOf = Some(upTo))
-        .filter(sinceTime.map(ct => col("_commit_time") > ct).getOrElse(lit(true)))
-      ids(readFiles(logAdded, asOf = Some(upTo)))
-        .join(ids(fresh).select(joinIdCols.map(col): _*), joinIdCols, "left_anti")
+      val fresh = readFiles(w.added.filterNot(_.log), sh)
+        .filter(w.sinceTime.map(ct => col("_commit_time") > ct).getOrElse(lit(true)))
+      ids(readFiles(w.added.filter(_.log), sh))
+        .join(ids(fresh).select(joinIds: _*), sh.joinIdCols, "left_anti")
     }
     val preIds = rewrittenKeys.unionByName(logKeys).distinct()
-    val tagged = withJoinIds(post)
-      .join(preIds.select(joinIdCols.map(col): _*).distinct()
-        .withColumn("_pre", lit(true)), joinIdCols, "left")
+    val tagged = withJoinIds(post, sh)
+      .join(preIds.select(joinIds: _*).distinct()
+        .withColumn("_pre", lit(true)), sh.joinIdCols, "left")
       .withColumn("_change_type",
         when(col("_pre").isNotNull, "update_postimage").otherwise("insert"))
       .drop("_pre", PID)
-    // delete detection, skipped by METADATA PROOF when every window commit
-    // is key-preserving: an upsert rewrites a touched file's FULL row set
-    // (contested keys keep their winner, the rest pass through) and MoR
-    // upserts only append, so no record identity can disappear; physical
-    // reorgs carry rows unchanged. Such a window has zero deletes without
-    // reading the window's added files at all — on an unclustered-churn
-    // upsert that skips a table-sized key scan + distinct + anti-join
-    // (guide §1.1 first-principles: don't compute what is provably empty).
-    // Ops that CAN drop an identity (delete, overwrite*, restore, fsck,
-    // reorg, update — an update may move the partition value, which is part
-    // of the record identity) take the full scan-based path below.
-    val windowKeyPreserving = window.forall(c =>
-      c.operation == "upsert" || LakeTable.physicalOps.contains(c.operation))
+    // delete detection, skipped by METADATA PROOF when the window is
+    // key-preserving ([[CommitWindow.keyPreserving]]): such a window has
+    // zero deletes without reading the window's added files at all — on
+    // an unclustered-churn upsert that skips a table-sized key scan +
+    // distinct + anti-join (guide §1.1 first-principles: don't compute
+    // what is provably empty). Every other window takes the full
+    // scan-based path below.
     val deleted =
-      if (windowKeyPreserving)
-        preIds.select(idCols.map(col): _*).filter(lit(false))
+      if (w.keyPreserving)
+        preIds.select(sh.idCols.map(col): _*).filter(lit(false))
           .withColumn("_change_type", lit("delete"))
       else {
-        val liveNow = liveFiles(Some(upTo))
+        val liveNow = w.liveUpTo
         val liveNowPaths = liveNow.map(_.path).toSet
         // "still alive at asOf": rows of the window's added live files minus
         // tombstone files, with tombstone-killed rows filtered — a key whose
         // only window trace is its tombstone is NOT alive
         val nowIds = applyTombstones(
             withJoinIds(readFiles(
-              window.flatMap(_.add).filter(a => liveNowPaths.contains(a.path) && !a.tombstone),
-              keepWriteId = true, asOf = Some(upTo))),
-            tombMax(liveNow.filter(_.tombstone), Some(upTo)))
-          .select(joinIdCols.map(col): _*).distinct()
-        preIds.join(nowIds, joinIdCols, "left_anti")
-          .select(idCols.map(col): _*).distinct()
+              w.added.filter(a => liveNowPaths.contains(a.path) && !a.tombstone),
+              sh, keepWriteId = true), sh),
+            tombMax(liveNow.filter(_.tombstone), sh), sh)
+          .select(joinIds: _*).distinct()
+        preIds.join(nowIds, sh.joinIdCols, "left_anti")
+          .select(sh.idCols.map(col): _*).distinct()
           .withColumn("_change_type", lit("delete"))
       }
     val base = tagged.unionByName(deleted, allowMissingColumns = true)
     if (!includePreimages) base
     else {
-      require(!spec.mor,
+      require(!sh.spec.mor,
         "update_preimage needs a CoW table: a MoR update leaves the old " +
           "value in an un-removed base file — compact() first")
       // updated = has a postimage AND existed before. NOT preIds ∩ nowIds:
       // a CoW rewrite carries unchanged rows into the new file, so they sit
       // in both preIds (removed file) and nowIds (added file) without being
       // updates — only the commit-time-filtered post rows are real changes.
-      val updatedIds = withJoinIds(post).select(joinIdCols.map(col): _*)
+      val updatedIds = withJoinIds(post, sh).select(joinIds: _*)
         .distinct()
-        .join(preIds.select(joinIdCols.map(col): _*).distinct(),
-          joinIdCols, "left_semi")
-      val preimages = withJoinIds(rewrittenRows)
-        .join(updatedIds.select(joinIdCols.map(col): _*).distinct(),
-          joinIdCols, "left_semi")
+        .join(preIds.select(joinIds: _*).distinct(), sh.joinIdCols, "left_semi")
+      val preimages = withJoinIds(rewrittenRows, sh)
+        .join(updatedIds.select(joinIds: _*).distinct(), sh.joinIdCols, "left_semi")
         .withColumn("_change_type", lit("update_preimage"))
         .drop(PID)
       base.unionByName(preimages, allowMissingColumns = true)
     }
   }
 
-  /** Net row delta of a CoW table over `(since, upTo]`, as two DataFrames:
-    * `plus` = rows of files ADDED in the window and still live at `upTo`,
-    * `minus` = rows of files live at `since` and REMOVED by a window commit.
+  /** Pure metadata commit: advance idempotent-transaction watermarks
+    * (`txnMany`) without touching a single data file. [[MaterializedView]]
+    * publishes its refresh cursor this way when every member's pending
+    * window is [[CommitWindow.physicalOnly]] — the delta is empty by
+    * metadata proof, so the refresh costs zero Spark jobs and zero file
+    * reads. OCC-pinned like any state publish; the multi-watermark no-op
+    * rule in [[writeCommit]] applies unchanged. */
+  private[lake] def bumpTxn(expectedVersion: Long,
+      txnMany: Map[String, Long]): LakeTable =
+    writeCommit("cursor_bump", expectedVersion = Some(expectedVersion),
+      txnMany = txnMany) { (_, _) => Seq.empty }
+
+  /** Net row delta of a CoW table over the window `(since, upTo]`, as two
+    * DataFrames: `plus` = rows of files ADDED in the window and still live
+    * at `upTo`, `minus` = rows of files live at `since` and REMOVED by a
+    * window commit.
     *
     * A copy-on-write rewrite carries every surviving row of the old file
     * into the new one, so rewritten-but-unchanged rows appear in BOTH sides
@@ -1725,47 +1678,24 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * proportional to window churn, not table size. This is the engine of
     * [[MaterializedView.refresh]]. Both sides read with the `upTo` schema,
     * so mid-window additive evolution surfaces nulls instead of breaking.
+    * A [[CommitWindow.physicalOnly]] window answers with empty frames
+    * without reading a single data file.
     *
     * MoR tables route through [[windowDeltaMor]]: log rows supersede base
     * rows without removing their file, which breaks the file-level
     * cancellation — the MoR delta instead diffs the two MERGED snapshots
     * restricted to the window's touched record identities. */
-  /** Metadata-only: is every commit in `(since, upTo]` a physical
-    * reorganization (compact / optimize / zorder) — a rewrite that carries
-    * rows unchanged? Such a window's true row delta is EMPTY by
-    * construction, so [[windowDelta]] answers it without reading a single
-    * data file: at a production compaction cadence, registered views must
-    * not pay even a netting shuffle for windows that moved only bytes. */
-  private[lake] def windowPhysicalOnly(since: Long, upTo: Long): Boolean = {
-    val w = commits.filter(c => c.version > since && c.version <= upTo)
-    w.nonEmpty && w.forall(c => LakeTable.physicalOps.contains(c.operation))
-  }
-
-  /** Pure metadata commit: advance idempotent-transaction watermarks
-    * (`txnMany`) without touching a single data file. [[MaterializedView]]
-    * publishes its refresh cursor this way when every member's pending
-    * window is [[windowPhysicalOnly]] — the delta is empty by metadata
-    * proof, so the refresh costs zero Spark jobs and zero file reads.
-    * OCC-pinned like any state publish; the multi-watermark no-op rule in
-    * [[writeCommit]] applies unchanged. */
-  private[lake] def bumpTxn(expectedVersion: Long,
-      txnMany: Map[String, Long]): LakeTable =
-    writeCommit("cursor_bump", expectedVersion = Some(expectedVersion),
-      txnMany = txnMany) { (_, _) => Seq.empty }
-
-  private[lake] def windowDelta(since: Long, upTo: Long): (DataFrame, DataFrame) = {
-    if (windowPhysicalOnly(since, upTo)) {
-      val empty = readFiles(Nil, asOf = Some(upTo))
-      return (empty, empty)
+  private[graft] def windowDelta(w: CommitWindow): (DataFrame, DataFrame) = {
+    val sh = w.shape
+    if (w.physicalOnly || (w.added.isEmpty && w.removedLive.isEmpty)) {
+      val empty = readFiles(Nil, sh)
+      (empty, empty)
+    } else if (sh.spec.mor) windowDeltaMor(w)
+    else {
+      val liveUp = w.liveUpTo.map(_.path).toSet
+      (readFiles(w.added.filter(a => liveUp.contains(a.path) && !a.log && !a.tombstone), sh),
+        readFiles(w.removedLive, sh))
     }
-    if (spec.mor) return windowDeltaMor(since, upTo)
-    val window = commits.filter(c => c.version > since && c.version <= upTo)
-    val liveUp = liveFiles(Some(upTo)).map(_.path).toSet
-    val plusActs = window.flatMap(_.add)
-      .filter(a => liveUp.contains(a.path) && !a.log && !a.tombstone)
-    val removedPaths = window.flatMap(_.remove).toSet
-    val minusActs = liveFiles(Some(since)).filter(a => removedPaths.contains(a.path))
-    (readFiles(plusActs, asOf = Some(upTo)), readFiles(minusActs, asOf = Some(upTo)))
   }
 
   /** MoR net row delta over `(since, upTo]`, as (plus, minus) rows of the
@@ -1788,34 +1718,26 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * key (its rewrite carries all rows), degrading to two full merged
     * scans whose carried rows cancel — the same cost CoW pays for a
     * full-rewrite window. */
-  private def windowDeltaMor(since: Long, upTo: Long): (DataFrame, DataFrame) = {
-    val window = commits.filter(c => c.version > since && c.version <= upTo)
-    val addActs = window.flatMap(_.add)
-    val removedPaths = window.flatMap(_.remove).toSet
-    val removedActs = liveFiles(Some(since)).filter(a => removedPaths.contains(a.path))
-    val touchedActs = (addActs ++ removedActs)
-      .groupBy(_.path).map(_._2.head).toSeq
-    if (touchedActs.isEmpty) {
-      val empty = readFiles(Nil, asOf = Some(upTo))
-      return (empty, empty)
-    }
+  private def windowDeltaMor(w: CommitWindow): (DataFrame, DataFrame) = {
+    val sh = w.shape
+    val touchedActs = (w.added ++ w.removedLive).groupBy(_.path).map(_._2.head).toSeq
     // recomputed per side (window files are churn-sized); not cached — a
     // lazily-consumed delta must not leak a persisted plan
-    val touchedKeys = withJoinIds(readFiles(touchedActs, asOf = Some(upTo)))
-      .select(joinIdCols.map(col): _*).distinct()
+    val touchedKeys = withJoinIds(readFiles(touchedActs, sh), sh)
+      .select(sh.joinIdCols.map(col): _*).distinct()
     // bounded key collect (an optimization seam only — the semi-join
     // below is what bounds the ROWS): within the cap, both snapshot
     // reads stats/bloom/bucket-skip base files against the key set
-    val sample = touchedKeys.select(col(spec.key)).distinct()
+    val sample = touchedKeys.select(col(sh.spec.key)).distinct()
       .limit(LakeTable.MOR_DELTA_KEY_CAP + 1).collect().map(_.get(0))
     val baseFilters =
       if (sample.length > LakeTable.MOR_DELTA_KEY_CAP || sample.contains(null)) Nil
-      else Seq(org.apache.spark.sql.sources.In(spec.key, sample))
-    def side(v: Long): DataFrame =
-      withJoinIds(realtimePruned(Some(v), baseFilters))
-        .join(touchedKeys, joinIdCols, "left_semi")
+      else Seq(org.apache.spark.sql.sources.In(sh.spec.key, sample))
+    def side(live: Seq[FileAction], at: Shape): DataFrame =
+      withJoinIds(realtimePruned(live, at, baseFilters, identity), sh)
+        .join(touchedKeys, sh.joinIdCols, "left_semi")
         .drop(PID)
-    (side(upTo), side(since))
+    (side(w.liveUpTo, sh), side(w.liveSince, w.sinceShape))
   }
 
   /** Delta `GENERATE symlink_format_manifest` analog: write text manifests
@@ -2574,7 +2496,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       if (live.isEmpty) None
       else {
         val src = if (live.exists(_.log)) realtime()
-          else readFiles(pruneCandidates(live, keys))
+          else readFiles(pruneCandidates(live, keys), shapeAt(None))
         val uniq = src.select((spec.key +: ids.keys.toSeq).map(col): _*)
           .join(keys, Seq(spec.key), "left_semi")
           .groupBy(spec.key)
@@ -2750,9 +2672,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * broken by a deterministic row hash so re-runs are stable. NULL record
     * keys fail loudly (Hudi errors too) — the group-by would otherwise
     * silently collapse all null-key rows into one. */
-  private def dedupBatch(df: DataFrame): DataFrame =
-    dedupLatest(checkedKeys(df), idCols, spec.precombine,
+  private def dedupBatch(df: DataFrame): DataFrame = {
+    val sh = shapeAt(None)
+    dedupLatest(checkedKeys(df), sh.idCols, sh.spec.precombine,
       xxhash64(df.columns.map(col): _*))
+  }
 
   /** The loud null-record-key guard from [[dedupBatch]], standalone: the
     * upsert paths apply it to the RAW batch (the within-batch dedup is
@@ -3146,11 +3070,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           .sortWithinPartitions(sc.map(col): _*)
     }
     val writer = shuffled.write.mode("errorifexists")
-    dbgT(s"wf-write-id=$writeId") {
-      spec.partition match {
-        case Some(p) => writer.partitionBy(p).parquet(target)
-        case None => writer.parquet(target)
-      }
+    spec.partition match {
+      case Some(p) => writer.partitionBy(p).parquet(target)
+      case None => writer.parquet(target)
     }
     val keyType = schema(spec.key).dataType
     val numericKey = keyType match {
@@ -3170,7 +3092,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     if (files.isEmpty) return WriteResult(Seq.empty, Seq.empty)
     // per-file stats from parquet FOOTERS — driver-side metadata reads, no
     // executor job, instead of re-scanning everything just written
-    val adds = dbgT(s"wf-footerStats-n=${files.size}")(files.map { case (f, len) =>
+    val adds = files.map { case (f, len) =>
       // LAST occurrence — see vacuum(); keeps rel paths consistent with
       // the executor-side substring_index detection
       val rel = f.toString.split("/data/").last
@@ -3185,7 +3107,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       val (mn, mx) = stats(spec.key)
       FileAction(rel, log, rows, mn, mx, numericKey, partVal, tombstone = tombstone,
         colStats = stats - spec.key, bytes = len)
-    })
+    }
     // a fully-empty batch still emits one 0-row part file — don't log it
     val kept0 = adds.filter(_.rows > 0)
     val kept =
@@ -3290,17 +3212,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
 object LakeTable {
   private[lake] val WRITE_ID = "_v"
+  private[lake] val PID = "_graft_pid"
   private[lake] val RANK = "_graft_rank"
-
-  /** Commit operations that rewrite files while carrying every row
-    * unchanged — the merged table content before and after is identical.
-    * Kept deliberately narrow: `restore`/`fsck`/`reorg` also remove files
-    * but CHANGE visible content, so they must never appear here. The
-    * second set is ops that touch no data file at all (pure table
-    * metadata); both leave a window's true row delta empty. */
-  private val physicalOps =
-    Set("compact", "optimize", "zorder", "zorder_incremental",
-      "analyze", "savepoint", "release_savepoint", "setProperties")
 
   /** Value-preserving type widenings ([[LakeTable.widenColumn]]): every
     * value of `from` maps to exactly itself in `to`. */

@@ -116,7 +116,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     * every member cursor is at the member's latest version — or behind it
     * by only PHYSICAL-ONLY commits (compaction / zorder / optimize / pure
     * metadata), whose row delta is empty by metadata proof
-    * ([[LakeTable.windowPhysicalOnly]]). A view must keep serving through
+    * ([[CommitWindow.physicalOnly]]). A view must keep serving through
     * its members' maintenance cadence without waiting for a refresh: at
     * production scale, reorganization is continuous and a gate on exact
     * version equality would blind every registered view most of the time.
@@ -129,7 +129,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     def ok(p: String, c: Long): Boolean = {
       val l = latestOf(p)
       c == l ||
-        (c < l && LakeTable.load(spark, p).windowPhysicalOnly(c, l))
+        (c < l && LakeTable.load(spark, p).window(c, Some(l)).physicalOnly)
     }
     ok(m.basePath, cf) &&
       m.joins.zip(cds).forall { case (j, c) => ok(j.dimPath, c) }
@@ -347,15 +347,6 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
   /** One optimistic refresh attempt: true = up to date (applied here or
     * nothing to do); throws [[CommitConflictException]] when a racer
     * committed to the state table after this attempt's snapshot read. */
-  // debug-only phase timer (GRAFT_MV_PHASES=1): prints wall time of the
-  // refresh's coarse phases — the tool that localizes a scale regression
-  private def dbgT[A](tag: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_MV_PHASES")) body
-    else {
-      val t0 = System.nanoTime(); val r = body
-      println(f"MVPHASE $tag ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-
   private def refreshOnce(): Boolean = {
     val m = meta
     val st = state
@@ -412,6 +403,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
 
     val vState = st.latestVersion
     val (lastV, dimVs) = cursorOf(st, m, vState)
+    // every member's pending window, each from one log listing
+    val baseW = base.window(lastV, Some(upTo))
+    val dimWs = m.joins.indices.map(i => dimTables(i).window(dimVs(i), Some(dimUpTos(i))))
     val stSchema = st.schema
     def stType(c: String): DataType = stSchema(c).dataType
     // schema-aware bare-input classification (see [[inCol]]): a known
@@ -444,11 +438,11 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     locally {
       val keyCols = m.joins.flatMap(j => j.factKeys ++ j.dimKeys)
       val contCols = (need ++ keyCols).distinct
-      val discontinuous = (base +: dimTables).zip(lastV +: dimVs).flatMap {
-        case (tb, cv) => contCols.filter { c =>
-          tb.schema.fieldNames.contains(c) &&
-          tb.schemaAt(Some(cv)).fieldNames.contains(c) &&
-          tb.specAt(Some(cv)).physical(c) != tb.specAt(None).physical(c)
+      val discontinuous = (baseW +: dimWs).flatMap { w =>
+        contCols.filter { c =>
+          w.shape.schema.fieldNames.contains(c) &&
+          w.sinceShape.schema.fieldNames.contains(c) &&
+          w.sinceShape.spec.physical(c) != w.shape.spec.physical(c)
         }
       }.distinct
       if (discontinuous.nonEmpty) throw new IllegalStateException(
@@ -461,14 +455,13 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     // PHYSICAL-ONLY pending windows (the production reorg cadence): every
     // stale member's window carried rows unchanged — compaction, zorder,
     // optimize, pure table metadata — so the delta is empty by METADATA
-    // PROOF (LakeTable.windowPhysicalOnly). Publish a pure cursor bump (a
+    // PROOF (CommitWindow.physicalOnly). Publish a pure cursor bump (a
     // zero-action state commit advancing the txn watermarks) and skip plan
     // construction entirely: a registered view must cost zero jobs and
     // zero file reads to ride out its members' maintenance. Runs AFTER the
     // pre-flights above so schema contract violations still refuse here.
-    if ((upTo <= lastV || base.windowPhysicalOnly(lastV, upTo)) &&
-        m.joins.indices.forall(i => dimUpTos(i) <= dimVs(i) ||
-          dimTables(i).windowPhysicalOnly(dimVs(i), dimUpTos(i)))) {
+    if ((upTo <= lastV || baseW.physicalOnly) &&
+        m.joins.indices.forall(i => dimUpTos(i) <= dimVs(i) || dimWs(i).physicalOnly)) {
       st.bumpTxn(vState, Map(CURSOR_APP -> upTo) ++
         m.joins.indices.map(i => dimCursorApp(i) -> dimUpTos(i)))
       val stNow = state
@@ -559,11 +552,11 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     // rewrite-heavy windows while the signed aggregate already cancels
     // carried pairs for free. The case netting was really for — windows
     // that moved ONLY bytes — is handled upstream by metadata proof
-    // (LakeTable.windowPhysicalOnly: empty delta, cursor-bump refresh,
+    // (CommitWindow.physicalOnly: empty delta, cursor-bump refresh,
     // no repair), which costs nothing at any scale.
-    val contrib: DataFrame = dbgT("contrib-build") {
+    val contrib: DataFrame = {
       if (m.joins.isEmpty) {
-        val (plus, minus) = base.windowDelta(lastV, upTo)
+        val (plus, minus) = base.windowDelta(baseW)
         val proj = need.map(col)
         plus.select(proj: _*).withColumn(SGN, lit(1L))
           .unionByName(minus.select(proj: _*).withColumn(SGN, lit(-1L)))
@@ -577,7 +570,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
         val outCols = (need :+ SGN).map(col)
         val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         if (upTo > lastV) {
-          val (plusF, minusF) = base.windowDelta(lastV, upTo)
+          val (plusF, minusF) = base.windowDelta(baseW)
           val fDelta = plusF.select(fProj: _*).withColumn(SGN, lit(1L))
             .unionByName(minusF.select(fProj: _*).withColumn(SGN, lit(-1L)))
           terms += m.joins.indices.foldLeft(fDelta)(
@@ -586,19 +579,16 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
         lazy val fNew = base.read(Some(upTo)).select(fProj: _*)
         m.joins.indices.foreach { i =>
           if (dimUpTos(i) > dimVs(i)) {
-            val (plusD0, minusD0) = dbgT(s"dim-$i-windowDelta") {
-              dimTables(i).windowDelta(dimVs(i), dimUpTos(i)) }
+            val (plusD0, minusD0) = dimTables(i).windowDelta(dimWs(i))
             val plusD = plusD0.select(dProj(i): _*)
             val minusD = minusD0.select(dProj(i): _*)
             val dDelta = plusD.withColumn(SGN, lit(1L))
               .unionByName(minusD.withColumn(SGN, lit(-1L)))
-            dbgT(s"dim-$i-delta-term") {
-              terms += foldOrder(i).foldLeft(fNew) { (acc, jx) =>
-                joinDim(acc, jx,
-                  if (jx == i) dDelta
-                  else dAt(jx, if (jx < i) dimUpTos(jx) else dimVs(jx)),
-                  forceInner = jx == i)
-              }
+            terms += foldOrder(i).foldLeft(fNew) { (acc, jx) =>
+              joinDim(acc, jx,
+                if (jx == i) dDelta
+                else dAt(jx, if (jx < i) dimUpTos(jx) else dimVs(jx)),
+                forceInner = jx == i)
             }
             if (m.joins(i).outer) {
               // NULL-EXTENSION transition term: left-join content is the
@@ -639,8 +629,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
               // snapshot (the semi-join keeps tuple exactness — the INs
               // are per-column supersets). Over the cap the probes fall
               // back to full key-restricted scans, as everywhere.
-              val touchedTuples = dbgT("outer-touched-collect") {
-                touched.limit(REPAIR_KEY_CAP + 1).collect() }
+              val touchedTuples = touched.limit(REPAIR_KEY_CAP + 1).collect()
               val capped = touchedTuples.length > REPAIR_KEY_CAP
               val touchedFilters: Seq[org.apache.spark.sql.sources.Filter] =
                 if (capped) Nil
@@ -650,16 +639,13 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                   else Some(org.apache.spark.sql.sources.In(dk, vs))
                 }
               def probe(v: Long) = {
-                val liveD = dbgT(s"probe-$v-liveFiles") { dimTables(i).liveFiles(Some(v)) }
+                val liveD = dimTables(i).liveFiles(Some(v))
                 lastNullExtDimScan = Some((liveD.size,
                   math.max(dimTables(i).pruneByFilters(liveD, touchedFilters).size,
                     lastNullExtDimScan.map(_._2).getOrElse(0))))
-                val rw = dbgT(s"probe-$v-readWhere") { dimTables(i).readWhere(touchedFilters, Some(v)) }
-                dbgT(s"probe-$v-join-build") {
-                  rw.select(dks: _*).distinct()
-                    .join(if (capped) touched else localDf(touchedTuples.toSeq),
-                      m.joins(i).dimKeys, "left_semi")
-                }
+                dimTables(i).readWhere(touchedFilters, Some(v)).select(dks: _*).distinct()
+                  .join(if (capped) touched else localDf(touchedTuples.toSeq),
+                    m.joins(i).dimKeys, "left_semi")
               }
               val dimSchema = dimTables(i).schema
               val anc = foldOrder(i).takeWhile(_ != i)
@@ -692,9 +678,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 // the netting proved no key's existence can flip: the
                 // common physical-churn/segment-move refresh — no probes,
                 // no transition terms, zero files on either side
-                record(base.liveFiles(Some(upTo)).size, 0)
+                record(baseW.liveUpTo.size, 0)
                 lastNullExtDimScan = Some((
-                  dimTables(i).liveFiles(Some(dimUpTos(i))).size,
+                  dimWs(i).liveUpTo.size,
                   lastNullExtDimScan.map(_._2).getOrElse(0)))
               } else if (!capped) {
                 // the flip sets are computed DRIVER-side from the two
@@ -735,12 +721,8 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 def keyed(rows: Array[org.apache.spark.sql.Row])
                     : Map[Seq[Any], org.apache.spark.sql.Row] =
                   rows.map(r => r.toSeq.map(normV) -> r).toMap
-                val oldT = dbgT("outer-probe-old") {
-                  val pr = probe(dimVs(i))
-                  dbgT("outer-probe-old-collect") { keyed(pr.collect()) } }
-                val newT = dbgT("outer-probe-new") {
-                  val pr = probe(dimUpTos(i))
-                  dbgT("outer-probe-new-collect") { keyed(pr.collect()) } }
+                val oldT = keyed(probe(dimVs(i)).collect())
+                val newT = keyed(probe(dimUpTos(i)).collect())
                 def term(flips: Iterable[org.apache.spark.sql.Row],
                     sign: Long): DataFrame = {
                   val tuples = flips.toSeq
@@ -748,7 +730,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                     if (tuples.isEmpty) {
                       // nothing flipped (the common refresh): the term is
                       // provably empty — no fact files at all
-                      record(base.liveFiles(Some(upTo)).size, 0)
+                      record(baseW.liveUpTo.size, 0)
                       fNew.where(lit(false))
                     } else {
                       // per-column value projections of the flipped tuples
@@ -776,17 +758,15 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                         }
                       if (anc.nonEmpty && factFilters.isEmpty) fNew // chase capped out
                       else {
-                        val live = base.liveFiles(Some(upTo))
+                        val live = baseW.liveUpTo
                         record(live.size, base.pruneByFilters(live, factFilters).size)
                         base.readWhere(factFilters, Some(upTo)).select(fProj: _*)
                       }
                     }
                   nullExtTerm(source, localDf(tuples), sign)
                 }
-                dbgT("outer-term-gained") {
-                  terms += term((newT -- oldT.keySet).values, -1L) } // 0→1: nulls retract
-                dbgT("outer-term-lost") {
-                  terms += term((oldT -- newT.keySet).values, 1L) } // 1→0: nulls appear
+                terms += term((newT -- oldT.keySet).values, -1L) // 0→1: nulls retract
+                terms += term((oldT -- newT.keySet).values, 1L) // 1→0: nulls appear
               } else {
                 // over the cap: unpruned probes, the diff as an exceptAll
                 // on the live plans, and a full-snapshot term — a churn
@@ -906,14 +886,10 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
       // IN list stays churn-bounded. Over a cap, or for null values, that
       // dim's filter is dropped (pruning is an optimization; the MVKEY
       // semi-join below is what bounds the re-aggregate's ROWS).
-      if (sys.env.contains("GRAFT_MV_PHASES"))
-        dbgT("newrows-plan") { newRows.queryExecution.executedPlan; () }
       val affected =
         if (nonLin.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else dbgT("affected-collect") {
-          newRows.filter(col(GRP_N) > 0 && col(HASM) > 0)
+        else newRows.filter(col(GRP_N) > 0 && col(HASM) > 0)
           .select(dims.map(col): _*).distinct().limit(REPAIR_IN_CAP + 1).collect()
-        }
       val patched =
         if (nonLin.isEmpty || affected.isEmpty) newRows.drop(HASM)
         else {
@@ -990,7 +966,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 case Some(f) => acts => f(acc(acts))
               }
             }
-          val live = base.liveFiles(Some(upTo))
+          val live = baseW.liveUpTo
           lastRepairScan = Some((live.size,
             exprPrune(base.pruneByFilters(live, inFilters)).size))
           val snapBase = base.readWherePruned(inFilters, exprPrune, Some(upTo))
@@ -1031,15 +1007,11 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
       // the publish then plans against a leaf. Fault-tolerance note: a
       // lost block fails this refresh attempt, which is safe — refresh
       // is an idempotent OCC transaction and simply re-runs.
-      val patchedM = dbgT("patched-materialize") {
-        patched.withColumn(MVVER, lit(upTo)).localCheckpoint(true)
-      }
+      val patchedM = patched.withColumn(MVVER, lit(upTo)).localCheckpoint(true)
       try {
-        dbgT("publish") {
-          st.upsertPinned(patchedM, vState,
-            txnMany = Map(CURSOR_APP -> upTo) ++
-              m.joins.indices.map(i => dimCursorApp(i) -> dimUpTos(i)))
-        }
+        st.upsertPinned(patchedM, vState,
+          txnMany = Map(CURSOR_APP -> upTo) ++
+            m.joins.indices.map(i => dimCursorApp(i) -> dimUpTos(i)))
       } finally {
         // free the checkpoint's blocks now (state churn is small, but a
         // long-lived streaming view refreshes thousands of times — see

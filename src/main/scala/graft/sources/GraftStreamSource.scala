@@ -121,8 +121,9 @@ class GraftStreamSource(ctx: SQLContext, path: String,
   override val schema: StructType = GraftStreamSource.schemaFor(ctx, path, changeFeed)
 
   override def getOffset: Option[Offset] = synchronized {
-    val latest = table.latestVersion
     val from = lastOffered
+    val window = table.window(from, None)
+    val latest = window.upTo
     if (latest < 0 || latest <= from)
       // nothing beyond what we've offered; before ANY offer, report no
       // data (None) rather than a zero-width offset that would trigger a
@@ -131,25 +132,15 @@ class GraftStreamSource(ctx: SQLContext, path: String,
     val end =
       if (!capped) latest
       else {
-        val window = table.commits
-          .filter(c => c.version > from && c.version <= latest).sortBy(_.version)
-        var e = from; var files = 0L; var n = 0L; var bytes = 0L
-        val it = window.iterator
-        var done = false
-        while (it.hasNext && !done) {
-          val c = it.next()
-          val nf = files + c.add.size
-          val nn = n + 1
-          val nb = bytes + c.add.map(_.bytes).sum
-          val over = maxFilesPerTrigger.exists(nf > _) ||
-            maxVersionsPerTrigger.exists(nn > _) || maxBytesPerTrigger.exists(nb > _)
-          if (over && e > from) done = true // stop BEFORE this commit
-          else {
-            files = nf; n = nn; bytes = nb; e = c.version
-            if (over) done = true // first commit alone exceeds the cap: admit it
-          }
-        }
-        e
+        // cumulative (files, versions, bytes) only grow, so the admitted
+        // commits are the longest prefix under every cap — or the first
+        // commit alone when it exceeds one
+        val totals = window.commits.scanLeft((0L, 0L, 0L)) { case ((f, n, b), c) =>
+          (f + c.add.size, n + 1, b + c.add.map(_.bytes).sum) }.tail
+        val admitted = window.commits.zip(totals).takeWhile { case (_, (f, n, b)) =>
+          !(maxFilesPerTrigger.exists(f > _) || maxVersionsPerTrigger.exists(n > _) ||
+            maxBytesPerTrigger.exists(b > _)) }
+        admitted.lastOption.map(_._1).getOrElse(window.commits.head).version
       }
     lastOffered = end
     if (capped) writeWatermark(end)
