@@ -164,8 +164,8 @@ class TextIndex private[ext] (spark: SparkSession, val path: String) {
     * — the observable half of the partition-pruning contract. */
   def prunedFileCounts(terms: Seq[String]): (Int, Int) = {
     val pt = postingsTable
-    val live = pt.liveFiles(None)
-    (pt.pruneByFilters(live, bucketFilter(terms)).length, live.length)
+    val s = pt.snapshot()
+    (pt.pruneByFilters(s.live, bucketFilter(terms), s.shape).length, s.live.length)
   }
 
   /** Exact-integer BM25 top-k over the persisted postings — the same

@@ -213,8 +213,9 @@ class VectorIndex private[ext] (spark: SparkSession, val path: String,
     val q0 = queries.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("embedding"))
     val t = codesTable
-    val live = t.liveFiles(None)
-    (t.pruneByFilters(live, probeFilter(probeCidSet(q0, nProbe))).length, live.length)
+    val s = t.snapshot()
+    (t.pruneByFilters(s.live, probeFilter(probeCidSet(q0, nProbe)), s.shape).length,
+      s.live.length)
   }
 
   /** The persisted IVF-PQ search: per-query probe lists (codegen'd argmax

@@ -559,13 +559,18 @@ object CommitLog {
     * removes). Within a commit, removes apply FIRST: a deletion-vector
     * commit lists the same path in both (remove the old action, re-add it
     * with the new DV) so change consumers see the pre/post pair. */
-  def snapshotFiles(commits: Seq[Commit]): Seq[FileAction] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, FileAction]
-    commits.sortBy(_.version).foreach { c =>
-      c.remove.foreach(live.remove)
-      c.add.foreach(a => live(a.path) = a)
+  def snapshotFiles(commits: Seq[Commit]): Seq[FileAction] =
+    replay(Seq.empty, commits.sortBy(_.version))
+
+  /** `live` with `commits` applied in order, removes first within each. */
+  private[lake] def replay(live: Seq[FileAction], commits: Seq[Commit]): Seq[FileAction] = {
+    val out = scala.collection.mutable.LinkedHashMap.empty[String, FileAction]
+    live.foreach(a => out(a.path) = a)
+    commits.foreach { c =>
+      c.remove.foreach(out.remove)
+      c.add.foreach(a => out(a.path) = a)
     }
-    live.values.toSeq
+    out.values.toSeq
   }
 
   // ---- checkpoints -----------------------------------------------------
@@ -789,23 +794,18 @@ object CommitLog {
     val target = asOf.map(v => math.min(v, versions.last)).getOrElse(versions.last)
     val cp = checkpoints.filter(_ <= target).lastOption
     val base = cp.map(readCheckpoint(tablePath, _, conf)).getOrElse(Seq.empty)
-    val tail = versions.filter(v => v > cp.getOrElse(-1L) && v <= target)
-      .map(read(tablePath, _, conf))
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, FileAction]
-    base.foreach(a => live(a.path) = a)
-    tail.foreach { c =>
-      c.remove.foreach(live.remove) // removes first — see snapshotFiles
-      c.add.foreach(a => live(a.path) = a)
-    }
-    live.values.toSeq
+    replay(base, versions.filter(v => v > cp.getOrElse(-1L) && v <= target)
+      .map(read(tablePath, _, conf)))
   }
 
-  /** Write a checkpoint when the version hits the interval — columnar
+  /** Write a checkpoint of `live` (the live set at `version`, resolved
+    * only when one is due) when the version hits the interval — columnar
     * (parquet) when a SparkSession is active, JSON otherwise (and for the
     * empty-file-list edge, where a parquet dir would carry no schema). */
-  def maybeCheckpoint(tablePath: String, version: Long, conf: Configuration): Unit =
+  def maybeCheckpoint(tablePath: String, version: Long, conf: Configuration)(
+      live: => Seq[FileAction]): Unit =
     if (version > 0 && version % CHECKPOINT_INTERVAL == 0) {
-      val files = liveFiles(tablePath, Some(version), conf)
+      val files = live
       org.apache.spark.sql.SparkSession.getActiveSession match {
         case Some(ss) if files.nonEmpty =>
           writeParquetCheckpoint(tablePath, version, files, conf, ss)

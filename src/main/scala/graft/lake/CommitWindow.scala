@@ -1,12 +1,11 @@
 package graft.lake
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A table's spec and declared data schema (without meta columns) at one
   * version: everything [[LakeTable]]'s read helpers need to plan a scan,
   * resolved once and passed by value. */
-private[lake] final case class Shape(spec: TableSpec, schema: StructType) {
+private[graft] final case class Shape(spec: TableSpec, schema: StructType) {
 
   /** Record identity: (key, partition) when partitioned — Hudi's
     * non-global-index semantics, where the same key in two partitions is
@@ -20,13 +19,15 @@ private[lake] final case class Shape(spec: TableSpec, schema: StructType) {
   def joinIdCols: Seq[String] = spec.key +: spec.partition.map(_ => LakeTable.PID).toSeq
 }
 
-private[lake] object Shape {
+private[graft] object Shape {
   def of(c: Commit): Shape =
     Shape(c.spec, DataType.fromJson(c.schemaJson).asInstanceOf[StructType])
 }
 
 /** The commits of one table in the version window `(since, upTo]`, read
-  * from ONE listing of the log. The change feed (`incremental`,
+  * from ONE listing of the log: the window ends at snapshot `end`
+  * (`upTo` = its version) and starts at the state `end` resolves for
+  * `since` from the same listing. The change feed (`incremental`,
   * `changes`), view maintenance (`windowDelta`, MV freshness and cursor
   * bumps) and the capped stream source all resolve their window here
   * instead of re-listing the log for every question they ask of it.
@@ -37,39 +38,23 @@ private[lake] object Shape {
   *
   * This is also the only code that reads operation names as proofs
   * ([[physicalOnly]], [[keyPreserving]]). */
-final class CommitWindow private[lake] (tablePath: String, conf: Configuration,
-    versions: Seq[Long], val since: Long, val upTo: Long) {
+final class CommitWindow private[lake] (private[lake] val end: Snapshot, val since: Long) {
+  val upTo: Long = end.version
+  /** The table at `since`. */
+  private[lake] val start = end.at(since)
 
   /** Commits in `(since, upTo]`, oldest first. */
-  lazy val commits: Seq[Commit] =
-    versions.filter(v => v > since && v <= upTo).map(CommitLog.read(tablePath, _, conf))
+  lazy val commits: Seq[Commit] = end.commitsSince(since)
 
   /** Commit time of `since`; None when `since` is not a version (e.g. -1). */
-  lazy val sinceTime: Option[String] =
-    Option.when(versions.contains(since))(CommitLog.read(tablePath, since, conf).commitTime)
+  lazy val sinceTime: Option[String] = Option.when(end.has(since))(start.commit.commitTime)
 
   lazy val added: Seq[FileAction] = commits.flatMap(_.add)
-
-  // clamped into the log like time travel: before v0 reads v0's shape
-  private def shapeAt(v: Long): Shape =
-    Shape.of(CommitLog.read(tablePath, math.max(0L, math.min(v, versions.last)), conf))
-
-  /** Spec and schema at `upTo`, and at `since`. */
-  private[lake] lazy val shape: Shape = shapeAt(upTo)
-  private[lake] lazy val sinceShape: Shape = shapeAt(since)
-
-  private lazy val checkpoints = CommitLog.listCheckpoints(tablePath, conf)
-
-  /** Live files at `since` and at `upTo`. */
-  lazy val liveSince: Seq[FileAction] =
-    CommitLog.liveFiles(tablePath, versions, checkpoints, Some(since), conf)
-  lazy val liveUpTo: Seq[FileAction] =
-    CommitLog.liveFiles(tablePath, versions, checkpoints, Some(upTo), conf)
 
   /** Files live at `since` that a window commit removed (rewrote or dropped). */
   lazy val removedLive: Seq[FileAction] = {
     val gone = commits.flatMap(_.remove).toSet
-    liveSince.filter(a => gone.contains(a.path))
+    start.live.filter(a => gone.contains(a.path))
   }
 
   /** Is every commit a physical reorganization or pure table metadata

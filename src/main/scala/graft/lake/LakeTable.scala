@@ -38,10 +38,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   // ---- log access ------------------------------------------------------
 
-  def commits: Seq[Commit] =
-    CommitLog.listVersions(path, conf).map(CommitLog.read(path, _, conf))
+  def commits: Seq[Commit] = snapshot().history
 
-  def latestVersion: Long = CommitLog.latestVersion(path, conf).getOrElse(-1L)
+  def latestVersion: Long = snapshot().version
+
+  /** The table as of `asOf` (latest when None) from one log listing — see
+    * [[Snapshot]]. Every write attempt and every snapshot read resolves
+    * exactly one. */
+  private[graft] def snapshot(asOf: Option[Long] = None): Snapshot =
+    Snapshot.of(path, conf, asOf)
 
   /** (live file count, live row count) from commit-log metadata — no scan.
     * Rows are the per-file totals; for MoR the log rows count too (they
@@ -89,10 +94,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * partition-grouped metadata aggregate. Same exactness gates. */
   def fileExtremesWithPartition(colName: String, asOf: Option[Long] = None):
       Option[Seq[(String, (String, String))]] = {
-    val live = liveFiles(asOf)
+    val s = snapshot(asOf)
+    val live = s.live
     if (live.isEmpty) return None
     if (live.exists(a => a.log || a.dv.isDefined || a.dvRows > 0)) return None
-    val sp = specAt(asOf)
+    val sp = s.spec
     // after a partition evolution, an old-era file's stored partitionValue
     // belongs to a DIFFERENT column — grouped answers would mis-attribute
     if (mixedPartitionEras(live, sp)) return None
@@ -121,13 +127,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * partition-grouped metadata aggregate. Same exactness gates. */
   def fileSumsWithPartition(colName: String, asOf: Option[Long] = None):
       Option[Seq[(String, (String, Long))]] = {
-    val live = liveFiles(asOf)
+    val s = snapshot(asOf)
+    val live = s.live
     if (live.isEmpty) return None
     if (live.exists(a => a.log || a.tombstone || a.dv.isDefined || a.dvRows > 0)) return None
     // partition-evolution era guard — see fileExtremesWithPartition
-    if (mixedPartitionEras(live, specAt(asOf))) return None
+    if (mixedPartitionEras(live, s.spec)) return None
     // files store PHYSICAL names (column mapping), callers pass LOGICAL
-    val phys = specAt(asOf).physical(colName)
+    val phys = s.spec.physical(colName)
     val perFile = live.map { a =>
       a.colSums.collectFirst { case (c, sv) if c.equalsIgnoreCase(phys) => sv }
         .map(a.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__") -> _)
@@ -140,12 +147,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * logs make counts inexact. Keys are the stored partitionValue strings
     * (null partition = `__HIVE_DEFAULT_PARTITION__`). */
   def partitionRowCounts(asOf: Option[Long] = None): Option[Map[String, Long]] = {
-    if (specAt(asOf).partition.isEmpty) return None
-    val live = liveFiles(asOf)
+    val s = snapshot(asOf)
+    if (s.spec.partition.isEmpty) return None
     // partition-evolution era guard — see fileExtremesWithPartition
-    if (mixedPartitionEras(live, specAt(asOf))) return None
-    if (live.exists(_.log)) None
-    else Some(live.groupBy(_.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__"))
+    if (mixedPartitionEras(s.live, s.spec)) return None
+    if (s.live.exists(_.log)) None
+    else Some(s.live.groupBy(_.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__"))
       .map { case (pv, as) => pv -> as.map(a => a.rows - a.dvRows).sum })
   }
 
@@ -169,39 +176,26 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }.sum
   }
 
-  private def latestCommit: Commit = CommitLog.read(path, latestVersion, conf)
-
-  def spec: TableSpec = latestCommit.spec
+  def spec: TableSpec = snapshot().spec
 
   /** Declared data schema (without meta columns). */
-  def schema: StructType = shapeAt(None).schema
-
-  /** Spec and schema as of a version (latest when None), from one log
-    * resolution; v<0 = "before v0": v0's. */
-  private[lake] def shapeAt(asOf: Option[Long]): Shape = {
-    val latest = latestVersion
-    Shape.of(CommitLog.read(path, asOf.fold(latest)(v => math.max(0L, math.min(v, latest))), conf))
-  }
+  def schema: StructType = snapshot().schema
 
   /** Schema as of a version — time travel reads use the schema that was
     * declared THEN (like Delta), so pre-evolution snapshots keep their
     * original shape. */
-  def schemaAt(asOf: Option[Long]): StructType = shapeAt(asOf).schema
+  def schemaAt(asOf: Option[Long]): StructType = snapshot(asOf).schema
 
   /** Spec as of a version (column mapping travels with the schema). */
-  private[graft] def specAt(asOf: Option[Long]): TableSpec = shapeAt(asOf).spec
+  private[graft] def specAt(asOf: Option[Long]): TableSpec = snapshot(asOf).spec
 
   /** Checkpoint-aware: latest checkpoint + commit tail, not a full replay. */
-  private[graft] def liveFiles(asOf: Option[Long]): Seq[FileAction] =
-    CommitLog.liveFiles(path, asOf, conf)
+  private[graft] def liveFiles(asOf: Option[Long]): Seq[FileAction] = snapshot(asOf).live
 
   /** The commit window `(since, upTo]` (`upTo` = latest when None), from
     * one listing of the log — see [[CommitWindow]]. */
-  private[graft] def window(since: Long, upTo: Option[Long]): CommitWindow = {
-    val versions = CommitLog.listVersions(path, conf)
-    new CommitWindow(path, conf, versions, since,
-      upTo.getOrElse(versions.lastOption.getOrElse(-1L)))
-  }
+  private[graft] def window(since: Long, upTo: Option[Long]): CommitWindow =
+    snapshot(upTo).window(since)
 
   /** Identity JOINS need a null-safe partition id: SQL `=` never matches a
     * NULL partition value, so a using-column join on the raw partition
@@ -219,8 +213,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** Snapshot read: CoW latest state; for MoR this is the `_rt` view
     * (matches `spark.read.format("hudi")` snapshot semantics, S2). */
-  def read(asOf: Option[Long] = None): DataFrame =
-    if (spec.mor) realtime(asOf) else readOrdered(liveFiles(asOf), shapeAt(asOf))
+  def read(asOf: Option[Long] = None): DataFrame = readAt(snapshot(asOf))
+
+  private def readAt(s: Snapshot): DataFrame =
+    if (s.spec.mor) realtimePruned(s)
+    else readOrdered(s.live, s.shape)
 
   /** Snapshot read with file-level DATA SKIPPING for the pushed filters:
     * files whose commit-log stat ranges (record key, declared
@@ -247,18 +244,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       extra: Seq[FileAction] => Seq[FileAction],
       asOf: Option[Long] = None): DataFrame = {
-    val live = liveFiles(asOf)
-    val sh = shapeAt(asOf)
-    if (live.exists(_.log)) realtimePruned(live, sh, filters, extra)
-    else readOrdered(extra(pruneByFilters(live, filters)), sh)
+    val s = snapshot(asOf)
+    if (s.live.exists(_.log)) realtimePruned(s, filters, extra)
+    else readOrdered(extra(pruneByFilters(s.live, filters, s.shape)), s.shape)
   }
 
   /** [[skipByStats]] + [[bucketSkip]] + [[bloomSkip]] for the DSv2 scan
     * builder: plan-time file pruning from commit-log stats, the bucket
     * layout, and bloom sidecars against the pushed V1 filters. */
   private[graft] def pruneByFilters(actions: Seq[FileAction],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileAction] =
-    bloomSkip(bucketSkip(skipByStats(actions, filters), filters), filters)
+      filters: Seq[org.apache.spark.sql.sources.Filter], sh: Shape): Seq[FileAction] =
+    bloomSkip(bucketSkip(skipByStats(actions, filters, sh), filters, sh), filters, sh)
 
   /** Bucket-index pruning (the Hudi bucket-index READ half): on a
     * bucketed table an equality/IN filter on the record key pins the only
@@ -272,10 +268,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * always kept; an unevaluable literal (type mismatch) keeps the file —
     * skipping is only ever an optimization, never a semantics change. */
   private def bucketSkip(actions: Seq[FileAction],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileAction] = {
+      filters: Seq[org.apache.spark.sql.sources.Filter], sh: Shape): Seq[FileAction] = {
     import org.apache.spark.sql.sources._
+    val spec = sh.spec
     if (spec.buckets <= 0 || actions.isEmpty || filters.isEmpty) return actions
-    val keyType = schema.fields.find(_.name.equalsIgnoreCase(spec.key))
+    val keyType = sh.schema.fields.find(_.name.equalsIgnoreCase(spec.key))
       .map(_.dataType).getOrElse(return actions)
     def bucketOf(v: Any): Option[Int] = scala.util.Try {
       val lit = org.apache.spark.sql.catalyst.expressions.Literal.create(v, keyType)
@@ -353,9 +350,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * record key, the file's own partition value for its partition-era
     * column, declared statsColumns otherwise. None = no stats recorded;
     * sentinel bounds ("" / "￿") pass through — callers must treat them
-    * as unknown, exactly like [[skipByStats]] does. */
-  private[lake] def statRange(a: FileAction, c: String): Option[(String, String)] =
-    if (c.equalsIgnoreCase(spec.key)) Some((a.minKey, a.maxKey))
+    * as unknown, exactly like [[skipByStats]] does. The partition-value
+    * range is era-aware: the stored value belongs to the column this FILE
+    * was partitioned under (which, after changePartition, may not be the
+    * spec's), so old-era files prune on their own column and never
+    * mis-prune on the current one. */
+  private[lake] def statRange(a: FileAction, c: String, key: String): Option[(String, String)] =
+    if (c.equalsIgnoreCase(key)) Some((a.minKey, a.maxKey))
     else if (partitionColOf(a).exists(_.equalsIgnoreCase(c))) a.partitionValue.map(p => (p, p))
     else a.colStats.find(_._1.equalsIgnoreCase(c)).map(_._2)
 
@@ -363,9 +364,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * unknown filter shapes, missing/sentinel stats, non-numeric non-ASCII
     * comparisons all KEEP the file (never wrong, only less pruning). */
   private def skipByStats(actions: Seq[FileAction],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileAction] = {
+      filters: Seq[org.apache.spark.sql.sources.Filter], sh: Shape): Seq[FileAction] = {
     import org.apache.spark.sql.sources._
     if (filters.isEmpty || actions.isEmpty) return actions
+    val spec = sh.spec
     def conjuncts(f: Filter): Seq[Filter] = f match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -380,12 +382,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       src <- GeneratedCols.monotonicSource(spark, gen).toSeq
       d <- GeneratedCols.derive(spark, p, gen, src, cj0)
     } yield d)
-    val declared = schema
-    // `spec` is a def (latest-commit read behind a log-dir LISTING) —
-    // hoist the key name once: rangeOf runs per (file x filter-value)
-    // and a filesystem call inside that loop is a driver-side scale bug
-    // (measured: a 3.4k-value IN over 6 files cost 5s; see round-13
-    // BASELINE.md scale block)
+    val declared = sh.schema
     val keyName = spec.key
     // numeric-comparable stat columns: plain numerics, plus date/timestamp
     // — their INT64-micros / INT32-days footer stats render as plain
@@ -399,14 +396,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         case _: NumericType | DateType | TimestampType | TimestampNTZType => true
         case _ => false
       })
-    def rangeOf(a: FileAction, c: String): Option[(String, String)] =
-      if (c.equalsIgnoreCase(keyName)) Some((a.minKey, a.maxKey))
-      // era-aware: the stored partitionValue belongs to the column this
-      // FILE was partitioned under (which, after changePartition, may not
-      // be the spec's) — so old-era files keep pruning on their own column
-      // and never mis-prune on the current one
-      else if (partitionColOf(a).exists(_.equalsIgnoreCase(c))) a.partitionValue.map(p => (p, p))
-      else a.colStats.find(_._1.equalsIgnoreCase(c)).map(_._2)
     def toD(v: Any): Option[Double] = {
       import org.apache.spark.sql.catalyst.util.DateTimeUtils
       v match {
@@ -446,7 +435,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       }
     }
     def covers(a: FileAction, c: String, v: Any): Boolean =
-      rangeOf(a, c).forall { case (mn, mx) =>
+      statRange(a, c, keyName).forall { case (mn, mx) =>
         cmpStat(c, mn, v).forall(_ <= 0) && cmpStat(c, mx, v).forall(_ >= 0)
       }
     // IN-list pruning precompute: for a numeric-comparable column whose
@@ -470,7 +459,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       case In(c, vs) if sortedIn.contains(f) =>
         // any value within [mn, mx]? binary search for the first value
         // >= mn; undecidable bounds keep the file, like cmpStat
-        rangeOf(a, c).forall { case (mnS, mxS) =>
+        statRange(a, c, keyName).forall { case (mnS, mxS) =>
           (parseStat(mnS), parseStat(mxS)) match {
             case (Some(mn), Some(mx)) =>
               val ds = sortedIn(f)
@@ -488,21 +477,23 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         }
       case In(c, vs) => vs.isEmpty || vs.exists(v => covers(a, c, v))
       case GreaterThan(c, v) =>
-        rangeOf(a, c).forall { case (_, mx) => cmpStat(c, mx, v).forall(_ > 0) }
+        statRange(a, c, keyName).forall { case (_, mx) => cmpStat(c, mx, v).forall(_ > 0) }
       case GreaterThanOrEqual(c, v) =>
-        rangeOf(a, c).forall { case (_, mx) => cmpStat(c, mx, v).forall(_ >= 0) }
+        statRange(a, c, keyName).forall { case (_, mx) => cmpStat(c, mx, v).forall(_ >= 0) }
       case LessThan(c, v) =>
-        rangeOf(a, c).forall { case (mn, _) => cmpStat(c, mn, v).forall(_ < 0) }
+        statRange(a, c, keyName).forall { case (mn, _) => cmpStat(c, mn, v).forall(_ < 0) }
       case LessThanOrEqual(c, v) =>
-        rangeOf(a, c).forall { case (mn, _) => cmpStat(c, mn, v).forall(_ <= 0) }
+        statRange(a, c, keyName).forall { case (mn, _) => cmpStat(c, mn, v).forall(_ <= 0) }
       case _ => true
     }
     actions.filter(a => cj.forall(f => keep(a, f)))
   }
 
   /** MoR `_ro`: base files only — stale until compaction (S9/J3). */
-  def readOptimized(asOf: Option[Long] = None): DataFrame =
-    readOrdered(liveFiles(asOf).filterNot(_.log), shapeAt(asOf))
+  def readOptimized(asOf: Option[Long] = None): DataFrame = {
+    val s = snapshot(asOf)
+    readOrdered(s.live.filterNot(_.log), s.shape)
+  }
 
   /** MoR `_rt`: base ∪ logs with latest-wins merge at read (J3).
     *
@@ -511,8 +502,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * set, which Spark broadcasts), and the dedup shuffle carries just the
     * contested rows. Read cost scales with log size, not table size: at
     * 100 TB that is the difference between a merge and a full re-shuffle. */
-  def realtime(asOf: Option[Long] = None): DataFrame =
-    realtimePruned(liveFiles(asOf), shapeAt(asOf), Nil, identity)
+  def realtime(asOf: Option[Long] = None): DataFrame = realtimePruned(snapshot(asOf))
 
   /** [[realtime]] with BASE-file pruning against `baseFilters`
     * (stats/bucket/bloom skipping; log files are never pruned — they are
@@ -521,13 +511,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * pruning only drops base files that cannot contain a matching key,
     * and the latest-wins merge of the remaining files is unchanged for
     * every surviving key. */
-  private def realtimePruned(live: Seq[FileAction], sh: Shape,
-      baseFilters: Seq[org.apache.spark.sql.sources.Filter],
-      extra: Seq[FileAction] => Seq[FileAction]): DataFrame = {
-    val (logActions, baseActions0) = live.partition(_.log)
+  private def realtimePruned(s: Snapshot,
+      baseFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+      extra: Seq[FileAction] => Seq[FileAction] = identity): DataFrame = {
+    val sh = s.shape
+    val (logActions, baseActions0) = s.live.partition(_.log)
     val baseActions = extra(
       if (baseFilters.isEmpty) baseActions0
-      else pruneByFilters(baseActions0, baseFilters))
+      else pruneByFilters(baseActions0, baseFilters, sh))
     if (logActions.isEmpty)
       return readOrdered(baseActions, sh)
     val (tombActions, dataLogs) = logActions.partition(_.tombstone)
@@ -559,12 +550,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * semantics: on partitioned tables a key reports existing in ANY
     * partition. */
   def containsKeys(keys: DataFrame): DataFrame = {
-    val k = keys.select(col(spec.key)).filter(col(spec.key).isNotNull).distinct()
-    val live = liveFiles(None)
-    val present =
-      if (live.exists(_.log)) realtime().select(col(spec.key))
-      else readFiles(pruneCandidates(live, k), shapeAt(None)).select(col(spec.key))
-    k.join(present, Seq(spec.key), "left_semi")
+    val s = snapshot()
+    val key = s.spec.key
+    val k = keys.select(col(key)).filter(col(key).isNotNull).distinct()
+    k.join(candidateRows(s, k).select(col(key)), Seq(key), "left_semi")
   }
 
   /** Pruned candidate read for a key set: the rows of files that MIGHT
@@ -574,10 +563,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * filter/join on the key themselves. MoR with live logs reads through
     * the merged realtime view (a tombstoned key must not surface). */
   def readForKeys(keys: DataFrame): DataFrame = {
-    val k = keys.select(col(spec.key)).filter(col(spec.key).isNotNull).distinct()
-    val live = liveFiles(None)
-    if (live.exists(_.log)) realtime() else readOrdered(pruneCandidates(live, k), shapeAt(None))
+    val s = snapshot()
+    candidateRows(s, keys.select(col(s.spec.key)).filter(col(s.spec.key).isNotNull).distinct())
   }
+
+  private def candidateRows(s: Snapshot, k: DataFrame): DataFrame =
+    if (s.live.exists(_.log)) realtimePruned(s) else readOrdered(pruneCandidates(s, k), s.shape)
 
   /** Max tombstone write-id per record identity — the one scan of the
     * (churn-bounded) tombstone files a read needs; both its consumers (the
@@ -753,13 +744,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * `mergeSchema` allows additive evolution (new columns widen the table;
     * Delta's mergeSchema analog). */
   def overwrite(df: DataFrame, mergeSchema: Boolean = false,
-      txn: Option[(String, Long)] = None): LakeTable = retrying {
-    val (withIds, idHighs) = stampIdentity(df, freshForAll = true)
-    val (conformed, evolved) = conform(withIds, mergeSchema)
-    writeCommit("overwrite", removeAll = true, newSchema = evolved, txn = txn,
+      txn: Option[(String, Long)] = None): LakeTable = retrying { s =>
+    val (withIds, idHighs) = stampIdentity(s, df, freshForAll = true)
+    val (conformed, evolved) = conform(s, withIds, mergeSchema)
+    writeCommit(s, "overwrite", removeAll = true, newSchema = evolved, txn = txn,
       identityHigh = idHighs) { (writeId, commitTime) =>
-      val batch = stampMeta(dedupBatch(conformed), commitTime)
-      Seq(writeFiles(batch, writeId, log = false))
+      val batch = stampMeta(s, dedupBatch(s, conformed), commitTime)
+      Seq(writeFiles(s, batch, writeId, log = false))
     }
   }
 
@@ -778,23 +769,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * completely untouched files are the caller's contract (checking them
     * would need the full-table scan this operation exists to avoid). */
   def overwriteWhere(df: DataFrame, cond: Column,
-      txn: Option[(String, Long)] = None): LakeTable = retrying {
-    if (spec.mor && liveFiles(None).exists(_.log)) compact() // see delete()
-    val (withIds, idHighs) = stampIdentity(df, freshForAll = true)
-    val (conformed, _) = conform(withIds, mergeSchema = false)
+      txn: Option[(String, Long)] = None): LakeTable = retrying { s0 =>
+    val s = foldedLogs(s0)
+    val (withIds, idHighs) = stampIdentity(s, df, freshForAll = true)
+    val (conformed, _) = conform(s, withIds, mergeSchema = false)
     require(conformed.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every incoming row must match the predicate")
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    writeCommit("overwriteWhere", txn = txn, identityHigh = idHighs) { (writeId, commitTime) =>
-      val touched = readFiles(live, sh, relFile = true)
+    val sh = s.shape
+    writeCommit(s, "overwriteWhere", txn = txn, identityHigh = idHighs) { (writeId, commitTime) =>
+      val touched = readFiles(s.live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
-      val batch = stampMeta(dedupBatch(conformed), commitTime)
+      val batch = stampMeta(s, dedupBatch(s, conformed), commitTime)
       val kept = if (touched.isEmpty) Seq.empty else {
         val touchedSet = touched.toSet
         // surviving rows of touched files (cond NULL = survives, like DELETE)
-        val rows = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
+        val rows = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
           .filter(!coalesce(cond, lit(false)))
           .drop("_file_name")
         // keyed-uniqueness guard (see scaladoc): an incoming key surviving
@@ -805,9 +795,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         require(dup.isEmpty,
           "replaceWhere: an incoming record key also has rows NOT matching " +
             "the predicate — a key may not move across the replace boundary")
-        Seq(writeFiles(rows, writeId + 1, log = false))
+        Seq(writeFiles(s, rows, writeId + 1, log = false))
       }
-      Seq(writeFiles(batch, writeId, log = false).copy(remove = touched)) ++ kept
+      Seq(writeFiles(s, batch, writeId, log = false).copy(remove = touched)) ++ kept
     }
   }
 
@@ -818,13 +808,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * regardless of table size: the partition-load pattern at 100 TB. */
   def overwritePartitions(df: DataFrame,
       txn: Option[(String, Long)] = None): LakeTable = {
-    val p0 = spec.partition.getOrElse(throw new IllegalArgumentException(
+    val s = snapshot()
+    val p0 = s.spec.partition.getOrElse(throw new IllegalArgumentException(
       "dynamic partition overwrite needs a partitioned table"))
     // partition-evolution era guard: an old-era file interleaves current
     // partition values WITHIN the file, so per-file metadata selection
     // would drop innocent rows — route through row-level replaceWhere
     // (same swap semantics, detection-scan cost) until compact() migrates
-    if (mixedPartitionEras(liveFiles(None), spec)) {
+    if (mixedPartitionEras(s.live, s.spec)) {
       val pvals = df.select(col(p0).cast(StringType)).distinct()
         .collect().map(r => Option(r.getString(0))).toSeq
       val (nulls, vals) = pvals.partition(_.isEmpty)
@@ -837,22 +828,21 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   }
 
   private def overwritePartitionsUniform(df: DataFrame,
-      txn: Option[(String, Long)]): LakeTable = retrying {
-    val p = spec.partition.getOrElse(throw new IllegalArgumentException(
+      txn: Option[(String, Long)]): LakeTable = retrying { s =>
+    val p = s.spec.partition.getOrElse(throw new IllegalArgumentException(
       "dynamic partition overwrite needs a partitioned table"))
-    val (withIds, idHighs) = stampIdentity(df, freshForAll = true)
-    val (conformed, _) = conform(withIds, mergeSchema = false)
+    val (withIds, idHighs) = stampIdentity(s, df, freshForAll = true)
+    val (conformed, _) = conform(s, withIds, mergeSchema = false)
     val parts = conformed.select(col(p).cast(StringType)).distinct()
       .collect().map(r => Option(r.getString(0))
         .getOrElse("__HIVE_DEFAULT_PARTITION__")).toSet
-    val live = liveFiles(None)
-    writeCommit("overwritePartitions", txn = txn,
+    writeCommit(s, "overwritePartitions", txn = txn,
       identityHigh = idHighs) { (writeId, commitTime) =>
       // MoR log files carry partitionValue too — a replaced partition's
       // outstanding logs go with it
-      val touched = live.filter(_.partitionValue.exists(parts.contains)).map(_.path)
-      val batch = stampMeta(dedupBatch(conformed), commitTime)
-      Seq(writeFiles(batch, writeId, log = false).copy(remove = touched))
+      val touched = s.live.filter(_.partitionValue.exists(parts.contains)).map(_.path)
+      val batch = stampMeta(s, dedupBatch(s, conformed), commitTime)
+      Seq(writeFiles(s, batch, writeId, log = false).copy(remove = touched))
     }
   }
 
@@ -864,14 +854,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * zero as compaction/churn moves the table forward, never ∝ table
     * size. */
   def partitionValues: Seq[String] = {
-    val p = spec.partition.getOrElse(
+    val s = snapshot()
+    val p = s.spec.partition.getOrElse(
       throw new IllegalArgumentException(s"table at $path is not partitioned"))
-    val live = liveFiles(None)
-    val (cur, old) = live.partition(a => partitionColOf(a) == spec.partition)
+    val (cur, old) = s.live.partition(a => partitionColOf(a) == s.spec.partition)
     val fromMeta = cur.flatMap(_.partitionValue)
     val fromScan =
       if (old.isEmpty) Seq.empty
-      else readFiles(old, shapeAt(None)).select(col(p).cast(StringType)).distinct()
+      else readFiles(old, s.shape).select(col(p).cast(StringType)).distinct()
         .collect().toSeq.flatMap(r => Option(r.getString(0)))
     (fromMeta ++ fromScan).distinct.sorted
   }
@@ -897,22 +887,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * full batch (guide §5: cache only when recompute costs more). */
   def upsert(df: DataFrame, mergeSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      copyFiles: Seq[String] = Seq.empty): LakeTable = retrying {
-    val (withIds, idHighs) = stampIdentity(df, freshForAll = false)
-    val (conformed, evolved) = conform(withIds, mergeSchema)
-    val checked = checkedKeys(conformed)
-    val doPersist = !isCheapRescan(checked)
-    val incoming0 = if (doPersist)
-      checked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else checked
-    try {
-      if (spec.mor) upsertMor(incoming0, evolved, txn, copyFiles, idHighs)
-      else upsertCow(incoming0, evolved, txn, copyFiles, idHighs)
-    } finally {
-      if (doPersist) incoming0.unpersist(blocking = false)
-      ()
-    }
-  }
+      copyFiles: Seq[String] = Seq.empty): LakeTable =
+    retrying(upsertAt(_, df, mergeSchema, txn, copyFiles))
 
   /** Upsert pinned at `expectedVersion` with NO internal rebase: if any
     * other commit landed after the caller observed `expectedVersion`, the
@@ -921,38 +897,43 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * [[MaterializedView.refresh]]). CoW only. */
   private[lake] def upsertPinned(df: DataFrame, expectedVersion: Long,
       txnMany: Map[String, Long] = Map.empty): LakeTable = {
-    require(!spec.mor, "upsertPinned is a CoW primitive")
-    val (withIds, idHighs) = stampIdentity(df, freshForAll = false)
-    val (conformed, evolved) = conform(withIds, mergeSchema = false)
-    val checked = checkedKeys(conformed)
+    val s = snapshot(Some(expectedVersion))
+    require(!s.spec.mor, "upsertPinned is a CoW primitive")
+    upsertAt(s, df, txnMany = txnMany)
+  }
+
+  /** One upsert attempt on snapshot `s`. */
+  private def upsertAt(s: Snapshot, df: DataFrame, mergeSchema: Boolean = false,
+      txn: Option[(String, Long)] = None, copyFiles: Seq[String] = Seq.empty,
+      txnMany: Map[String, Long] = Map.empty): LakeTable = {
+    val (withIds, idHighs) = stampIdentity(s, df, freshForAll = false)
+    val (conformed, evolved) = conform(s, withIds, mergeSchema)
+    val checked = checkedKeys(s, conformed)
     val doPersist = !isCheapRescan(checked)
     val incoming0 = if (doPersist)
       checked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else checked
-    try upsertCow(incoming0, evolved, idHighs = idHighs,
-      expectedVersion = Some(expectedVersion), txnMany = txnMany)
-    finally {
+    try {
+      if (s.spec.mor) upsertMor(s, incoming0, evolved, txn, copyFiles, idHighs)
+      else upsertCow(s, incoming0, evolved, txn, copyFiles, idHighs, txnMany)
+    } finally {
       if (doPersist) incoming0.unpersist(blocking = false)
       ()
     }
   }
 
-  private def upsertCow(incoming: DataFrame, evolved: Option[StructType] = None,
-      txn: Option[(String, Long)] = None,
-      copyFiles: Seq[String] = Seq.empty,
-      idHighs: Map[String, Long] = Map.empty,
-      expectedVersion: Option[Long] = None,
-      txnMany: Map[String, Long] = Map.empty): LakeTable = {
-    val candidates = pruneCandidates(liveFiles(None), incoming)
-    val sh = shapeAt(None)
+  private def upsertCow(s: Snapshot, incoming: DataFrame, evolved: Option[StructType],
+      txn: Option[(String, Long)], copyFiles: Seq[String], idHighs: Map[String, Long],
+      txnMany: Map[String, Long]): LakeTable = {
+    val candidates = pruneCandidates(s, incoming)
+    val sh = s.shape
     // data columns of the batch, captured BEFORE stampMeta adds the meta
     // columns: the folded within-batch dedup hashes exactly these, so it
     // picks the same winner the old standalone dedupBatch did
     val batchHash = xxhash64(incoming.columns.toSeq.map(col): _*)
-    writeCommit("upsert", newSchema = evolved, txn = txn,
-      copyFiles = copyFiles, identityHigh = idHighs,
-      expectedVersion = expectedVersion, txnMany = txnMany) { (writeId, commitTime) =>
-      val inStamped = stampMeta(incoming, commitTime).withColumn(RANK, lit(Long.MaxValue))
+    writeCommit(s, "upsert", newSchema = evolved, txn = txn,
+      copyFiles = copyFiles, identityHigh = idHighs, txnMany = txnMany) { (writeId, commitTime) =>
+      val inStamped = stampMeta(s, incoming, commitTime).withColumn(RANK, lit(Long.MaxValue))
       // second element: the incoming batch when nothing is touched, else
       // the full row set of the files being rewritten
       val (touchedPaths, rewriteSet) =
@@ -1005,32 +986,30 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             .unionByName(passThrough, allowMissingColumns = true)
             .drop(PID)
         }
-      Seq(writeFiles(winner.drop(RANK), writeId, log = false)
+      Seq(writeFiles(s, winner.drop(RANK), writeId, log = false)
         .copy(remove = touchedPaths))
     }
   }
 
-  private def upsertMor(incoming: DataFrame, evolved: Option[StructType] = None,
-      txn: Option[(String, Long)] = None,
-      copyFiles: Seq[String] = Seq.empty,
-      idHighs: Map[String, Long] = Map.empty): LakeTable = {
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    writeCommit("upsert", newSchema = evolved, txn = txn,
+  private def upsertMor(s: Snapshot, incoming: DataFrame, evolved: Option[StructType],
+      txn: Option[(String, Long)], copyFiles: Seq[String],
+      idHighs: Map[String, Long]): LakeTable = {
+    val sh = s.shape
+    writeCommit(s, "upsert", newSchema = evolved, txn = txn,
       copyFiles = copyFiles, identityHigh = idHighs) { (writeId, commitTime) =>
       // within-batch dedup happens HERE (the incoming frame is raw): its
       // shuffle runs once, inside the tagged frame's persist below — the
       // pruning/existing-key probes above and below need only
       // dedup-invariant key facts
-      val stamped = stampMeta(dedupBatch(incoming), commitTime)
-      if (live.isEmpty) Seq(writeFiles(stamped, writeId, log = false))
+      val stamped = stampMeta(s, dedupBatch(s, incoming), commitTime)
+      if (s.live.isEmpty) Seq(writeFiles(s, stamped, writeId, log = false))
       else {
         // key-membership split in ONE pass: left-join a membership flag over
         // a column-pruned scan of live keys, cache the tagged batch, filter
         // twice (anti+semi joins would scan the live key column twice).
         // The scan covers only stats-candidate files: a key outside every
         // file's [min,max] range cannot be existing.
-        val existingKeys = withJoinIds(readFiles(pruneCandidates(live, incoming), sh), sh)
+        val existingKeys = withJoinIds(readFiles(pruneCandidates(s, incoming), sh), sh)
           .select(sh.joinIdCols.map(col): _*).distinct()
           .withColumn("_graft_exists", lit(true))
         val tagged = withJoinIds(stamped, sh).join(existingKeys, sh.joinIdCols, "left")
@@ -1041,8 +1020,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           val updates = tagged.filter(col("_graft_exists") === true)
             .drop("_graft_exists", PID)
           Seq(
-            writeFiles(newRows, writeId, log = false),
-            writeFiles(updates, writeId + 1, log = true)
+            writeFiles(s, newRows, writeId, log = false),
+            writeFiles(s, updates, writeId + 1, log = true)
           ).filter(_.add.nonEmpty)
         } finally {
           tagged.unpersist(blocking = false)
@@ -1088,11 +1067,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val eligible = listed
       .filter(f => f.endsWith(".parquet") && !rel(f).startsWith("_"))
       .filter(f => rx.forall(_.matcher(rel(f)).matches))
-    val loaded = commits.iterator.flatMap(_.copyFiles).toSet
+    val s = snapshot()
+    val loaded = s.history.iterator.flatMap(_.copyFiles).toSet
     val fresh = eligible.filterNot(loaded.contains).sorted
     if (fresh.nonEmpty) {
       val incoming = spark.read.parquet(fresh: _*)
-        .select(schema.fieldNames.map(col): _*)
+        .select(s.schema.fieldNames.map(col): _*)
       upsert(incoming, copyFiles = fresh)
     }
     fresh
@@ -1110,18 +1090,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * rows where `cond` is definitively TRUE are dropped — a NULL-evaluating
     * condition (e.g. a null flag after additive schema evolution) keeps the
     * row, matching Delta DELETE semantics. */
-  def delete(cond: Column): LakeTable = retrying {
+  def delete(cond: Column): LakeTable = retrying { s0 =>
     // MoR with outstanding logs: a touched LOG file's surviving rows would
     // be rewritten as BASE rows next to the old base rows for the same
     // keys (duplicates), and untouched logs would lose precombine-tie
     // priority to the rewrite's newer write-id. Folding the logs first
     // (same guard optimize() uses) makes the rewrite well-defined.
-    if (spec.mor && liveFiles(None).exists(_.log)) compact()
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    writeCommit("delete") { (writeId, _) =>
+    val s = foldedLogs(s0)
+    val sh = s.shape
+    writeCommit(s, "delete") { (writeId, _) =>
       // detection pass: column-pruned to cond's columns + the file name
-      val touched = readFiles(live, sh, relFile = true)
+      val touched = readFiles(s.live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
       if (touched.isEmpty) Seq.empty
@@ -1129,10 +1108,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // rewrite pass: re-scan only the touched files (no literal isin —
         // the plan stays O(1) in the touched-file count)
         val touchedSet = touched.toSet
-        val kept = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
+        val kept = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
           .filter(!coalesce(cond, lit(false)))
           .drop("_file_name")
-        Seq(writeFiles(kept, writeId, log = false).copy(remove = touched))
+        Seq(writeFiles(s, kept, writeId, log = false).copy(remove = touched))
       }
     }
   }
@@ -1150,15 +1129,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * path, so incremental/CDF/materialized-view consumers observe the
     * change like any rewrite. A file whose every row is deleted is simply
     * removed. CoW only — MoR deletes are tombstone log rows already. */
-  def deleteVectors(cond: Column): LakeTable = retrying {
-    require(!spec.mor, "MoR deletes land as tombstone logs; deletion vectors are the CoW analog")
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    writeCommit("delete") { (writeId, _) =>
+  def deleteVectors(cond: Column): LakeTable = retrying { s =>
+    require(!s.spec.mor, "MoR deletes land as tombstone logs; deletion vectors are the CoW analog")
+    val sh = s.shape
+    writeCommit(s, "delete") { (writeId, _) =>
       val dvRel = s"$DV_DIR/${WRITE_ID}=$writeId"
       // detection scans DV-filtered rows: already-deleted positions can't
       // re-match, so the new sidecar unions cleanly with the old ones
-      val matched = readFiles(live, sh, relFile = true, keepPos = true)
+      val matched = readFiles(s.live, sh, relFile = true, keepPos = true)
         .filter(cond)
         .select(col(REL_FILE).as("file"), col(DV_POS).as("pos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1168,7 +1146,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         if (touched.isEmpty) Seq.empty
         else {
           val touchedSet = touched.toSet
-          val touchedActs = live.filter(a => touchedSet.contains(a.path))
+          val touchedActs = s.live.filter(a => touchedSet.contains(a.path))
           // prior DV rows of the touched files move into the new sidecar
           // (untouched DV'd files keep referencing their old dirs)
           val oldDirs = touchedActs.flatMap(_.dv).distinct.map(dvRoot)
@@ -1206,15 +1184,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * the reason this exists next to [[compact]] (which rewrites
     * everything). Commit shape is remove+add per purged file, so
     * incremental/CDF consumers observe a rewrite, not a row change. */
-  def reorgPurge(): LakeTable = retrying {
-    val dvd = liveFiles(None).filter(_.dv.isDefined)
+  def reorgPurge(): LakeTable = retrying { s =>
+    val dvd = s.live.filter(_.dv.isDefined)
     if (dvd.isEmpty) return this
-    writeCommit("reorg") { (writeId, _) =>
+    writeCommit(s, "reorg") { (writeId, _) =>
       // readFiles applies the DVs at scan time: what it returns IS the
       // purged content; meta columns ride along so rows keep their
       // original commit identity
-      val rows = readFiles(dvd, shapeAt(None)).drop("_file_name")
-      Seq(writeFiles(rows, writeId, log = false).copy(remove = dvd.map(_.path)))
+      val rows = readFiles(dvd, s.shape).drop("_file_name")
+      Seq(writeFiles(s, rows, writeId, log = false).copy(remove = dvd.map(_.path)))
     }
   }
 
@@ -1224,31 +1202,30 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * files through unchanged. Same stats/detection shape as [[delete]]:
     * detection is column-pruned, the rewrite re-scans only touched files,
     * and rows with a NULL-evaluating condition are left untouched. */
-  def update(cond: Column, assigns: Map[String, Column]): LakeTable = retrying {
-    val declared = schema
+  def update(cond: Column, assigns: Map[String, Column]): LakeTable = retrying { s0 =>
+    val declared = s0.schema
     assigns.keys.foreach { n =>
       require(declared.fieldNames.exists(_.equalsIgnoreCase(n)), s"no column $n")
-      require(!n.equalsIgnoreCase(spec.key), s"cannot UPDATE the record key '$n'")
+      require(!n.equalsIgnoreCase(s0.spec.key), s"cannot UPDATE the record key '$n'")
       // a partition change is a record move under (key, partition) identity
       // — and would leave _partition_path stale; route it through
       // delete + insert instead
-      require(!spec.partition.exists(_.equalsIgnoreCase(n)),
+      require(!s0.spec.partition.exists(_.equalsIgnoreCase(n)),
         s"cannot UPDATE the partition column '$n'")
-      require(!spec.identity.keys.exists(_.equalsIgnoreCase(n)),
+      require(!s0.spec.identity.keys.exists(_.equalsIgnoreCase(n)),
         s"column '$n' is GENERATED ALWAYS AS IDENTITY and cannot be updated")
     }
-    if (spec.mor && liveFiles(None).exists(_.log)) compact() // see delete()
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    writeCommit("update") { (writeId, commitTime) =>
-      val touched = readFiles(live, sh, relFile = true)
+    val s = foldedLogs(s0)
+    val sh = s.shape
+    writeCommit(s, "update") { (writeId, commitTime) =>
+      val touched = readFiles(s.live, sh, relFile = true)
         .filter(cond).select(REL_FILE).distinct()
         .collect().map(_.getString(0)).toSeq
       if (touched.isEmpty) Seq.empty
       else {
         val touchedSet = touched.toSet
         val hit = coalesce(cond, lit(false))
-        val base = readFiles(live.filter(a => touchedSet.contains(a.path)), sh)
+        val base = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
         // ONE projection against the PRE-update row: the condition and
         // every assignment RHS see original values (standard UPDATE
         // semantics — `SET a = b, b = a` swaps; sequential withColumn
@@ -1270,8 +1247,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         }
         val rewritten = base.select(outCols.toSeq: _*)
         // CHECK constraints see the post-image of the updated rows
-        checkConstraints(rewritten.filter(hit))
-        Seq(writeFiles(rewritten, writeId, log = false)
+        checkConstraints(s, rewritten.filter(hit))
+        Seq(writeFiles(s, rewritten, writeId, log = false)
           .copy(remove = touched))
       }
     }
@@ -1291,35 +1268,36 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * files actually holding a doomed key via a semi-join, rewrite only
     * those with an anti-join — no driver-side key list, no literal `isin`,
     * so the plan is O(1) in both key count and file count. */
-  def deleteKeys(keys: DataFrame): LakeTable =
-    if (spec.mor) deleteKeysMor(keys) else retrying {
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
+  def deleteKeys(keys: DataFrame): LakeTable = retrying { s =>
+    val sh = s.shape
     // keeping the raw partition column in `k` also lets pruneCandidates
     // partition-prune (see keyShape for the semantics)
     val ks = keyShape(keys, sh)
     val k = withJoinIds(keys.select(ks.idCols.map(col): _*), ks).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeCommit("delete") { (writeId, _) =>
-        val candidates = pruneCandidates(live, k)
-        val touched = withJoinIds(readFiles(candidates, sh, relFile = true), ks)
-          .join(k, ks.joinIdCols, "left_semi")
-          .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
-        if (touched.isEmpty) Seq.empty
-        else {
-          val touchedSet = touched.toSet
-          val kept = withJoinIds(
-              readFiles(candidates.filter(a => touchedSet.contains(a.path)), sh), ks)
-            .join(k, ks.joinIdCols, "left_anti")
-            .drop(PID)
-            .drop("_file_name")
-          Seq(writeFiles(kept, writeId, log = false).copy(remove = touched))
+    if (sh.spec.mor) deleteKeysMor(s, ks, k)
+    else {
+      k.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        writeCommit(s, "delete") { (writeId, _) =>
+          val candidates = pruneCandidates(s, k)
+          val touched = withJoinIds(readFiles(candidates, sh, relFile = true), ks)
+            .join(k, ks.joinIdCols, "left_semi")
+            .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
+          if (touched.isEmpty) Seq.empty
+          else {
+            val touchedSet = touched.toSet
+            val kept = withJoinIds(
+                readFiles(candidates.filter(a => touchedSet.contains(a.path)), sh), ks)
+              .join(k, ks.joinIdCols, "left_anti")
+              .drop(PID)
+              .drop("_file_name")
+            Seq(writeFiles(s, kept, writeId, log = false).copy(remove = touched))
+          }
         }
+      } finally {
+        k.unpersist(blocking = false)
+        ()
       }
-    } finally {
-      k.unpersist(blocking = false)
-      ()
     }
   }
 
@@ -1329,36 +1307,26 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * O(deleted keys) regardless of table size; `_rt` filters tombstoned
     * rows at read ([[applyTombstones]]), `_ro` stays stale until
     * compaction folds the tombstones away — ordinary MoR staleness. */
-  private def deleteKeysMor(keys: DataFrame): LakeTable = retrying {
-    val live = liveFiles(None)
-    val sh = shapeAt(None)
-    val ks = keyShape(keys, sh)
-    val k = withJoinIds(keys.select(ks.idCols.map(col): _*), ks).distinct()
-    writeCommit("delete") { (writeId, commitTime) =>
+  private def deleteKeysMor(s: Snapshot, ks: Shape, k: DataFrame): LakeTable = {
+    val sh = s.shape
+    writeCommit(s, "delete") { (writeId, commitTime) =>
       // tombstone only keys that exist (stray keys would bloat the logs);
       // the existence probe is a key-column-pruned scan of stats-candidates.
       // The probe must see the full identity: a bare key set still needs
       // the live rows' partition values on the tombstone rows.
-      val existing = withJoinIds(readFiles(pruneCandidates(live, k), sh), sh)
+      val existing = withJoinIds(readFiles(pruneCandidates(s, k), sh), sh)
         .join(k.select(ks.joinIdCols.map(col): _*), ks.joinIdCols, "left_semi")
         .select(sh.idCols.map(col): _*).distinct()
       val row = sh.schema.fields.map { f =>
         if (sh.idCols.exists(_.equalsIgnoreCase(f.name))) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
-      val doomed = stampMeta(existing.select(row.toSeq: _*), commitTime)
-      Seq(writeFiles(doomed, writeId + 1, log = true, tombstone = true))
+      val doomed = stampMeta(s, existing.select(row.toSeq: _*), commitTime)
+      Seq(writeFiles(s, doomed, writeId + 1, log = true, tombstone = true))
         .filter(_.add.nonEmpty)
     }
   }
 
-  /** Fold MoR logs (or fragmented CoW files) into fresh base files (M2).
-    * Afterwards `_ro ≡ _rt`. Preserves per-row meta columns.
-    *
-    * @param clusterByKey range-partition + sort the rewrite by record key
-    *   (Hudi clustering / Delta OPTIMIZE ZORDER analog for the 1-D case):
-    *   files get tight, near-disjoint key ranges, so the commit-log min/max
-    *   stats prune far more files on later upserts and point lookups. */
   /** Contested-key merged rewrite set (same shape as realtime()): only keys
     * present in a log file — or duplicated across base rows (bulk-insert
     * legacy) — need the dedup shuffle; every other base row passes through
@@ -1367,10 +1335,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * with the log/dup volume, not the table size — at 100 TB the
     * difference between folding a day's updates and re-shuffling the
     * whole table. */
-  private def mergedRewrite(live: Seq[FileAction]): DataFrame = {
+  private def mergedRewrite(live: Seq[FileAction], sh: Shape): DataFrame = {
     val (logActions, baseActions) = live.partition(_.log)
     val (tombActions, dataLogs) = logActions.partition(_.tombstone)
-    val sh = shapeAt(None)
     val base = withJoinIds(readFiles(baseActions, sh, keepWriteId = true), sh)
     val logs = withJoinIds(readFiles(dataLogs, sh, keepWriteId = true), sh)
     val tombs = tombMax(tombActions, sh)
@@ -1386,20 +1353,35 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       .drop(WRITE_ID, "_file_name", PID)
   }
 
-  def compact(clusterByKey: Boolean = false, targetFiles: Int = 0): LakeTable = retrying {
-    val live = liveFiles(None)
-    writeCommit("compact") { (writeId, _) =>
-      val rt = mergedRewrite(live)
+  /** Fold MoR logs (or fragmented CoW files) into fresh base files (M2).
+    * Afterwards `_ro ≡ _rt`. Preserves per-row meta columns.
+    *
+    * @param clusterByKey range-partition + sort the rewrite by record key
+    *   (Hudi clustering / Delta OPTIMIZE ZORDER analog for the 1-D case):
+    *   files get tight, near-disjoint key ranges, so the commit-log min/max
+    *   stats prune far more files on later upserts and point lookups. */
+  def compact(clusterByKey: Boolean = false, targetFiles: Int = 0): LakeTable =
+    retrying(compactAt(_, clusterByKey, targetFiles))
+
+  private def compactAt(s: Snapshot, clusterByKey: Boolean = false,
+      targetFiles: Int = 0): LakeTable =
+    writeCommit(s, "compact") { (writeId, _) =>
+      val rt = mergedRewrite(s.live, s.shape)
+      val key = col(s.spec.key)
       val clustered =
         if (clusterByKey && targetFiles > 0)
-          rt.repartitionByRange(targetFiles, col(spec.key)).sortWithinPartitions(col(spec.key))
-        else if (clusterByKey)
-          rt.repartitionByRange(col(spec.key)).sortWithinPartitions(col(spec.key))
+          rt.repartitionByRange(targetFiles, key).sortWithinPartitions(key)
+        else if (clusterByKey) rt.repartitionByRange(key).sortWithinPartitions(key)
         else rt
-      Seq(writeFiles(clustered, writeId, log = false)
-        .copy(remove = live.map(_.path)))
+      Seq(writeFiles(s, clustered, writeId, log = false)
+        .copy(remove = s.live.map(_.path)))
     }
-  }
+
+  /** `s`, or on MoR with outstanding logs the table after [[compact]]ing
+    * them in a commit of their own (see [[delete]] for why). A conflict
+    * on either commit reruns the caller's whole attempt. */
+  private def foldedLogs(s: Snapshot): Snapshot =
+    if (s.spec.mor && s.live.exists(_.log)) { compactAt(s); snapshot() } else s
 
   /** Multi-dimensional clustering rewrite — Delta `OPTIMIZE ZORDER BY`
     * analog for 2-3 numeric columns: each dimension is bucketed into
@@ -1411,10 +1393,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * clustered columns — the property a 100 TB table needs when queries
     * filter on more than the record key. */
   def zorder(cols: Seq[String], targetFiles: Int = 0, bitsPerDim: Int = 8,
-      incremental: Boolean = false): LakeTable = retrying {
+      incremental: Boolean = false): LakeTable = retrying { s =>
     require(cols.size >= 2 && cols.size <= 3, "zorder needs 2-3 columns (1-D: compact(clusterByKey))")
-    cols.foreach(c => require(schema.fieldNames.contains(c), s"no column $c"))
-    val all = liveFiles(None)
+    cols.foreach(c => require(s.schema.fieldNames.contains(c), s"no column $c"))
     // incremental (liquid-clustering style): re-cluster ONLY files that no
     // prior zorder produced — cost ∝ data added since the last clustering,
     // never ∝ table size. Already-clustered files keep their tight
@@ -1422,12 +1403,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // batch gets its own. A file's provenance is its write-id's commit
     // operation — pure commit-log metadata.
     val live =
-      if (!incremental) all
+      if (!incremental) s.live
       else {
-        require(!all.exists(_.log),
+        require(!s.live.exists(_.log),
           "incremental zorder needs MoR logs folded first (run compact())")
-        val opOf: Map[Long, String] = commits.map(c => c.version -> c.operation).toMap
-        all.filterNot { a =>
+        val opOf: Map[Long, String] = s.history.map(c => c.version -> c.operation).toMap
+        s.live.filterNot { a =>
           val head = a.path.takeWhile(_ != '/')
           head.startsWith(s"$WRITE_ID=") &&
             head.drop(WRITE_ID.length + 1).toLongOption
@@ -1436,8 +1417,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         }
       }
     if (incremental && live.isEmpty) return this // nothing new to cluster
-    writeCommit(if (incremental) "zorder_incremental" else "zorder") { (writeId, _) =>
-      val rt = mergedRewrite(live)
+    writeCommit(s, if (incremental) "zorder_incremental" else "zorder") { (writeId, _) =>
+      val rt = mergedRewrite(live, s.shape)
       val aggExprs = cols.flatMap(c =>
         Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
       val bounds = rt.agg(aggExprs.head, aggExprs.tail: _*).collect()(0)
@@ -1466,7 +1447,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
          else tagged.repartitionByRange(col(zc)))
           .sortWithinPartitions(col(zc))
           .drop(zc)
-      Seq(writeFiles(clustered, writeId, log = false)
+      Seq(writeFiles(s, clustered, writeId, log = false)
         .copy(remove = live.map(_.path)))
     }
   }
@@ -1476,16 +1457,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * into consolidated files, leaving right-sized files untouched (compact
     * rewrites everything). MoR log files are left to `compact`. */
   def optimize(smallFileBytes: Long = 64L * 1024 * 1024,
-      partitionFilter: Option[String => Boolean] = None): LakeTable = retrying {
-    val all = liveFiles(None)
+      partitionFilter: Option[String => Boolean] = None): LakeTable = retrying { s =>
     // MoR with outstanding logs: rewriting base files would give them a
     // newer write-id than the logs and flip precombine-TIE resolution at
     // read (log must beat base for equal precombine) — compact instead,
     // which folds the logs and reaches the same small-file goal.
-    if (spec.mor && all.exists(_.log)) {
+    if (s.spec.mor && s.live.exists(_.log)) {
       require(partitionFilter.isEmpty,
         "partition-scoped OPTIMIZE needs the MoR logs folded first (run compact())")
-      return compact()
+      return compactAt(s)
     }
     val fs = new Path(dataDir).getFileSystem(conf)
     // external references (shallow clone / convert) are not concatenation
@@ -1493,20 +1473,20 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // A partition filter (Delta `OPTIMIZE t WHERE part = …`) scopes the
     // concatenation to matching partitions — commit-log metadata only,
     // nothing outside the named partitions is listed or rewritten.
-    val small = all.filterNot(_.log).filter(_.base.isEmpty)
+    val small = s.live.filterNot(_.log).filter(_.base.isEmpty)
       // era guard: a partition-scoped OPTIMIZE matches files against the
       // CURRENT partition column — an old-era file's stored value belongs
       // to a different column, so it never matches (compact() migrates it)
       .filter(a => partitionFilter.forall(f =>
-        partitionColOf(a) == spec.partition && a.partitionValue.exists(f)))
+        partitionColOf(a) == s.spec.partition && a.partitionValue.exists(f)))
       .filter { a =>
         fs.getFileStatus(new Path(s"$dataDir/${a.path}")).getLen < smallFileBytes
       }
     if (small.size < 2) return this // nothing to concatenate
-    writeCommit("optimize") { (writeId, _) =>
-      val rows = readFiles(small, shapeAt(None)).drop("_file_name")
+    writeCommit(s, "optimize") { (writeId, _) =>
+      val rows = readFiles(small, s.shape).drop("_file_name")
         .coalesce(math.max(1, small.size / 8))
-      Seq(writeFiles(rows, writeId, log = false)
+      Seq(writeFiles(s, rows, writeId, log = false)
         .copy(remove = small.map(_.path)))
     }
   }
@@ -1520,7 +1500,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     postImages(window(sinceVersion, asOf))
 
   private def postImages(w: CommitWindow): DataFrame = {
-    val sh = w.shape
+    val sh = w.end.shape
     // PHYSICAL-ONLY window (a compaction/zorder landing as its own
     // streaming micro-batch): every added file carries only pre-existing
     // rows, so the post-image set is empty by metadata proof. Without
@@ -1536,7 +1516,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // files carry no post-images (MoR deletes are not surfaced, like
     // Hudi's incremental view) but LIVE tombstones must still suppress
     // post-images of rows they killed.
-    val live = w.liveUpTo
+    val live = w.end.live
     val livePaths = live.map(_.path).toSet
     val files = w.added.filter(a => livePaths.contains(a.path) && !a.tombstone)
     val df = withJoinIds(readFiles(files, sh, keepWriteId = true), sh)
@@ -1579,7 +1559,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   def changes(since: Long, asOf: Option[Long] = None,
       includePreimages: Boolean = false): DataFrame = {
     val w = window(since, asOf)
-    val sh = w.shape
+    val sh = w.end.shape
     val post = postImages(w)
     // physical-only window: no inserts, no updates, no deletes — empty
     // by metadata proof, skipping the rewritten/now key scans entirely
@@ -1591,7 +1571,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // null-safe PID join id plus the raw columns (delete rows carry both)
     def ids(df: DataFrame): DataFrame =
       withJoinIds(df, sh).select((sh.idCols ++ sh.spec.partition.map(_ => PID)).map(col): _*)
-    val rewrittenRows = readFiles(w.removedLive, w.sinceShape)
+    val rewrittenRows = readFiles(w.removedLive, w.start.shape)
     val rewrittenKeys = ids(rewrittenRows)
     val logKeys = {
       val fresh = readFiles(w.added.filterNot(_.log), sh)
@@ -1618,7 +1598,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         preIds.select(sh.idCols.map(col): _*).filter(lit(false))
           .withColumn("_change_type", lit("delete"))
       else {
-        val liveNow = w.liveUpTo
+        val liveNow = w.end.live
         val liveNowPaths = liveNow.map(_.path).toSet
         // "still alive at asOf": rows of the window's added live files minus
         // tombstone files, with tombstone-killed rows filtered — a key whose
@@ -1663,7 +1643,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * rule in [[writeCommit]] applies unchanged. */
   private[lake] def bumpTxn(expectedVersion: Long,
       txnMany: Map[String, Long]): LakeTable =
-    writeCommit("cursor_bump", expectedVersion = Some(expectedVersion),
+    writeCommit(snapshot(Some(expectedVersion)), "cursor_bump",
       txnMany = txnMany) { (_, _) => Seq.empty }
 
   /** Net row delta of a CoW table over the window `(since, upTo]`, as two
@@ -1686,13 +1666,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * cancellation — the MoR delta instead diffs the two MERGED snapshots
     * restricted to the window's touched record identities. */
   private[graft] def windowDelta(w: CommitWindow): (DataFrame, DataFrame) = {
-    val sh = w.shape
+    val sh = w.end.shape
     if (w.physicalOnly || (w.added.isEmpty && w.removedLive.isEmpty)) {
       val empty = readFiles(Nil, sh)
       (empty, empty)
     } else if (sh.spec.mor) windowDeltaMor(w)
     else {
-      val liveUp = w.liveUpTo.map(_.path).toSet
+      val liveUp = w.end.live.map(_.path).toSet
       (readFiles(w.added.filter(a => liveUp.contains(a.path) && !a.log && !a.tombstone), sh),
         readFiles(w.removedLive, sh))
     }
@@ -1719,7 +1699,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * scans whose carried rows cancel — the same cost CoW pays for a
     * full-rewrite window. */
   private def windowDeltaMor(w: CommitWindow): (DataFrame, DataFrame) = {
-    val sh = w.shape
+    val sh = w.end.shape
     val touchedActs = (w.added ++ w.removedLive).groupBy(_.path).map(_._2.head).toSeq
     // recomputed per side (window files are churn-sized); not cached — a
     // lazily-consumed delta must not leak a persisted plan
@@ -1733,11 +1713,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val baseFilters =
       if (sample.length > LakeTable.MOR_DELTA_KEY_CAP || sample.contains(null)) Nil
       else Seq(org.apache.spark.sql.sources.In(sh.spec.key, sample))
-    def side(live: Seq[FileAction], at: Shape): DataFrame =
-      withJoinIds(realtimePruned(live, at, baseFilters, identity), sh)
+    def side(at: Snapshot): DataFrame =
+      withJoinIds(realtimePruned(at, baseFilters), sh)
         .join(touchedKeys, sh.joinIdCols, "left_semi")
         .drop(PID)
-    (side(w.liveUpTo, sh), side(w.liveSince, w.sinceShape))
+    (side(w.end), side(w.start))
   }
 
   /** Delta `GENERATE symlink_format_manifest` analog: write text manifests
@@ -1896,33 +1876,34 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * window, so `read(Some(v))` / `restore(v)` keep working for as long
     * as the pin exists. Metadata-only commit; the pin set rides the
     * commit log denormalized (like `txn`), OCC-safe. */
-  def savepoint(v: Long): LakeTable = retrying {
-    require(v >= 0 && v <= latestVersion, s"no version $v to savepoint")
-    val cur = latestCommit.savepoints
+  def savepoint(v: Long): LakeTable = retrying { s =>
+    require(v >= 0 && v <= s.version, s"no version $v to savepoint")
+    val cur = s.commit.savepoints
     if (cur.contains(v)) return this
-    writeCommit("savepoint", savepoints = Some((cur :+ v).sorted)) { (_, _) => Seq.empty }
+    writeCommit(s, "savepoint", savepoints = Some((cur :+ v).sorted)) { (_, _) => Seq.empty }
   }
 
   /** Drop a savepoint pin: the version's files become reclaimable the
     * moment they leave the normal retention window. */
-  def releaseSavepoint(v: Long): LakeTable = retrying {
-    val cur = latestCommit.savepoints
+  def releaseSavepoint(v: Long): LakeTable = retrying { s =>
+    val cur = s.commit.savepoints
     require(cur.contains(v), s"no savepoint at version $v")
-    writeCommit("release_savepoint",
+    writeCommit(s, "release_savepoint",
       savepoints = Some(cur.filterNot(_ == v))) { (_, _) => Seq.empty }
   }
 
   /** Currently pinned versions. */
-  def savepoints: Seq[Long] = latestCommit.savepoints
+  def savepoints: Seq[Long] = snapshot().commit.savepoints
 
   def vacuum(retainVersions: Int = 1, retainHours: Option[Double] = None,
       orphanGraceHours: Double = 1.0, dryRun: Boolean = false): Seq[String] = {
-    val latest = latestVersion
+    val s = snapshot()
+    val latest = s.version
     val horizon = retainHours match {
       case Some(h) =>
         // commit times are fixed-width UTC "yyyyMMddHHmmssSSS": lexicographic
         // order == chronological, so the cutoff is a string compare
-        val cs = commits
+        val cs = s.history
         val latestTime = java.time.LocalDateTime.parse(
           cs.map(_.commitTime).max, LakeTable.TIME_FMT)
         val cutoff = latestTime.minusNanos((h * 3600e9).toLong).format(LakeTable.TIME_FMT)
@@ -1931,8 +1912,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       case None => math.max(0L, latest - (retainVersions - 1))
     }
     // savepointed snapshots survive regardless of the retention window
-    val pinned = latestCommit.savepoints.filter(v => v >= 0 && v < horizon)
-    val retained = ((horizon to latest) ++ pinned).map(v => liveFiles(Some(v)))
+    val pinned = s.commit.savepoints.filter(v => v >= 0 && v < horizon)
+    val retained = ((horizon to latest) ++ pinned).map(v => s.at(v).live)
     val keep: Set[String] = retained.flatten.map(_.path).toSet
     // DV sidecar dirs referenced by any retained snapshot must survive;
     // relative refs only (absolute ones belong to another table)
@@ -1943,7 +1924,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // an attempt dir — possibly a CONCURRENT writer's in-flight files, so
     // it only goes once it is older than the orphan grace (multi-writer
     // safety; the same reason Delta vacuums with a retention check).
-    val allAdds = commits.flatMap(_.add)
+    val allAdds = s.history.flatMap(_.add)
     val everAdded: Set[String] =
       allAdds.filter(_.base.isEmpty).map(_.path).toSet
     val everDv: Set[String] =
@@ -2007,8 +1988,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * count. `dryRun` reports without committing. Returns the dropped
     * references. History is untouched — time travel to versions whose
     * files still exist keeps working. */
-  def repair(dryRun: Boolean = false): Seq[String] = retrying {
-    val live = liveFiles(None)
+  def repair(dryRun: Boolean = false): Seq[String] = retrying { s =>
     val dirCache = scala.collection.mutable.HashMap.empty[String, Set[String]]
     def names(dir: Path): Set[String] = dirCache.getOrElseUpdate(dir.toString, {
       val f = dir.getFileSystem(conf)
@@ -2019,10 +1999,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     def dvIntact(a: FileAction): Boolean = a.dv.forall { d =>
       names(new Path(dvRoot(d))).exists(_.endsWith(".parquet"))
     }
-    val missing = live.filter(a =>
+    val missing = s.live.filter(a =>
       !present(new Path(s"${a.base.getOrElse(dataDir)}/${a.path}")) || !dvIntact(a))
     if (missing.nonEmpty && !dryRun)
-      writeCommit("fsck") { (_, _) =>
+      writeCommit(s, "fsck") { (_, _) =>
         Seq(WriteResult(Seq.empty, missing.map(_.path)))
       }
     missing.map(_.path)
@@ -2045,14 +2025,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     CommitLog.invalidateTable(targetPath)
     // a source file that is itself external (clone of a clone / of a
     // converted table) keeps its own base
-    val refs = liveFiles(asOf).map(a => a.copy(
+    val s = snapshot(asOf)
+    val refs = s.live.map(a => a.copy(
       base = a.base.orElse(Some(dataDir)),
       // DV refs cross the table boundary too: absolutize relative ones
       dv = a.dv.map(dvRoot)))
-    val bootVersion = asOf.getOrElse(latestVersion)
+    val bootVersion = asOf.getOrElse(s.version)
     CommitLog.write(targetPath,
       Commit(bootVersion, LakeTable.commitTimeNow(), "clone",
-        schemaAt(asOf).json, spec, refs, Seq.empty,
+        s.schema.json, spec, refs, Seq.empty,
         // identity never restarts on a clone: carry the source's marks
         identityHigh = CommitLog.read(path, bootVersion, conf).identityHigh), conf)
     new LakeTable(spark, targetPath)
@@ -2078,12 +2059,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     require(CommitLog.latestVersion(targetPath, conf).isEmpty,
       s"table exists at $targetPath")
     CommitLog.invalidateTable(targetPath)
-    val live = liveFiles(asOf)
-    val snapSchema = schemaAt(asOf)
-    val snapSpec = specAt(asOf)
-    val uniform = live.forall(a =>
+    val s = snapshot(asOf)
+    val snapSchema = s.schema
+    val snapSpec = s.spec
+    val uniform = s.live.forall(a =>
       a.base.isEmpty && a.dv.isEmpty && a.path.startsWith(s"$WRITE_ID=")) && {
-      val versions = live.map(_.path.takeWhile(_ != '/').drop(WRITE_ID.length + 1))
+      val versions = s.live.map(_.path.takeWhile(_ != '/').drop(WRITE_ID.length + 1))
         .flatMap(_.toLongOption).map(_ / LakeTable.WRITE_SLOTS).distinct
       versions.map(v => CommitLog.read(path, v, conf).schemaJson).distinct
         .forall(_ == snapSchema.json)
@@ -2103,14 +2084,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       // (and the source's high-water marks), they are not re-drawn
       return LakeTable.create(spark, targetPath, clean, data, bulkInsert = true,
         presetIdentityHigh =
-          CommitLog.read(path, asOf.getOrElse(latestVersion), conf).identityHigh)
+          CommitLog.read(path, asOf.getOrElse(s.version), conf).identityHigh)
     }
     val version = 0L
     val wid = version * LakeTable.WRITE_SLOTS
     val widDir = s"$WRITE_ID=$wid"
     // new leaf names carry a per-file ordinal: two source write dirs may
     // hold identically-named part files, and the copies share one dir
-    val copies = live.zipWithIndex.map { case (a, i) =>
+    val copies = s.live.zipWithIndex.map { case (a, i) =>
       val relNoV = a.path.dropWhile(_ != '/').drop(1)
       val (dirs, leaf) = relNoV.lastIndexOf('/') match {
         case -1 => ("", relNoV)
@@ -2146,8 +2127,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     CommitLog.write(targetPath,
       Commit(version, LakeTable.commitTimeNow(), "deepClone",
         snapSchema.json, snapSpec, adds, Seq.empty,
-        identityHigh = CommitLog.read(path,
-          asOf.getOrElse(latestVersion), conf).identityHigh), conf)
+        identityHigh = CommitLog.read(path, asOf.getOrElse(s.version), conf).identityHigh),
+      conf)
     new LakeTable(spark, targetPath)
   }
 
@@ -2172,19 +2153,20 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * the restore as row changes (its rows predate the window) — after a
     * restore, downstream consumers should re-sync from a snapshot, as with
     * Delta's RESTORE + CDF. */
-  def restore(v: Long): LakeTable = retrying {
-    require(v >= 0 && v <= latestVersion, s"no version $v to restore")
-    val target = liveFiles(Some(v))
+  def restore(v: Long): LakeTable = retrying { s =>
+    require(v >= 0 && v <= s.version, s"no version $v to restore")
+    val old = s.at(v)
+    val target = old.live
     val targetPaths = target.map(_.path).toSet
-    val current = liveFiles(None).map(_.path).toSet
+    val current = s.live.map(_.path).toSet
     // restoring across a partition evolution also restores the partition
     // SPEC — the restored files carry that era's layout, and new writes
     // should land beside them, not under a layout the snapshot predates
     val restoredSpec =
-      if (specAt(Some(v)).partition != spec.partition)
-        Some(spec.copy(partition = specAt(Some(v)).partition))
+      if (old.spec.partition != s.spec.partition)
+        Some(s.spec.copy(partition = old.spec.partition))
       else None
-    writeCommit("restore", newSchema = Some(schemaAt(Some(v))),
+    writeCommit(s, "restore", newSchema = Some(old.schema),
       newSpec = restoredSpec) { (_, _) =>
       Seq(WriteResult(
         add = target.filterNot(a => current.contains(a.path)),
@@ -2218,8 +2200,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * place) refuse: those files' physical columns aren't described by a
     * commit schema, so "absent" would be a guess. */
   def addColumns(fields: Seq[StructField],
-      defaults: Map[String, String]): LakeTable = retrying {
-    val declared = schema
+      defaults: Map[String, String]): LakeTable = retrying { s =>
+    val declared = s.schema
     val dup = fields.map(_.name).filter(n => declared.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(dup.isEmpty, s"columns already exist: ${dup.mkString(",")}")
     defaults.keys.foreach { c =>
@@ -2227,7 +2209,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         s"DEFAULT given for '$c', which is not among the added columns")
     }
     if (defaults.nonEmpty) {
-      require(liveFiles(None).forall(_.base.isEmpty),
+      require(s.live.forall(_.base.isEmpty),
         "existence defaults need per-file commit schemas; this table has " +
           "foreign-base files (clone/convert) whose columns are undeclared")
       // the default must be a constant: evaluate it once now, loudly
@@ -2236,7 +2218,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         spark.range(1).select(expr(e).cast(dt)).head()
       }
     }
-    val used = usedPhysicalNames
+    val used = usedPhysicalNames(s)
     val remap = fields.flatMap { f =>
       if (!used.contains(f.name)) None
       else {
@@ -2247,11 +2229,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }.toMap
     val newSpec0 =
       if (remap.isEmpty && defaults.isEmpty) None
-      else Some(spec.copy(
-        columnMap = spec.columnMap ++ remap,
-        defaults = spec.defaults ++ defaults,
-        existenceDefaults = spec.existenceDefaults ++ defaults))
-    writeCommit("evolve",
+      else Some(s.spec.copy(
+        columnMap = s.spec.columnMap ++ remap,
+        defaults = s.spec.defaults ++ defaults,
+        existenceDefaults = s.spec.existenceDefaults ++ defaults))
+    writeCommit(s, "evolve",
       newSchema = Some(StructType(declared.fields ++ fields.map(_.copy(nullable = true)))),
       newSpec = newSpec0) {
       (_, _) => Seq.empty
@@ -2260,8 +2242,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** Every PHYSICAL parquet field name any version of this table ever
     * wrote or declared — the collision set for fresh-name assignment. */
-  private def usedPhysicalNames: Set[String] =
-    commits.flatMap { c =>
+  private def usedPhysicalNames(s: Snapshot): Set[String] =
+    s.history.flatMap { c =>
       val fields = DataType.fromJson(c.schemaJson).asInstanceOf[StructType].fieldNames
       fields.map(f => c.spec.columnMap.getOrElse(f, f)) ++ c.spec.columnMap.values
     }.toSet
@@ -2272,7 +2254,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * references columns by name in SQL text. All would silently break
     * under a rename, so they are rejected (Delta blocks these the same
     * way). */
-  private def requireMappable(n: String, op: String): Unit = {
+  private def requireMappable(spec: TableSpec, n: String, op: String): Unit = {
     require(!n.equalsIgnoreCase(spec.key) && !n.equalsIgnoreCase(spec.precombine),
       s"cannot $op the key/precombine column '$n'")
     require(!spec.partition.exists(_.equalsIgnoreCase(n)),
@@ -2294,17 +2276,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * column map pins the new logical name to the column's original
     * physical field, so not a byte of data moves. Time travel before the
     * rename still surfaces the old name. */
-  def renameColumn(oldName: String, newName: String): LakeTable = retrying {
-    val declared = schema
+  def renameColumn(oldName: String, newName: String): LakeTable = retrying { s =>
+    val declared = s.schema
     require(declared.fieldNames.contains(oldName), s"no column '$oldName'")
     require(!declared.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column '$newName' already exists")
-    requireMappable(oldName, "rename")
-    val phys = spec.physical(oldName)
+    requireMappable(s.spec, oldName, "rename")
+    val phys = s.spec.physical(oldName)
     val renamed = StructType(declared.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    writeCommit("rename_column", newSchema = Some(renamed),
-      newSpec = Some(spec.copy(columnMap = spec.columnMap - oldName + (newName -> phys)))) {
+    writeCommit(s, "rename_column", newSchema = Some(renamed),
+      newSpec = Some(s.spec.copy(columnMap = s.spec.columnMap - oldName + (newName -> phys)))) {
       (_, _) => Seq.empty
     }
   }
@@ -2314,14 +2296,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * unreferenced (and time-travelable), exactly like Delta's drop under
     * column mapping. Re-adding the same name later maps to a fresh
     * physical field ([[addColumns]]), never the dropped data. */
-  def dropColumn(name: String): LakeTable = retrying {
-    val declared = schema
+  def dropColumn(name: String): LakeTable = retrying { s =>
+    val declared = s.schema
     require(declared.fieldNames.contains(name), s"no column '$name'")
     require(declared.fields.length > 1, "cannot drop the last column")
-    requireMappable(name, "drop")
-    writeCommit("drop_column",
+    requireMappable(s.spec, name, "drop")
+    writeCommit(s, "drop_column",
       newSchema = Some(StructType(declared.fields.filterNot(_.name == name))),
-      newSpec = Some(spec.copy(columnMap = spec.columnMap - name))) {
+      newSpec = Some(s.spec.copy(columnMap = s.spec.columnMap - name))) {
       (_, _) => Seq.empty
     }
   }
@@ -2342,17 +2324,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * The record key of a BUCKETED table refuses: `hash(5)` ≠ `hash(5L)`
     * in Spark's Murmur3, so widening would silently re-bucket new writes
     * away from existing rows. */
-  def widenColumn(name: String, to: DataType): LakeTable = retrying {
-    val declared = schema
+  def widenColumn(name: String, to: DataType): LakeTable = retrying { s =>
+    val declared = s.schema
     require(declared.fieldNames.contains(name), s"no column '$name'")
-    require(!spec.identity.keys.exists(_.equalsIgnoreCase(name)),
+    require(!s.spec.identity.keys.exists(_.equalsIgnoreCase(name)),
       s"cannot widen identity column '$name'")
-    require(spec.buckets == 0 || !name.equalsIgnoreCase(spec.key),
+    require(s.spec.buckets == 0 || !name.equalsIgnoreCase(s.spec.key),
       "cannot widen the record key of a bucketed table: the bucket hash is type-dependent")
     val from = declared(name).dataType
     require(LakeTable.widens(from, to),
       s"ALTER COLUMN $name TYPE: ${from.simpleString} -> ${to.simpleString} is not a lossless widening")
-    writeCommit("widen_column",
+    writeCommit(s, "widen_column",
       newSchema = Some(StructType(declared.fields.map(f =>
         if (f.name == name) f.copy(dataType = to) else f)))) { (_, _) => Seq.empty }
   }
@@ -2374,8 +2356,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * appended to the declared schema (additive evolution only — drops and
     * type changes are not supported). Returns the conformed batch and the
     * widened schema when evolution happened. */
-  private def conform(df0: DataFrame, mergeSchema: Boolean = false): (DataFrame, Option[StructType]) = {
-    if (latestVersion < 0) return (df0, None)
+  private def conform(s: Snapshot, df0: DataFrame,
+      mergeSchema: Boolean = false): (DataFrame, Option[StructType]) = {
+    val spec = s.spec
     // bucketed tables: (re)stamp the stored bucket id from the key — always
     // recomputed, so a caller-supplied value can never mis-place a row.
     // Hash at the DECLARED key type: Murmur3(Int) != Murmur3(Long), and
@@ -2385,7 +2368,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // bucket pruning disagree — silent missing rows on point lookups.
     val dfB =
       if (spec.buckets > 0) {
-        val keyExpr = schema.fields.find(_.name.equalsIgnoreCase(spec.key))
+        val keyExpr = s.schema.fields.find(_.name.equalsIgnoreCase(spec.key))
           .map(f => col(spec.key).cast(f.dataType)).getOrElse(col(spec.key))
         df0.withColumn(TableSpec.BUCKET_COL,
           pmod(hash(keyExpr), lit(spec.buckets)))
@@ -2398,7 +2381,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       if (acc.columns.exists(_.equalsIgnoreCase(c))) acc
       else acc.withColumn(c, expr(e))
     }
-    val declared = schema
+    val declared = s.schema
     val have = df.columns.toSet
     val missing = declared.fieldNames.filterNot(have)
     require(missing.isEmpty, s"incoming batch missing columns: ${missing.mkString(",")}")
@@ -2414,22 +2397,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // a dropped/renamed-away column's physical name must not be
         // silently reused — the old on-disk values would resurface. The
         // addColumns path assigns a fresh physical mapping instead.
-        val retired = usedPhysicalNames -- declared.fieldNames.map(spec.physical)
+        val retired = usedPhysicalNames(s) -- declared.fieldNames.map(spec.physical)
         extras.foreach(f => require(!retired.contains(f.name),
           s"column '${f.name}' was dropped or renamed away; re-add it via addColumns"))
         val widened = StructType(declared.fields ++ extras)
         (df.select(widened.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*),
           Some(widened))
       }
-    checkConstraints(out._1)
+    checkConstraints(s, out._1)
     out
   }
 
   /** Enforce every CHECK constraint over an incoming batch in ONE aggregate
     * pass (SQL CHECK semantics: NULL passes, only definitively-FALSE rows
     * violate). Violations name the constraint, like Delta's error. */
-  private def checkConstraints(df: DataFrame): Unit = {
-    val cons = spec.constraints
+  private def checkConstraints(s: Snapshot, df: DataFrame): Unit = {
+    val cons = s.spec.constraints
     if (cons.isEmpty) return
     val names = cons.keys.toSeq
     val aggs = names.map { n =>
@@ -2445,9 +2428,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** Next-unallocated high-water mark of one identity column: the latest
     * commit's denormalized mark, or `start - step` before any allocation. */
-  private def identityHighOf(c: String): Long =
-    latestCommit.identityHigh.getOrElse(c, {
-      val d = spec.identity(c); d.start - d.step
+  private def identityHighOf(s: Snapshot, c: String): Long =
+    s.commit.identityHigh.getOrElse(c, {
+      val d = s.spec.identity(c); d.start - d.step
     })
 
   /** Stamp every GENERATED ALWAYS AS IDENTITY column onto an incoming
@@ -2475,9 +2458,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * so cost follows the batch and its matching files, never the table.
     * MoR snapshots with live logs look up through the realtime merge (a
     * tombstoned key must re-draw, not resurrect its old id). */
-  private def stampIdentity(df0: DataFrame,
+  private def stampIdentity(s: Snapshot, df0: DataFrame,
       freshForAll: Boolean): (DataFrame, Map[String, Long]) = {
-    val ids = spec.identity
+    val ids = s.spec.identity
     if (ids.isEmpty) return (df0, Map.empty)
     // ALWAYS: a caller-supplied identity column must be absent or all-null
     val supplied = df0.columns.filter(c => ids.keys.exists(_.equalsIgnoreCase(c)))
@@ -2490,25 +2473,26 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       }
       df0.drop(supplied.toSeq: _*)
     }
-    val keys = df.select(col(spec.key)).filter(col(spec.key).isNotNull).distinct()
-    val live = if (freshForAll || latestVersion < 0) Seq.empty else liveFiles(None)
+    val key = s.spec.key
+    val keys = df.select(col(key)).filter(col(key).isNotNull).distinct()
+    val live = if (freshForAll) Seq.empty else s.live
     val existing =
       if (live.isEmpty) None
       else {
-        val src = if (live.exists(_.log)) realtime()
-          else readFiles(pruneCandidates(live, keys), shapeAt(None))
-        val uniq = src.select((spec.key +: ids.keys.toSeq).map(col): _*)
-          .join(keys, Seq(spec.key), "left_semi")
-          .groupBy(spec.key)
+        val src = if (live.exists(_.log)) realtimePruned(s)
+          else readFiles(pruneCandidates(s, keys), s.shape)
+        val uniq = src.select((key +: ids.keys.toSeq).map(col): _*)
+          .join(keys, Seq(key), "left_semi")
+          .groupBy(key)
           .agg(ids.keys.toSeq.map(c => max(col(c)).as(c)).head,
             ids.keys.toSeq.map(c => max(col(c)).as(c)).tail: _*)
         Some(uniq)
       }
     val newKeys = existing.fold(keys)(e =>
-      keys.join(e.select(spec.key), Seq(spec.key), "left_anti"))
+      keys.join(e.select(key), Seq(key), "left_anti"))
     // two-phase deterministic rank of the new keys (md5-of-key order)
     val tagged = newKeys
-      .withColumn("_idh", md5(col(spec.key).cast("string")))
+      .withColumn("_idh", md5(col(key).cast("string")))
       .withColumn("_idb", conv(substring(col("_idh"), 1, 2), 16, 10).cast("int"))
     val perBucket = tagged.groupBy("_idb").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -2516,29 +2500,29 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val offsets = (0 until 256).scanLeft(0L)((acc, b) => acc + perBucket.getOrElse(b, 0L))
     val offsetOf = typedLit((0 until 256).map(b => b -> offsets(b)).toMap)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_idb").orderBy(col("_idh").asc, col(spec.key).asc)
+      .partitionBy("_idb").orderBy(col("_idh").asc, col(key).asc)
     val ranked = tagged.withColumn("_idr",
       row_number().over(w).cast("long") - 1L + element_at(offsetOf, col("_idb")))
       .drop("_idh", "_idb")
-    val highs = ids.map { case (c, _) => c -> identityHighOf(c) }
+    val highs = ids.map { case (c, _) => c -> identityHighOf(s, c) }
     val newIds = ids.foldLeft(ranked) { case (acc, (c, d)) =>
       acc.withColumn(c, lit(highs(c)) + lit(d.step) * (col("_idr") + 1L))
     }.drop("_idr")
     val mapping = existing.fold(newIds)(_.unionByName(newIds))
-    val out = df.join(mapping, Seq(spec.key), "left")
+    val out = df.join(mapping, Seq(key), "left")
     (out, ids.map { case (c, d) => c -> (highs(c) + d.step * total) })
   }
 
   /** Delta `ALTER TABLE … ADD CONSTRAINT name CHECK (sql)`: existing rows
     * must already satisfy the expression; every later write re-validates
     * its batch. Metadata-only commit. */
-  def addConstraint(name: String, sql: String): LakeTable = retrying {
-    require(!spec.constraints.keys.exists(_.equalsIgnoreCase(name)),
+  def addConstraint(name: String, sql: String): LakeTable = retrying { s =>
+    require(!s.spec.constraints.keys.exists(_.equalsIgnoreCase(name)),
       s"constraint $name already exists")
-    val bad = read().filter(!coalesce(expr(sql), lit(true))).limit(1).count()
+    val bad = readAt(s).filter(!coalesce(expr(sql), lit(true))).limit(1).count()
     require(bad == 0, s"existing rows violate CHECK ($sql) — constraint not added")
-    writeCommit("addConstraint",
-      newSpec = Some(spec.copy(constraints = spec.constraints + (name -> sql)))) {
+    writeCommit(s, "addConstraint",
+      newSpec = Some(s.spec.copy(constraints = s.spec.constraints + (name -> sql)))) {
       (_, _) => Seq.empty
     }
   }
@@ -2550,22 +2534,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * Surfaced through DSv2 statistics so Catalyst's CBO estimates join
     * cardinalities — the input multi-fact join reordering needs. Default
     * = every data column; the pass is one job regardless of column count. */
-  def analyze(columns: Seq[String] = Seq.empty): TableStats = retrying {
-    val names = if (columns.nonEmpty) columns else schema.fieldNames.toSeq
+  def analyze(columns: Seq[String] = Seq.empty): TableStats = retrying { s =>
+    val names = if (columns.nonEmpty) columns else s.schema.fieldNames.toSeq
     names.foreach { n =>
-      require(schema.fieldNames.exists(_.equalsIgnoreCase(n)),
+      require(s.schema.fieldNames.exists(_.equalsIgnoreCase(n)),
         s"ANALYZE: no such column '$n'")
     }
     val aggs = names.flatMap { n =>
       Seq(approx_count_distinct(col(n)).as(s"ndv_$n"),
         coalesce(sum(when(col(n).isNull, 1L).otherwise(0L)), lit(0L)).as(s"nulls_$n"))
     }
-    val row = read().agg(count(lit(1)).as("rows"), aggs: _*).head()
+    val row = readAt(s).agg(count(lit(1)).as("rows"), aggs: _*).head()
     val cols = names.zipWithIndex.map { case (n, i) =>
       n -> ColumnStatValues(row.getLong(1 + 2 * i), row.getLong(2 + 2 * i))
     }.toMap
     val ts = TableStats(row.getLong(0), cols)
-    writeCommit("analyze", tableStats = Some(ts)) { (_, _) => Seq.empty }
+    writeCommit(s, "analyze", tableStats = Some(ts)) { (_, _) => Seq.empty }
     ts
   }
 
@@ -2588,17 +2572,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * partition, buckets, mor) define the table's layout and are rejected.
     * Unknown properties are rejected loudly — a typo must not silently
     * no-op a maintenance policy. */
-  def setProperties(props: Map[String, String]): LakeTable = retrying {
-    val next = props.foldLeft(spec) { case (s, (k, v)) =>
+  def setProperties(props: Map[String, String]): LakeTable = retrying { s =>
+    val next = props.foldLeft(s.spec) { case (sp, (k, v)) =>
       k.toLowerCase match {
-        case "autocompactfiles" => s.copy(autoCompactFiles = v.toInt)
-        case "autocompactlogs" => s.copy(autoCompactLogs = v.toInt)
-        case "bloombitsperkey" => s.copy(bloomBitsPerKey = v.toInt)
-        case "statscolumns" => s.copy(statsColumns =
+        case "autocompactfiles" => sp.copy(autoCompactFiles = v.toInt)
+        case "autocompactlogs" => sp.copy(autoCompactLogs = v.toInt)
+        case "bloombitsperkey" => sp.copy(bloomBitsPerKey = v.toInt)
+        case "statscolumns" => sp.copy(statsColumns =
           v.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        case "bloomcolumns" => s.copy(bloomColumns =
+        case "bloomcolumns" => sp.copy(bloomColumns =
           v.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        case "writesortcolumns" => s.copy(writeSortColumns =
+        case "writesortcolumns" => sp.copy(writeSortColumns =
           v.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         case "key" | "precombine" | "partition" | "buckets" | "mor" =>
           throw new UnsupportedOperationException(
@@ -2609,15 +2593,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             "writeSortColumns)")
       }
     }
-    writeCommit("setProperties", newSpec = Some(next)) { (_, _) => Seq.empty }
+    writeCommit(s, "setProperties", newSpec = Some(next)) { (_, _) => Seq.empty }
   }
 
   /** Drop a named CHECK constraint (metadata-only commit). */
-  def dropConstraint(name: String): LakeTable = retrying {
-    require(spec.constraints.keys.exists(_.equalsIgnoreCase(name)), s"no constraint $name")
-    writeCommit("dropConstraint",
-      newSpec = Some(spec.copy(
-        constraints = spec.constraints.filterNot(_._1.equalsIgnoreCase(name))))) {
+  def dropConstraint(name: String): LakeTable = retrying { s =>
+    require(s.spec.constraints.keys.exists(_.equalsIgnoreCase(name)), s"no constraint $name")
+    writeCommit(s, "dropConstraint",
+      newSpec = Some(s.spec.copy(
+        constraints = s.spec.constraints.filterNot(_._1.equalsIgnoreCase(name))))) {
       (_, _) => Seq.empty
     }
   }
@@ -2645,13 +2629,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * partition value, so it could not kill base rows under the new
     * identity) — compact() first. Bucketed tables refuse (buckets ARE
     * the layout). */
-  def changePartition(newPartition: Option[String]): LakeTable = retrying {
+  def changePartition(newPartition: Option[String]): LakeTable = retrying { s =>
+    val spec = s.spec
     require(spec.buckets == 0,
       "a bucketed table's layout is its buckets — cannot re-partition")
     require(newPartition.map(_.toLowerCase) != spec.partition.map(_.toLowerCase),
       s"table is already partitioned ${spec.partition.fold("flat")(p => s"by $p")}")
     val resolved = newPartition.map { p0 =>
-      val f = schema.fields.find(_.name.equalsIgnoreCase(p0)).getOrElse(
+      val f = s.schema.fields.find(_.name.equalsIgnoreCase(p0)).getOrElse(
         throw new IllegalArgumentException(s"no column $p0 to partition by"))
       require(spec.physical(f.name) == f.name,
         s"cannot partition by renamed (column-mapped) column ${f.name}: " +
@@ -2661,10 +2646,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         s"cannot partition by ${f.name}: ${f.dataType.simpleString} has no dir encoding")
       f.name
     }
-    require(!liveFiles(None).exists(_.log),
+    require(!s.live.exists(_.log),
       "partition evolution with outstanding MoR log/tombstone files would " +
         "orphan their era's record identity — run compact() first")
-    writeCommit("changePartitioning",
+    writeCommit(s, "changePartitioning",
       newSpec = Some(spec.copy(partition = resolved))) { (_, _) => Seq.empty }
   }
 
@@ -2672,18 +2657,16 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * broken by a deterministic row hash so re-runs are stable. NULL record
     * keys fail loudly (Hudi errors too) — the group-by would otherwise
     * silently collapse all null-key rows into one. */
-  private def dedupBatch(df: DataFrame): DataFrame = {
-    val sh = shapeAt(None)
-    dedupLatest(checkedKeys(df), sh.idCols, sh.spec.precombine,
+  private def dedupBatch(s: Snapshot, df: DataFrame): DataFrame =
+    dedupLatest(checkedKeys(s, df), s.shape.idCols, s.spec.precombine,
       xxhash64(df.columns.map(col): _*))
-  }
 
   /** The loud null-record-key guard from [[dedupBatch]], standalone: the
     * upsert paths apply it to the RAW batch (the within-batch dedup is
     * folded downstream, but a null key must still fail on every path). */
-  private def checkedKeys(df: DataFrame): DataFrame =
-    df.filter(assert_true(col(spec.key).isNotNull,
-      lit(s"null record key '${spec.key}' in incoming batch")).isNull)
+  private def checkedKeys(s: Snapshot, df: DataFrame): DataFrame =
+    df.filter(assert_true(col(s.spec.key).isNotNull,
+      lit(s"null record key '${s.spec.key}' in incoming batch")).isNull)
 
   /** Is this batch plan scan-shaped — projections/filters/unions over
     * leaves, no shuffle/join/aggregate? Re-evaluating such a plan per
@@ -2703,13 +2686,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }.isEmpty
   }
 
-  private def stampMeta(df: DataFrame, commitTime: String): DataFrame = {
-    val partPath = spec.partition.map(p => col(p).cast(StringType)).getOrElse(lit(""))
+  private def stampMeta(s: Snapshot, df: DataFrame, commitTime: String): DataFrame = {
+    val partPath = s.spec.partition.map(p => col(p).cast(StringType)).getOrElse(lit(""))
     df.withColumn("_commit_time", lit(commitTime))
       .withColumn("_commit_seqno",
         concat_ws("_", lit(commitTime), spark_partition_id().cast(StringType),
           monotonically_increasing_id().cast(StringType)))
-      .withColumn("_record_key", col(spec.key).cast(StringType))
+      .withColumn("_record_key", col(s.spec.key).cast(StringType))
       .withColumn("_partition_path", partPath)
   }
 
@@ -2717,7 +2700,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * partition-value equality and key-range overlap, compared in key space
     * and only for exactly-formattable types (numeric/string) — skipping a
     * prune is always safe, applying a wrong one never is. */
-  private def pruneCandidates(live: Seq[FileAction], incoming: DataFrame): Seq[FileAction] = {
+  private def pruneCandidates(s: Snapshot, incoming: DataFrame): Seq[FileAction] = {
+    val (live, spec, schema) = (s.live, s.spec, s.schema)
     if (live.isEmpty) return live
     val keyType = schema(spec.key).dataType
     val exact = Set[DataType](ByteType, ShortType, IntegerType, LongType, StringType)
@@ -2817,8 +2801,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * anything else keeps its files. External/base files never probe
     * (their sidecars live elsewhere — fail-open). */
   private[graft] def bloomSkip(actions: Seq[FileAction],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileAction] = {
+      filters: Seq[org.apache.spark.sql.sources.Filter], sh: Shape): Seq[FileAction] = {
     import org.apache.spark.sql.sources._
+    val spec = sh.spec
     if (spec.bloomColumns.isEmpty || actions.isEmpty || filters.isEmpty) return actions
     def conjuncts(f: Filter): Seq[Filter] = f match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -2866,16 +2851,18 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * observability for the stats/bloom pruning stages. */
   private[graft] var lastPrunedCandidates: Int = -1
 
-  /** Run a commit: `body(version, commitTime)` returns per-write FileActions
-    * bundles (add+remove); data files land before the commit JSON does. */
-  /** One optimistic-concurrency ATTEMPT: snapshot the version, run `body`
-    * (which writes data files under this attempt's unique write-id), then
-    * claim the version file atomically. A concurrent writer claiming it
-    * first surfaces as [[CommitConflictException]] — this attempt's data
-    * files are dropped and the exception propagates to [[retrying]], which
-    * reruns the whole operation against the fresh snapshot (full
-    * serializability: the rerun re-reads everything, so the outcome equals
-    * the ops running serially in commit order).
+  /** Commit one optimistic-concurrency ATTEMPT. The rule: an attempt
+    * reads the table through ONE [[Snapshot]] `s` — everything it decided
+    * was decided on `s` — and claims exactly version `s.version + 1`. `body`
+    * writes the data files (they land before the commit JSON does) and
+    * returns per-write add/remove bundles; then the version file is claimed
+    * atomically. Any commit that landed after `s`, even while `body` ran,
+    * already holds that version, so the claim fails with
+    * [[CommitConflictException]]: this attempt's data files are dropped and
+    * [[retrying]] reruns the whole attempt on a fresh snapshot (full
+    * serializability: the outcome equals the ops running serially in commit
+    * order). A caller that pins its own read version passes
+    * `snapshot(Some(v))` and lets the conflict propagate.
     *
     * `body` receives the attempt's base WRITE-ID (not the version): ids
     * are `version * WRITE_SLOTS + 2*nonce` (+1 for log files), so ids stay
@@ -2887,28 +2874,18 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * when the table has already recorded `appId` at a version >= the given
     * one, the write is a no-op — checked INSIDE the attempt, so a replayed
     * batch racing its duplicate is also suppressed on rebase. */
-  private def writeCommit(operation: String, removeAll: Boolean = false,
+  private def writeCommit(s: Snapshot, operation: String, removeAll: Boolean = false,
       newSchema: Option[StructType] = None, txn: Option[(String, Long)] = None,
       newSpec: Option[TableSpec] = None,
       tableStats: Option[TableStats] = None,
       copyFiles: Seq[String] = Seq.empty,
       identityHigh: Map[String, Long] = Map.empty,
       savepoints: Option[Seq[Long]] = None,
-      expectedVersion: Option[Long] = None,
       txnMany: Map[String, Long] = Map.empty)(
       body: (Long, String) => Seq[WriteResult]): LakeTable = {
-    // one commit-log resolution for everything below (each latestCommit /
-    // latestVersion call re-lists the log directory)
-    val curV = latestVersion
-    if (curV < 0) throw new IllegalStateException("use LakeTable.create")
-    val lc = CommitLog.read(path, curV, conf)
-    // expectedVersion pins the commit at a version the CALLER observed:
-    // any interleaved commit claims expected+1 first, so this attempt's
-    // claim fails with CommitConflictException instead of silently
-    // landing on top of state the caller never read — the primitive a
-    // read-compute-write transaction (e.g. an MV refresh) needs for
-    // true optimistic concurrency at ITS level, not just the write's
-    val version = expectedVersion.map(_ + 1).getOrElse(curV + 1)
+    if (s.version < 0) throw new IllegalStateException("use LakeTable.create")
+    val lc = s.commit
+    val version = s.version + 1
     // multi-watermark idempotence: skip only when EVERY component is
     // already covered (a commit that would advance any one still lands)
     if (txnMany.nonEmpty &&
@@ -2919,19 +2896,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
     val commitTime = LakeTable.commitTimeNow()
     val writeId = freshWriteId(version)
-    val prevLive = if (removeAll) liveFiles(None).map(_.path) else Seq.empty
     val results = body(writeId, commitTime)
-    val schemaJson = newSchema.map(_.json).getOrElse(lc.schemaJson)
-    val txnMap = lc.txn ++ txn.toMap ++ txnMany
-    try {
-      CommitLog.write(path, Commit(version, commitTime, operation, schemaJson,
-        newSpec.getOrElse(spec),
-        results.flatMap(_.add), (prevLive ++ results.flatMap(_.remove)).distinct,
-        txnMap, tableStats, copyFiles,
-        identityHigh = lc.identityHigh ++ identityHigh,
-        savepoints = savepoints.getOrElse(lc.savepoints)), conf)
-    } catch {
-      case c: CommitConflictException =>
+    val prevLive = if (removeAll) s.live.map(_.path) else Seq.empty
+    val c = Commit(version, commitTime, operation,
+      newSchema.map(_.json).getOrElse(lc.schemaJson), newSpec.getOrElse(lc.spec),
+      results.flatMap(_.add), (prevLive ++ results.flatMap(_.remove)).distinct,
+      lc.txn ++ txn.toMap ++ txnMany, tableStats, copyFiles,
+      identityHigh = lc.identityHigh ++ identityHigh,
+      savepoints = savepoints.getOrElse(lc.savepoints))
+    try CommitLog.write(path, c, conf)
+    catch {
+      case conflict: CommitConflictException =>
         // lost the race: drop ONLY the dirs this attempt itself created —
         // i.e. its own write-id dirs (ids in this version's slot range).
         // An attempt can also RE-ADD pre-existing files (restore re-lists
@@ -2943,10 +2918,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           scala.util.Try(fsys.delete(new Path(s"$dataDir/$DV_DIR/${WRITE_ID}=$id"), true))
           scala.util.Try(fsys.delete(claimFile(id), false))
         }
-        throw c
+        throw conflict
     }
-    CommitLog.maybeCheckpoint(path, version, conf)
-    maybeAutoCompact(operation)
+    // the live set after this commit: the snapshot's plus its own actions
+    lazy val liveAfter = CommitLog.replay(s.live, Seq(c))
+    CommitLog.maybeCheckpoint(path, version, conf)(liveAfter)
+    maybeAutoCompact(c.spec, operation, liveAfter)
     this
   }
 
@@ -2965,12 +2942,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * failure — the next write simply re-triggers. Compaction itself runs
     * through the normal retrying OCC path, so concurrent writers stay
     * correct: a loser rebases onto the compacted snapshot. */
-  private def maybeAutoCompact(operation: String): Unit = {
-    val s = spec
+  private def maybeAutoCompact(s: TableSpec, operation: String,
+      live: => Seq[FileAction]): Unit = {
     if ((s.autoCompactFiles <= 0 && s.autoCompactLogs <= 0) ||
       !AUTO_COMPACT_TRIGGERS.contains(operation)) return
     try {
-      val live = liveFiles(None)
       val logs = live.count(_.log)
       val overFiles = s.autoCompactFiles > 0 && live.size > s.autoCompactFiles
       val overLogs = s.autoCompactLogs > 0 && logs > s.autoCompactLogs
@@ -3003,16 +2979,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** Highest idempotent-transaction version recorded for `appId`
     * (Delta `txnAppId`/`txnVersion` analog) — None when never written. */
-  def txnVersion(appId: String): Option[Long] = latestCommit.txn.get(appId)
+  def txnVersion(appId: String): Option[Long] = snapshot().commit.txn.get(appId)
 
-  /** Rerun `f` on commit conflict: each rerun re-reads the table snapshot,
-    * so N racing writers serialize as N successive versions. Bounded —
+  /** Run one write attempt `f` on a fresh [[Snapshot]], rerunning it on
+    * commit conflict, so N racing writers serialize as N successive
+    * versions. Bounded —
     * sustained contention past the cap surfaces as
     * ConcurrentModificationException with the last conflict as cause. */
-  private def retrying[T](f: => T): T = {
+  private def retrying[T](f: Snapshot => T): T = {
     var attempt = 0
     while (true) {
-      try return f
+      try return f(snapshot())
       catch {
         case c: CommitConflictException =>
           attempt += 1
@@ -3031,8 +3008,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * Writes unconditionally — a pre-write `isEmpty` would execute the whole
     * upstream pipeline (dedup shuffle included) a second time; an empty
     * batch just yields zero stat rows and no adds. */
-  private def writeFiles(batch0: DataFrame, writeId: Long, log: Boolean,
+  private def writeFiles(s: Snapshot, batch0: DataFrame, writeId: Long, log: Boolean,
       tombstone: Boolean = false): WriteResult = {
+    val spec = s.spec
     // column mapping: batches arrive with LOGICAL names; files store
     // PHYSICAL names (stable since each column's creation), so every file
     // of the table stays uniform across renames
@@ -3074,7 +3052,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       case Some(p) => writer.partitionBy(p).parquet(target)
       case None => writer.parquet(target)
     }
-    val keyType = schema(spec.key).dataType
+    val keyType = s.schema(spec.key).dataType
     val numericKey = keyType match {
       case _: NumericType => true
       case _ => false
@@ -3112,9 +3090,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val kept0 = adds.filter(_.rows > 0)
     val kept =
       if (log || kept0.isEmpty) kept0
-      else writeSums(target, kept0)
+      else writeSums(spec, target, kept0)
     if ((spec.bloomBitsPerKey > 0 || spec.bloomColumns.nonEmpty) && kept.nonEmpty)
-      writeBlooms(target, kept)
+      writeBlooms(spec, target, kept)
     WriteResult(kept, Seq.empty)
   }
 
@@ -3126,7 +3104,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * practically un-overflowable, so per-file partials re-add to the true
     * total at any scale. Float/double columns are skipped — their sums are
     * order-dependent, so a metadata answer could differ from a scan. */
-  private def writeSums(target: String, adds: Seq[FileAction]): Seq[FileAction] = {
+  private def writeSums(spec: TableSpec, target: String,
+      adds: Seq[FileAction]): Seq[FileAction] = {
     val sumCols = spec.sumColumns.map(spec.physical)
       .filterNot(c => spec.partition.contains(c))
     if (sumCols.isEmpty) return adds
@@ -3167,7 +3146,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * bloom (when `bloomBitsPerKey` > 0, sidecar `<rel>.bf`) plus one per
     * declared [[TableSpec.bloomColumns]] entry (sidecar
     * `<rel>.<physical>.bf`), all accumulated from the same scan. */
-  private def writeBlooms(target: String, adds: Seq[FileAction]): Unit = {
+  private def writeBlooms(spec: TableSpec, target: String, adds: Seq[FileAction]): Unit = {
     val bpk = if (spec.bloomBitsPerKey > 0) spec.bloomBitsPerKey else 10
     val rowsByRel = adds.map(a => (a.path, a.rows)).toMap
     // (physical select column, sidecar suffix)
@@ -3393,12 +3372,13 @@ object LakeTable {
     // spec through the log); the final commit 0 carries the widened schema
     // and the allocated high-water marks. presetIdentityHigh: the rows
     // already carry authoritative ids (deep-clone materialization).
+    val s = t.snapshot()
     val (dfI, idHighs) =
       if (presetIdentityHigh.nonEmpty) (df, presetIdentityHigh)
-      else t.stampIdentity(df, freshForAll = true)
+      else t.stampIdentity(s, df, freshForAll = true)
     val boot = boot0.copy(schemaJson = dfI.schema.json, identityHigh = idHighs)
-    val batch = t.stampMeta(if (bulkInsert) dfI else t.dedupBatch(dfI), commitTime)
-    val res = t.writeFiles(batch, t.freshWriteId(version), log = false)
+    val batch = t.stampMeta(s, if (bulkInsert) dfI else t.dedupBatch(s, dfI), commitTime)
+    val res = t.writeFiles(s, batch, t.freshWriteId(version), log = false)
     // amend: rewrite commit 0 with the files (single-writer, pre-publish)
     val fs = CommitLog.logDir(path).getFileSystem(conf)
     fs.delete(new Path(CommitLog.logDir(path), f"$version%020d.json"), false)

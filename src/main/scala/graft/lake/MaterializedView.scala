@@ -350,10 +350,14 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
   private def refreshOnce(): Boolean = {
     val m = meta
     val st = state
+    // every member is read at ONE snapshot: the version this refresh
+    // brings the view up to, with that version's schema
     val base = LakeTable.load(spark, m.basePath)
-    val upTo = base.latestVersion
+    val baseS = base.snapshot()
+    val upTo = baseS.version
     val dimTables = m.joins.map(j => LakeTable.load(spark, j.dimPath))
-    val dimUpTos = dimTables.map(_.latestVersion)
+    val dimSs = dimTables.map(_.snapshot())
+    val dimUpTos = dimSs.map(_.version)
     locally {
       val v0 = st.latestVersion
       val (l0, dv0) = cursorOf(st, m, v0)
@@ -366,7 +370,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     // table that renamed/dropped a referenced column fails refresh HERE,
     // with the broken references named — never an opaque AnalysisException
     // from deep inside the maintenance plan. Additive evolution passes.
-    val broken = brokenReferences(spark, m, base.schema, dimTables.map(_.schema))
+    val broken = brokenReferences(spark, m, baseS.schema, dimSs.map(_.schema))
     if (broken.nonEmpty) throw new IllegalStateException(
       s"materialized view at $path: broken column reference(s) after member " +
         s"schema evolution — ${broken.mkString("; ")}. Restore the column(s) " +
@@ -383,7 +387,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
     // the same contract the table layer gives its own readers); anything
     // else fails with the change named. Runs BEFORE the vState pin so
     // the widen commits never self-conflict this refresh's OCC claim.
-    stateTypeChanges(spark, m, st.schema, base.schema, dimTables.map(_.schema))
+    stateTypeChanges(spark, m, st.schema, baseS.schema, dimSs.map(_.schema))
       .foreach { case (c, have, want) =>
         if (LakeTable.widens(have, want)) {
           // a RACING refresh may have applied the same widening between
@@ -401,17 +405,18 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
             "recreate the view")
       }
 
-    val vState = st.latestVersion
+    val stS = st.snapshot()
+    val vState = stS.version
     val (lastV, dimVs) = cursorOf(st, m, vState)
-    // every member's pending window, each from one log listing
-    val baseW = base.window(lastV, Some(upTo))
-    val dimWs = m.joins.indices.map(i => dimTables(i).window(dimVs(i), Some(dimUpTos(i))))
-    val stSchema = st.schema
+    // every member's pending window, from the listing its snapshot made
+    val baseW = baseS.window(lastV)
+    val dimWs = m.joins.indices.map(i => dimSs(i).window(dimVs(i)))
+    val stSchema = stS.schema
     def stType(c: String): DataType = stSchema(c).dataType
     // schema-aware bare-input classification (see [[inCol]]): a known
     // member column name is bare even when not a plain identifier
     val memberCols: Set[String] =
-      (base.schema.fieldNames ++ dimTables.flatMap(_.schema.fieldNames)).toSet
+      (baseS.schema.fieldNames ++ dimSs.flatMap(_.schema.fieldNames)).toSet
     def inE(in: String): Column = inCol(in, memberCols)
     // an EXPRESSION agg input rides as its references, like the filter
     val inputs = m.aggs.flatMap(a =>
@@ -440,9 +445,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
       val contCols = (need ++ keyCols).distinct
       val discontinuous = (baseW +: dimWs).flatMap { w =>
         contCols.filter { c =>
-          w.shape.schema.fieldNames.contains(c) &&
-          w.sinceShape.schema.fieldNames.contains(c) &&
-          w.sinceShape.spec.physical(c) != w.shape.spec.physical(c)
+          w.end.shape.schema.fieldNames.contains(c) &&
+          w.start.shape.schema.fieldNames.contains(c) &&
+          w.start.shape.spec.physical(c) != w.end.shape.spec.physical(c)
         }
       }.distinct
       if (discontinuous.nonEmpty) throw new IllegalStateException(
@@ -476,12 +481,12 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
 
     val split =
       if (m.joins.isEmpty) None
-      else Some(sideSplitN(base.schema, dimTables.map(_.schema), need, m.joins))
+      else Some(sideSplitN(baseS.schema, dimSs.map(_.schema), need, m.joins))
     // per-join home of the LEFT key (-1 = fact, j = dim j) — revalidated
     // on every refresh so a base-table schema evolution that makes a join
     // key ambiguous fails with the constraint's own message, not an
     // opaque AnalysisException from a bare column reference
-    lazy val homes = keyHomes(base.schema, dimTables.map(_.schema), m.joins)
+    lazy val homes = keyHomes(baseS.schema, dimSs.map(_.schema), m.joins)
     // the current joined snapshot projections (min/max repair source, and
     // the F_new side of dim-churn terms): each table carries its resident
     // need columns plus every join key HOMED on it (snowflake chain keys
@@ -639,15 +644,15 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                   else Some(org.apache.spark.sql.sources.In(dk, vs))
                 }
               def probe(v: Long) = {
-                val liveD = dimTables(i).liveFiles(Some(v))
-                lastNullExtDimScan = Some((liveD.size,
-                  math.max(dimTables(i).pruneByFilters(liveD, touchedFilters).size,
+                val sD = dimTables(i).snapshot(Some(v))
+                lastNullExtDimScan = Some((sD.live.size,
+                  math.max(dimTables(i).pruneByFilters(sD.live, touchedFilters, sD.shape).size,
                     lastNullExtDimScan.map(_._2).getOrElse(0))))
                 dimTables(i).readWhere(touchedFilters, Some(v)).select(dks: _*).distinct()
                   .join(if (capped) touched else localDf(touchedTuples.toSeq),
                     m.joins(i).dimKeys, "left_semi")
               }
-              val dimSchema = dimTables(i).schema
+              val dimSchema = dimSs(i).schema
               val anc = foldOrder(i).takeWhile(_ != i)
               def record(liveN: Int, openedN: Int): Unit =
                 // the seam keeps the WIDER of the sides since its last
@@ -678,9 +683,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 // the netting proved no key's existence can flip: the
                 // common physical-churn/segment-move refresh — no probes,
                 // no transition terms, zero files on either side
-                record(baseW.liveUpTo.size, 0)
+                record(baseW.end.live.size, 0)
                 lastNullExtDimScan = Some((
-                  dimWs(i).liveUpTo.size,
+                  dimWs(i).end.live.size,
                   lastNullExtDimScan.map(_._2).getOrElse(0)))
               } else if (!capped) {
                 // the flip sets are computed DRIVER-side from the two
@@ -730,7 +735,7 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                     if (tuples.isEmpty) {
                       // nothing flipped (the common refresh): the term is
                       // provably empty — no fact files at all
-                      record(baseW.liveUpTo.size, 0)
+                      record(baseW.end.live.size, 0)
                       fNew.where(lit(false))
                     } else {
                       // per-column value projections of the flipped tuples
@@ -758,8 +763,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                         }
                       if (anc.nonEmpty && factFilters.isEmpty) fNew // chase capped out
                       else {
-                        val live = baseW.liveUpTo
-                        record(live.size, base.pruneByFilters(live, factFilters).size)
+                        val live = baseW.end.live
+                        record(live.size,
+                          base.pruneByFilters(live, factFilters, baseW.end.shape).size)
                         base.readWhere(factFilters, Some(upTo)).select(fProj: _*)
                       }
                     }
@@ -917,13 +923,13 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 Some(dimUpTos(t0)))
               .filter(col(col0).isin(vals0: _*)), 0)
           def dimHome(c: String): Option[Int] =
-            dimTables.indices.find(i => dimTables(i).schema.fieldNames.contains(c))
+            dimTables.indices.find(i => dimSs(i).schema.fieldNames.contains(c))
           val inFilters: Seq[org.apache.spark.sql.sources.Filter] =
             if (affected.length > REPAIR_IN_CAP) Nil
             else dims.zipWithIndex.flatMap { case (d, ix) =>
               val vs = affected.map(_.get(ix)).distinct
               if (vs.contains(null)) Nil
-              else if (base.schema.fieldNames.contains(d))
+              else if (baseS.schema.fieldNames.contains(d))
                 Seq(org.apache.spark.sql.sources.In(d, vs))
               else m.dimExprs.get(d) match {
                 case None => dimHome(d).map(t => chaseToFact(t, d, vs).map {
@@ -966,9 +972,9 @@ class MaterializedView private (val spark: SparkSession, val path: String) {
                 case Some(f) => acts => f(acc(acts))
               }
             }
-          val live = baseW.liveUpTo
+          val live = baseW.end.live
           lastRepairScan = Some((live.size,
-            exprPrune(base.pruneByFilters(live, inFilters)).size))
+            exprPrune(base.pruneByFilters(live, inFilters, baseW.end.shape)).size))
           val snapBase = base.readWherePruned(inFilters, exprPrune, Some(upTo))
           val snapJoined =
             if (m.joins.isEmpty) snapBase
@@ -1098,7 +1104,8 @@ object MaterializedView {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
     if (values.isEmpty || values.contains(null)) return None
     val src = GeneratedCols.monotonicSource(spark, text).getOrElse(return None)
-    val srcField = base.schema.fields
+    val sh = base.snapshot().shape
+    val srcField = sh.schema.fields
       .find(_.name.equalsIgnoreCase(src)).getOrElse(return None)
     val gExpr =
       try {
@@ -1152,7 +1159,7 @@ object MaterializedView {
         }.eval(null))
         catch { case scala.util.control.NonFatal(_) => None })
     Some(acts => acts.filter { a =>
-      base.statRange(a, src) match {
+      base.statRange(a, src, sh.spec.key) match {
         case None => true
         case Some((mnS, mxS)) =>
           (for {

@@ -334,8 +334,9 @@ object LakeQueries {
         val lo = 1704844800000000L // 2024-01-10T00:00:00Z in µs
         val hi = 1705708799999999L // 2024-01-19T23:59:59.999999Z
         val fs = Seq(GreaterThanOrEqual("ts_us", lo), LessThanOrEqual("ts_us", hi))
-        val all = tbl.liveFiles(None)
-        val kept = tbl.pruneByFilters(all, fs)
+        val snap = tbl.snapshot()
+        val all = snap.live
+        val kept = tbl.pruneByFilters(all, fs, snap.shape)
         require(kept.size < all.size, "hidden partitioning must prune files")
         val parts = kept.flatMap(_.partitionValue).distinct.sorted
         require(parts.size == 10 && parts.head == "2024-01-10" &&
@@ -651,9 +652,10 @@ object LakeQueries {
           t(s, d, "orders").repartition(16), bulkInsert = true)
         val ck = tbl.read().filter(col("o_orderkey") === 32L)
           .select("o_custkey").head().getLong(0)
-        val live = tbl.liveFiles(None)
+        val snap = tbl.snapshot()
+        val live = snap.live
         val kept = tbl.pruneByFilters(live,
-          Seq(org.apache.spark.sql.sources.EqualTo("o_custkey", ck)))
+          Seq(org.apache.spark.sql.sources.EqualTo("o_custkey", ck)), snap.shape)
         require(kept.size < live.size,
           s"bloom index must prune files (kept ${kept.size}/${live.size})")
         proj(tbl.readWhere(Seq(org.apache.spark.sql.sources.EqualTo("o_custkey", ck)))
@@ -678,13 +680,14 @@ object LakeQueries {
         val tbl = LakeTable.create(s, path,
           TableSpec("o_orderkey", "o_orderdate", buckets = 8),
           t(s, d, "orders"))
-        val live = tbl.liveFiles(None)
-        val kept = tbl.pruneByFilters(live, Seq(EqualTo("o_orderkey", 32L)))
+        val snap = tbl.snapshot()
+        val live = snap.live
+        val kept = tbl.pruneByFilters(live, Seq(EqualTo("o_orderkey", 32L)), snap.shape)
         require(kept.flatMap(_.partitionValue).distinct.size <= 1 &&
           kept.size < live.size,
           s"point lookup must open one bucket (kept ${kept.size}/${live.size})")
         val probe = Array[Any](32L, 33L, 70L, 71L)
-        val keptIn = tbl.pruneByFilters(live, Seq(In("o_orderkey", probe)))
+        val keptIn = tbl.pruneByFilters(live, Seq(In("o_orderkey", probe)), snap.shape)
         require(keptIn.flatMap(_.partitionValue).distinct.size <= probe.length &&
           keptIn.size < live.size,
           s"IN probe must stay within its buckets (kept ${keptIn.size}/${live.size})")
@@ -2569,11 +2572,12 @@ object LakeQueries {
           t(s, d, "orders"), bulkInsert = true)
         finally prev.foreach { case (k, v) =>
           v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-        val live = tbl.liveFiles(None)
+        val snap = tbl.snapshot()
+        val live = snap.live
         val filt = Seq(org.apache.spark.sql.sources.And(
           org.apache.spark.sql.sources.GreaterThan("o_totalprice", 100000.0),
           org.apache.spark.sql.sources.LessThan("o_totalprice", 120000.0)))
-        val kept = tbl.pruneByFilters(live, filt)
+        val kept = tbl.pruneByFilters(live, filt, snap.shape)
         require(kept.size < live.size,
           s"write clustering must prune a range scan (kept ${kept.size}/${live.size})")
         proj(tbl.readWhere(filt)

@@ -589,17 +589,18 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
     try {
       val spark = SparkSession.active
       val t = LakeTable.load(spark, path)
-      val spec = t.specAt(asOf)
+      val snap = t.snapshot(asOf)
+      val spec = snap.spec
       if (spec.columnMap.nonEmpty) return None
       if (required.isEmpty) return None
-      val live0 = t.liveFiles(asOf)
+      val live0 = snap.live
       if (live0.isEmpty || live0.exists(a => a.log || a.base.isDefined)) return None
       // partition-evolution era guard: the dir-constant logic below
       // assumes every file's stored partitionValue belongs to the CURRENT
       // partition column — mixed eras read through V1 (era-grouped scans)
       if (t.mixedPartitionEras(live0, spec)) return None
-      val live = t.pruneByFilters(live0, filters.toSeq)
-      val dataSchema = t.schemaAt(asOf)
+      val live = t.pruneByFilters(live0, filters.toSeq, snap.shape)
+      val dataSchema = snap.schema
       val constCol: Option[String] =
         spec.partition.orElse(
           if (spec.buckets > 0) Some(TableSpec.BUCKET_COL) else None)
@@ -633,8 +634,7 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
       // narrow physical type — both known per file from the commit log
       // (the file's write-id dir names its commit), no footer opened. Meta
       // columns predate every evolution; only data columns can change.
-      val evolved = t.commits.filter(c => asOf.forall(c.version <= _))
-        .map(_.schemaJson).distinct.size > 1
+      val evolved = snap.history.map(_.schemaJson).distinct.size > 1
       val declaredTypes: Array[org.apache.spark.sql.types.DataType] =
         fileCols.map(n =>
           if (metaReadable.contains(n) && !dataFields.contains(n)) StringType
@@ -715,14 +715,15 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
           if (any) arr else null
         }
       }
-      Some(new GraftFileScan(path, asOf, live.zip(descs), required, fileSchema,
+      Some(new GraftFileScan(path, asOf, snap.shape, live.zip(descs), required, fileSchema,
         outIdx, maxBytes, limit, filterCols, absentFill))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def bucketScan(): Option[Scan] =
     try {
       val t = LakeTable.load(SparkSession.active, path)
-      val spec = t.specAt(asOf)
+      val snap = t.snapshot(asOf)
+      val spec = snap.spec
       // IsNotNull-only filter sets (the join planner's null-guard artifacts)
       // are fine: every filter was returned as residual from pushFilters, so
       // Spark re-evaluates them above the scan; anything more selective goes
@@ -732,12 +733,11 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
       // schema evolution (added columns / widened types): the bucket
       // readers read files at one fixed schema — serve evolved snapshots
       // through the V1 path, which handles per-file schemas
-      if (t.commits.filter(c => asOf.forall(c.version <= _))
-        .map(_.schemaJson).distinct.size > 1) return None
-      val dataSchema = t.schemaAt(asOf)
+      if (snap.history.map(_.schemaJson).distinct.size > 1) return None
+      val dataSchema = snap.schema
       val dataFields = dataSchema.fieldNames.toSet
       if (required.isEmpty || !required.fieldNames.forall(dataFields.contains)) return None
-      val live = t.liveFiles(asOf)
+      val live = snap.live
       // foreign base dirs (shallow clone / convert-in-place) keep the
       // general path; MoR logs and deletion vectors are served IN the
       // bucket readers (per-bucket merge / position skipping), so

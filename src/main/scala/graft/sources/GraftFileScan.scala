@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.lake.{FileAction, LakeTable}
+import graft.lake.{FileAction, LakeTable, Shape}
 
 /** One live data file as the executor-side reader needs it: absolute path,
   * the commit-log-relative identity DV sidecars key on, the typed
@@ -65,7 +65,7 @@ case class ScanFileDesc(abs: String, rel: String, partVal: Any,
   * Input partitions are files bin-packed to `maxPartitionBytes` using the
   * commit log's byte stats — no filesystem listing at plan time beyond DV
   * sidecar dirs. */
-class GraftFileScan(path: String, asOf: Option[Long],
+class GraftFileScan(path: String, asOf: Option[Long], shape: Shape,
     files: Seq[(FileAction, ScanFileDesc)], required: StructType,
     fileSchema: StructType, outIdx: Array[Int], maxBytes: Long,
     limit: Option[Int], filterCols: Array[String],
@@ -88,7 +88,7 @@ class GraftFileScan(path: String, asOf: Option[Long],
   override def filter(filters: Array[Filter]): Unit = {
     try {
       val t = LakeTable.load(SparkSession.active, path)
-      val kept = t.pruneByFilters(current.map(_._1), filters.toSeq)
+      val kept = t.pruneByFilters(current.map(_._1), filters.toSeq, shape)
         .map(_.path).toSet
       current = current.filter { case (a, _) => kept.contains(a.path) }
     } catch { case scala.util.control.NonFatal(_) => () }

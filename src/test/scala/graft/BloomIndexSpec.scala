@@ -38,7 +38,7 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(live.size >= 8)
     // a value that exists: its single home file (± bloom FPs) survives
     val probe = t.read().filter(col("k") === 4321L).select("tag").head().getString(0)
-    val kept = t.pruneByFilters(live, Seq(EqualTo("tag", probe)))
+    val kept = t.pruneByFilters(live, Seq(EqualTo("tag", probe)), t.snapshot().shape)
     assert(kept.size < live.size,
       s"bloom must prune files (kept ${kept.size} of ${live.size})")
     val got = t.readWhere(Seq(EqualTo("tag", probe)))
@@ -47,10 +47,11 @@ class BloomIndexSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(got == want && want.contains(4321L))
     // a value that exists nowhere prunes every file (within FP rate)
-    val none = t.pruneByFilters(live, Seq(EqualTo("tag", "tag_none_such")))
+    val none = t.pruneByFilters(live, Seq(EqualTo("tag", "tag_none_such")), t.snapshot().shape)
     assert(none.size <= 2, s"absent value should prune ~all files, kept ${none.size}")
     // IN over a few values unions the probes
-    val inKept = t.pruneByFilters(live, Seq(In("tag", Array(probe, "tag_none_such"))))
+    val inKept = t.pruneByFilters(live, Seq(In("tag", Array(probe, "tag_none_such"))),
+      t.snapshot().shape)
     assert(inKept.size < live.size && inKept.size >= kept.size - 1)
   }
 
@@ -61,7 +62,8 @@ class BloomIndexSpec extends AnyFunSuite {
     // same filter through stats-only skipping: nothing prunes, because
     // every file's [min,max] tag range covers the probe
     val probe = t.read().filter(col("k") === 100L).select("tag").head().getString(0)
-    val statsOnly = t.pruneByFilters(live, Seq(EqualTo("k", -1L))) // control: key stats DO prune
+    val statsOnly = t.pruneByFilters(live, Seq(EqualTo("k", -1L)),
+      t.snapshot().shape) // control: key stats DO prune
     assert(statsOnly.isEmpty || statsOnly.size < live.size)
   }
 
@@ -74,7 +76,8 @@ class BloomIndexSpec extends AnyFunSuite {
     val victim = live.head.path
     val p = new org.apache.hadoop.fs.Path(s"$path/data/.blooms/$victim.tag.bf")
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
-    val kept = LakeTable.load(spark, path).pruneByFilters(live, Seq(EqualTo("tag", probe)))
+    val kept = LakeTable.load(spark, path).pruneByFilters(live, Seq(EqualTo("tag", probe)),
+      LakeTable.load(spark, path).snapshot().shape)
     assert(kept.map(_.path).contains(victim), "missing sidecar must fail open")
     val got = LakeTable.load(spark, path).readWhere(Seq(EqualTo("tag", probe)))
       .filter(col("tag") === probe).count()
@@ -133,14 +136,15 @@ class BloomIndexSpec extends AnyFunSuite {
     // pre-property files have no sidecars: fail-open, full candidate set
     val t2 = LakeTable.load(spark, path)
     val live0 = t2.liveFiles(None)
-    assert(t2.pruneByFilters(live0, Seq(EqualTo("u", "u7919"))).size == live0.size)
+    assert(t2.pruneByFilters(live0, Seq(EqualTo("u", "u7919")),
+      t2.snapshot().shape).size == live0.size)
     // new writes carry sidecars and prune
     t2.upsert((10001 to 12000).map(i => (i.toLong, 1L, s"u${i * 7919 % 50000}"))
       .toDF("k", "ver", "u").repartition(4))
     val t3 = LakeTable.load(spark, path)
     val live = t3.liveFiles(None)
     val newFiles = live.map(_.path).toSet -- live0.map(_.path).toSet
-    val kept = t3.pruneByFilters(live, Seq(EqualTo("u", "no_such_value")))
+    val kept = t3.pruneByFilters(live, Seq(EqualTo("u", "no_such_value")), t3.snapshot().shape)
       .map(_.path).toSet
     assert((newFiles -- kept).nonEmpty,
       "at least some NEW files must prune on an absent value")

@@ -258,7 +258,7 @@ class BucketJoinSpec extends AnyFunSuite {
     val expect = ((org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
       Seq(org.apache.spark.sql.catalyst.expressions.Literal(77L)), 42)
       .eval(null).asInstanceOf[Int] % NB) + NB) % NB
-    val kept = t.pruneByFilters(live, Seq(EqualTo("k", 77L)))
+    val kept = t.pruneByFilters(live, Seq(EqualTo("k", 77L)), t.snapshot().shape)
     assert(kept.nonEmpty && kept.size < live.size)
     assert(kept.flatMap(_.partitionValue).distinct == Seq(expect.toString))
     // pruned read returns exactly the probed row
@@ -271,7 +271,7 @@ class BucketJoinSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.{And, EqualTo, In}
     val t = mk("prune_in", (1L to 2000L).map(i => (i, 1L, s"v$i")))
     val live = t.liveFiles(None)
-    val keptIn = t.pruneByFilters(live, Seq(In("k", Array[Any](5L, 6L, 7L))))
+    val keptIn = t.pruneByFilters(live, Seq(In("k", Array[Any](5L, 6L, 7L))), t.snapshot().shape)
     assert(keptIn.nonEmpty && keptIn.flatMap(_.partitionValue).distinct.size <= 3)
     val all = t.readWhere(Seq(In("k", Array[Any](5L, 6L, 7L))))
       .filter(col("k").isin(5L, 6L, 7L)).count()
@@ -279,10 +279,10 @@ class BucketJoinSpec extends AnyFunSuite {
     // contradictory equalities intersect to disjoint buckets → empty when
     // the two keys happen to hash apart (5L and 6L do at NB=8)
     val both = t.pruneByFilters(live,
-      Seq(And(EqualTo("k", 5L), EqualTo("k", 6L))))
-    val b5 = t.pruneByFilters(live, Seq(EqualTo("k", 5L)))
+      Seq(And(EqualTo("k", 5L), EqualTo("k", 6L))), t.snapshot().shape)
+    val b5 = t.pruneByFilters(live, Seq(EqualTo("k", 5L)), t.snapshot().shape)
       .flatMap(_.partitionValue).toSet
-    val b6 = t.pruneByFilters(live, Seq(EqualTo("k", 6L)))
+    val b6 = t.pruneByFilters(live, Seq(EqualTo("k", 6L)), t.snapshot().shape)
       .flatMap(_.partitionValue).toSet
     if ((b5 & b6).isEmpty) assert(both.isEmpty)
   }
@@ -292,9 +292,9 @@ class BucketJoinSpec extends AnyFunSuite {
     val t = mk("prune_safe", (1L to 500L).map(i => (i, 1L, s"v$i")))
     val live = t.liveFiles(None)
     // a string literal cannot hash as the long key — every file kept
-    assert(t.pruneByFilters(live, Seq(EqualTo("k", "77"))).size == live.size)
+    assert(t.pruneByFilters(live, Seq(EqualTo("k", "77")), t.snapshot().shape).size == live.size)
     // non-key equality never bucket-prunes (file ranges may still skip,
     // but v spans every file here)
-    assert(t.pruneByFilters(live, Seq(EqualTo("v", "v77"))).size == live.size)
+    assert(t.pruneByFilters(live, Seq(EqualTo("v", "v77")), t.snapshot().shape).size == live.size)
   }
 }

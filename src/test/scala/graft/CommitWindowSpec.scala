@@ -10,9 +10,10 @@ import graft.lake.{CommitLog, LakeTable, LogOps, TableSpec}
 
 /** [[graft.lake.CommitWindow]]: a version window resolved from one listing
   * of the commit log. Pins the log cost of the change-feed and view-delta
-  * reads through CommitLog's log-op counters, and checks that each kind of
-  * window (physical-only, key-preserving, mixed) reads back as exactly
-  * the difference of its two snapshots. */
+  * reads, and of snapshot reads and writes, through CommitLog's log-op
+  * counters, and checks that each kind of window (physical-only,
+  * key-preserving, mixed) reads back as exactly the difference of its two
+  * snapshots. */
 class CommitWindowSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -23,9 +24,9 @@ class CommitWindowSpec extends AnyFunSuite {
     CommitLog.logOps - before
   }
 
-  private def mkTable(name: String): LakeTable = {
+  private def mkTable(name: String, mor: Boolean = false): LakeTable = {
     val path = Files.createTempDirectory(s"graft_window_$name").toString
-    LakeTable.create(spark, path, TableSpec("id", "ts"),
+    LakeTable.create(spark, path, TableSpec("id", "ts", mor = mor),
       (1 to 8).map(i => (i, i * 10, 100L)).toDF("id", "v", "ts"))
   }
 
@@ -48,12 +49,53 @@ class CommitWindowSpec extends AnyFunSuite {
       })
   }
 
-  test("changes, incremental and windowDelta each list the log once") {
+  /** Log cost of each write op and of a time-travel read, with the
+    * number of commits each made. Every op runs on a fresh table holding
+    * one outstanding upsert (on MoR, a log file), so no op lands on a
+    * checkpoint version. */
+  private def opCosts(mor: Boolean): Seq[(String, LogOps, Long)] = {
+    val kind = if (mor) "mor" else "cow"
+    // each input prepares its op off the counters and returns the op
+    val inputs: Seq[(String, LakeTable => () => Unit)] = Seq(
+      "upsert" -> (t => () => bump(t, 2)),
+      "delete" -> (t => () => { t.delete(col("id") === 3); () }),
+      "update" -> (t => () => { t.update(col("id") === 4, Map("v" -> lit(44))); () }),
+      "deleteKeys" -> (t => () => { t.deleteKeys(Seq(5).toDF("id")); () }),
+      "compact" -> (t => () => { t.compact(); () }),
+      "read(Some(v))" -> { t =>
+        val v = t.latestVersion - 1
+        () => { t.read(Some(v)).collect(); () }
+      })
+    inputs.map { case (name, prepare) =>
+      val t = mkTable(s"op_$kind", mor)
+      bump(t, 1)
+      val op = prepare(t)
+      val v = t.latestVersion
+      val c = ops(op())
+      (s"$kind $name", c, t.latestVersion - v)
+    }
+  }
+
+  test("each read lists the log once and each write once per commit") {
     val t = mkTable("listings")
     (1 to 3).foreach(bump(t, _))
     lastCommitCosts(t).foreach { case (name, c) =>
       assert(c.versionListings == 1, s"$name: $c")
       assert(c.checkpointListings <= 1, s"$name: $c")
+    }
+    val m = mkTable("listings_mor", mor = true)
+    (1 to 3).foreach(bump(m, _))
+    val since = m.latestVersion - 1
+    val morDelta = ops {
+      val (plus, minus) = m.windowDelta(m.window(since, None))
+      plus.collect(); minus.collect()
+    }
+    assert(morDelta.versionListings == 1, s"MoR windowDelta: $morDelta")
+    assert(morDelta.checkpointListings <= 1, s"MoR windowDelta: $morDelta")
+    (opCosts(mor = false) ++ opCosts(mor = true)).foreach { case (name, c, commits) =>
+      val allowed = math.max(1L, commits)
+      assert(c.versionListings <= allowed, s"$name ($commits commits): $c")
+      assert(c.checkpointListings <= allowed, s"$name ($commits commits): $c")
     }
   }
 

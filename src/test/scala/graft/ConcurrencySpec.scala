@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, udf, when}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,6 +75,39 @@ class ConcurrencySpec extends AnyFunSuite {
       "each upsert claims its own version — fully serialized")
     // every version parses and the live set is consistent
     assert(t.commits.size == writers * perWriter + 1)
+  }
+
+  // Writer A's batch filter runs writer B's whole upsert the first time a
+  // job evaluates it, so B commits while A's attempt is between reading
+  // the table and claiming its version. A must notice, rerun on B's state
+  // and win on precombine — never rewrite the files it read before B.
+  Seq(false, true).foreach { mor =>
+    test(s"a commit landing mid-attempt reruns the attempt (${if (mor) "MoR" else "CoW"})") {
+      import spark.implicits._
+      val path = Files.createTempDirectory(s"graft_occ_midattempt_$mor").toString
+      LakeTable.create(spark, path, TableSpec("k", "ts", None, mor = mor),
+        (0L until 20L).map(k => (k, 0L, "seed")).toDF("k", "ts", "v"))
+      RaceHook.arm { () =>
+        LakeTable.load(spark, path)
+          .upsert(Seq((5L, 1L, "B"), (100L, 1L, "B")).toDF("k", "ts", "v"))
+        ()
+      }
+      // from a range, not a local Seq: the optimizer evaluates a filter over
+      // local rows itself, which would fire the hook before any job runs
+      val race = udf((_: Long) => RaceHook.fire()).asNondeterministic()
+      val batchA = spark.range(2)
+        .select(when(col("id") === 0, 5L).otherwise(100L).as("k"),
+          lit(2L).as("ts"), lit("A").as("v"))
+        .filter(race(col("k")))
+      val a = LakeTable.load(spark, path)
+      a.upsert(batchA)
+      assert(RaceHook.ran(), "writer B never ran")
+      val rows = a.read().select("k", "ts", "v").as[(Long, Long, String)].collect()
+      assert(rows.length == 21, s"rows: ${rows.sorted.mkString(",")}")
+      assert(rows.map(_._1).distinct.length == rows.length, "duplicate keys")
+      assert(rows.filter(r => r._1 == 5L || r._1 == 100L).map(r => r._1 -> r._2).toMap ==
+        Map(5L -> 2L, 100L -> 2L))
+    }
   }
 
   test("a restore losing a race never deletes historical files") {
@@ -164,5 +198,32 @@ class ConcurrencySpec extends AnyFunSuite {
     sink.addBatch(1, Seq((11L, 1L, "y")).toDF("k", "ts", "v"))
     assert(t.latestVersion == v0 + 2)
     assert(t.read().filter("k = 10").select("v").as[String].head() == "x")
+  }
+}
+
+/** The racing writer for ConcurrencySpec's mid-attempt test: the first
+  * [[fire]] (from inside a Spark task) runs the armed writer on a thread
+  * of its own and waits for it. */
+object RaceHook {
+  private val fired = new java.util.concurrent.atomic.AtomicBoolean(true)
+  @volatile private var writer: () => Unit = () => ()
+  @volatile private var failure: Option[Throwable] = None
+
+  def arm(w: () => Unit): Unit = { writer = w; failure = None; fired.set(false) }
+
+  def fire(): Boolean = {
+    if (fired.compareAndSet(false, true)) {
+      val t = new Thread(() =>
+        try writer() catch { case e: Throwable => failure = Some(e) })
+      t.start()
+      t.join()
+    }
+    true
+  }
+
+  /** Did the armed writer run to completion? Rethrows its failure. */
+  def ran(): Boolean = {
+    failure.foreach(e => throw e)
+    fired.get
   }
 }

@@ -61,12 +61,12 @@ class GeneratedColSpec extends AnyFunSuite {
     val fs = Seq[Filter](
       GreaterThanOrEqual("ts_us", t0 + 1 * day),
       LessThanOrEqual("ts_us", t0 + 3 * day - 1))
-    val kept = t.pruneByFilters(all, fs)
+    val kept = t.pruneByFilters(all, fs, t.snapshot().shape)
     val parts = kept.flatMap(_.partitionValue).distinct.sorted
     assert(parts == Seq("2024-01-02", "2024-01-03"),
       s"transform pruning kept $parts")
     // equality on the source column prunes to a single partition
-    val one = t.pruneByFilters(all, Seq(EqualTo("ts_us", t0 + 2 * day)))
+    val one = t.pruneByFilters(all, Seq(EqualTo("ts_us", t0 + 2 * day)), t.snapshot().shape)
     assert(one.flatMap(_.partitionValue).distinct == Seq("2024-01-03"))
     // end-to-end: the pruned read returns exactly the in-range rows
     val rows = t.readWhere(fs).select("pk_id").collect().map(_.getLong(0)).toSet
@@ -124,7 +124,7 @@ class GeneratedColSpec extends AnyFunSuite {
       generated = Map("mclass" -> "month(timestamp_micros(ts_us))"))
     val t = LakeTable.create(spark, tmp(), s, batch(0 until 8))
     val all = t.liveFiles(None)
-    val kept = t.pruneByFilters(all, Seq(GreaterThanOrEqual("ts_us", 0L)))
+    val kept = t.pruneByFilters(all, Seq(GreaterThanOrEqual("ts_us", 0L)), t.snapshot().shape)
     assert(kept.size == all.size, "unrecognized transform must not prune")
   }
 }

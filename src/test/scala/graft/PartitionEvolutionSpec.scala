@@ -78,12 +78,12 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     val live = t3.liveFiles(None)
     // filter on the NEW column: old-era files are NOT pruned (their rows
     // can hold any cat value) but new-era files prune by their dirs
-    val onCat = t3.pruneByFilters(live, Seq(EqualTo("cat", "c9")))
+    val onCat = t3.pruneByFilters(live, Seq(EqualTo("cat", "c9")), t3.snapshot().shape)
     assert(onCat.map(_.path).exists(_.contains("region=")),
       "old-era files must survive a new-column filter")
     assert(onCat.filter(_.path.contains("cat=")).forall(_.path.contains("cat=c9")))
     // filter on the OLD column: old-era files still prune by their dirs
-    val onRegion = t3.pruneByFilters(live, Seq(EqualTo("region", "emea")))
+    val onRegion = t3.pruneByFilters(live, Seq(EqualTo("region", "emea")), t3.snapshot().shape)
     assert(onRegion.filter(_.path.contains("region="))
       .forall(_.path.contains("region=emea")))
     // correctness of the actual filtered reads (readWhere skips files;

@@ -212,7 +212,7 @@ class ScaleSpec extends AnyFunSuite {
     val kept = t.pruneByFilters(live,
       Seq(org.apache.spark.sql.sources.And(
         org.apache.spark.sql.sources.GreaterThan("a", 400000),
-        org.apache.spark.sql.sources.LessThan("a", 420000))))
+        org.apache.spark.sql.sources.LessThan("a", 420000))), t.snapshot().shape)
     assert(kept.size * 4 <= live.size,
       s"day-1 pruning must skip most files (kept ${kept.size}/${live.size})")
     // content unchanged, and a later upsert stays clustered too
