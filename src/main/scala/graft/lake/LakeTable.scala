@@ -613,8 +613,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * converted-in-place references ([[FileAction.base]]); each distinct base
     * becomes its own scan (so `_v=`/partition dirs still parse against the
     * right root) and the scans union. `relFile = true` attaches the
-    * `_rel_file` column — the action-path-compatible identity the
-    * touched-file detection passes join on — computed correctly per group. */
+    * `_rel_file` column — the action-path-compatible identity
+    * [[rewriteTouched]] and [[deleteVectors]] key on — computed correctly
+    * per group. */
   private def readFiles(actions: Seq[FileAction], sh: Shape, keepWriteId: Boolean = false,
       relFile: Boolean = false, keepPos: Boolean = false): DataFrame = {
     val dataSchema = sh.schema
@@ -740,6 +741,32 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   // ---- writes ----------------------------------------------------------
 
+  /** The copy-on-write rewrite every row-level write shares ([[delete]],
+    * [[update]], [[overwriteWhere]], CoW upsert, CoW [[deleteKeys]]): a
+    * file is TOUCHED when `detect` keeps any of its rows. Detection scans
+    * `candidates` with their `_rel_file` identity and is column-pruned to
+    * what `detect` reads (a `cond` filter, or a keyed `left_semi`); one job
+    * collects the distinct touched paths. The rewrite then re-scans ONLY
+    * the touched files, restricting the scan's file list rather than
+    * filtering on a literal `isin(touched)` — scan cost ∝ touched data
+    * and the plan stays O(1) in the touched-file count. Returns the
+    * touched paths (the commit's `remove` set) and every row of those
+    * files, for the caller's own row transform; None when no file is
+    * touched. `keepWriteId` keeps the write-id column on both scans. */
+  private def rewriteTouched(s: Snapshot, candidates: Seq[FileAction],
+      detect: DataFrame => DataFrame,
+      keepWriteId: Boolean = false): Option[(Seq[String], DataFrame)] = {
+    val sh = s.shape
+    val touched = detect(readFiles(candidates, sh, keepWriteId, relFile = true))
+      .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
+    if (touched.isEmpty) None
+    else {
+      val touchedSet = touched.toSet
+      Some((touched, readFiles(candidates.filter(a => touchedSet.contains(a.path)), sh,
+        keepWriteId)))
+    }
+  }
+
   /** Full load (S6/S8/S10): precombine-dedup, stamp meta, replace content.
     * `mergeSchema` allows additive evolution (new columns widen the table;
     * Delta's mergeSchema analog). */
@@ -758,8 +785,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * `cond` with `df` — ONE commit rewrites the touched files' non-matching
     * rows and adds the new data, so readers never see a half-swapped state.
     * Every incoming row must satisfy `cond` (Delta's constraint): the op is
-    * a range/partition swap, not a disguised upsert. Detection is
-    * column-pruned to `cond`'s columns; only touched files are rewritten.
+    * a range/partition swap, not a disguised upsert. Only the files
+    * holding a matching row are rewritten ([[rewriteTouched]]).
     *
     * Keyed-uniqueness contract: a record key must not move ACROSS the
     * predicate boundary — an incoming key that also has a non-matching row
@@ -777,16 +804,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       "replaceWhere: every incoming row must match the predicate")
     val sh = s.shape
     writeCommit(s, "overwriteWhere", txn = txn, identityHigh = idHighs) { (writeId, commitTime) =>
-      val touched = readFiles(s.live, sh, relFile = true)
-        .filter(cond).select(REL_FILE).distinct()
-        .collect().map(_.getString(0)).toSeq
+      val touched = rewriteTouched(s, s.live, _.filter(cond))
       val batch = stampMeta(s, dedupBatch(s, conformed), commitTime)
-      val kept = if (touched.isEmpty) Seq.empty else {
-        val touchedSet = touched.toSet
+      val kept = touched.toSeq.map { case (_, all) =>
         // surviving rows of touched files (cond NULL = survives, like DELETE)
-        val rows = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
-          .filter(!coalesce(cond, lit(false)))
-          .drop("_file_name")
+        val rows = all.filter(!coalesce(cond, lit(false))).drop("_file_name")
         // keyed-uniqueness guard (see scaladoc): an incoming key surviving
         // outside the predicate in a touched file would duplicate
         val dup = withJoinIds(rows, sh)
@@ -795,9 +817,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         require(dup.isEmpty,
           "replaceWhere: an incoming record key also has rows NOT matching " +
             "the predicate — a key may not move across the replace boundary")
-        Seq(writeFiles(s, rows, writeId + 1, log = false))
+        writeFiles(s, rows, writeId + 1, log = false)
       }
-      Seq(writeFiles(s, batch, writeId, log = false).copy(remove = touched)) ++ kept
+      Seq(writeFiles(s, batch, writeId, log = false)
+        .copy(remove = touched.toSeq.flatMap(_._1))) ++ kept
     }
   }
 
@@ -931,40 +954,23 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // columns: the folded within-batch dedup hashes exactly these, so it
     // picks the same winner the old standalone dedupBatch did
     val batchHash = xxhash64(incoming.columns.toSeq.map(col): _*)
+    // the batch's distinct record identities: touched-file detection and
+    // the contested split below both join on them
+    val inKeys = withJoinIds(incoming, sh).select(sh.joinIdCols.map(col): _*).distinct()
     writeCommit(s, "upsert", newSchema = evolved, txn = txn,
       copyFiles = copyFiles, identityHigh = idHighs, txnMany = txnMany) { (writeId, commitTime) =>
       val inStamped = stampMeta(s, incoming, commitTime).withColumn(RANK, lit(Long.MaxValue))
-      // second element: the incoming batch when nothing is touched, else
-      // the full row set of the files being rewritten
-      val (touchedPaths, rewriteSet) =
-        if (candidates.isEmpty) (Seq.empty[String], inStamped)
-        else {
-          val cand = withJoinIds(readFiles(candidates, sh, keepWriteId = true, relFile = true), sh)
-          val touched = cand
-            .join(withJoinIds(incoming, sh).select(sh.joinIdCols.map(col): _*).distinct(),
-              sh.joinIdCols, "left_semi")
-            .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
-          if (touched.isEmpty) (touched, inStamped)
-          else {
-            // re-scan ONLY the touched files (the detection scan above is
-            // column-pruned to the key): scan cost ∝ touched data and the
-            // plan stays O(1) — a literal `isin(touched)` filter would grow
-            // an N-ary expression with the touched-file count
-            val touchedSet = touched.toSet
-            val affected = readFiles(candidates.filter(a => touchedSet.contains(a.path)),
-                sh, keepWriteId = true)
-              .withColumn(RANK, col(WRITE_ID))
-              .drop(WRITE_ID, "_file_name")
-            (touched, affected)
-          }
-        }
-      val winner =
-        if (touchedPaths.isEmpty)
-          // all inserts (rewriteSet == inStamped): the within-batch dedup
-          // runs standalone — greatest (precombine, full-row hash), the
-          // same winner the old pre-dedup chose
-          dedupLatest(rewriteSet, sh.idCols, sh.spec.precombine, batchHash)
-        else {
+      val touched =
+        if (candidates.isEmpty) None
+        else rewriteTouched(s, candidates,
+          withJoinIds(_, sh).join(inKeys, sh.joinIdCols, "left_semi"), keepWriteId = true)
+      val winner = touched match {
+        case None =>
+          // all inserts: the within-batch dedup runs standalone — greatest
+          // (precombine, full-row hash), the same winner the old pre-dedup
+          // chose
+          dedupLatest(inStamped, sh.idCols, sh.spec.precombine, batchHash)
+        case Some((_, affected)) =>
           // contested split: rows rewritten only because they share a FILE
           // with a touched key pass through without entering the dedup
           // shuffle; only rows whose KEY is in the batch contest with it.
@@ -976,8 +982,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           // One shuffle instead of two, and no persisted intermediate.
           // allowMissingColumns: under additive schema evolution the old
           // rows take nulls for the new columns.
-          val inKeys = withJoinIds(incoming, sh).select(sh.joinIdCols.map(col): _*).distinct()
-          val rewriteIds = withJoinIds(rewriteSet, sh)
+          val rewriteIds = withJoinIds(affected.withColumn(RANK, col(WRITE_ID))
+            .drop(WRITE_ID, "_file_name"), sh)
           val passThrough = rewriteIds.join(inKeys, sh.joinIdCols, "left_anti")
           val contested = rewriteIds.join(inKeys, sh.joinIdCols, "left_semi")
             .unionByName(withJoinIds(inStamped, sh), allowMissingColumns = true)
@@ -985,9 +991,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             struct(col(RANK), batchHash))
             .unionByName(passThrough, allowMissingColumns = true)
             .drop(PID)
-        }
+      }
       Seq(writeFiles(s, winner.drop(RANK), writeId, log = false)
-        .copy(remove = touchedPaths))
+        .copy(remove = touched.toSeq.flatMap(_._1)))
     }
   }
 
@@ -1097,21 +1103,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // priority to the rewrite's newer write-id. Folding the logs first
     // (same guard optimize() uses) makes the rewrite well-defined.
     val s = foldedLogs(s0)
-    val sh = s.shape
     writeCommit(s, "delete") { (writeId, _) =>
-      // detection pass: column-pruned to cond's columns + the file name
-      val touched = readFiles(s.live, sh, relFile = true)
-        .filter(cond).select(REL_FILE).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (touched.isEmpty) Seq.empty
-      else {
-        // rewrite pass: re-scan only the touched files (no literal isin —
-        // the plan stays O(1) in the touched-file count)
-        val touchedSet = touched.toSet
-        val kept = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
-          .filter(!coalesce(cond, lit(false)))
-          .drop("_file_name")
-        Seq(writeFiles(s, kept, writeId, log = false).copy(remove = touched))
+      rewriteTouched(s, s.live, _.filter(cond)).toSeq.map { case (touched, rows) =>
+        val kept = rows.filter(!coalesce(cond, lit(false))).drop("_file_name")
+        writeFiles(s, kept, writeId, log = false).copy(remove = touched)
       }
     }
   }
@@ -1197,11 +1192,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Row-level UPDATE (Delta `UPDATE t SET … WHERE …`): rewrite only the
-    * files holding rows where `cond` is definitively true, applying
-    * `assigns` to those rows and passing every other row of the touched
-    * files through unchanged. Same stats/detection shape as [[delete]]:
-    * detection is column-pruned, the rewrite re-scans only touched files,
-    * and rows with a NULL-evaluating condition are left untouched. */
+    * files holding rows where `cond` is definitively true
+    * ([[rewriteTouched]]), applying `assigns` to those rows and passing
+    * every other row of the touched files through unchanged; rows with a
+    * NULL-evaluating condition are left untouched. */
   def update(cond: Column, assigns: Map[String, Column]): LakeTable = retrying { s0 =>
     val declared = s0.schema
     assigns.keys.foreach { n =>
@@ -1216,16 +1210,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         s"column '$n' is GENERATED ALWAYS AS IDENTITY and cannot be updated")
     }
     val s = foldedLogs(s0)
-    val sh = s.shape
     writeCommit(s, "update") { (writeId, commitTime) =>
-      val touched = readFiles(s.live, sh, relFile = true)
-        .filter(cond).select(REL_FILE).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (touched.isEmpty) Seq.empty
-      else {
-        val touchedSet = touched.toSet
+      rewriteTouched(s, s.live, _.filter(cond)).toSeq.map { case (touched, base) =>
         val hit = coalesce(cond, lit(false))
-        val base = readFiles(s.live.filter(a => touchedSet.contains(a.path)), sh)
         // ONE projection against the PRE-update row: the condition and
         // every assignment RHS see original values (standard UPDATE
         // semantics — `SET a = b, b = a` swaps; sequential withColumn
@@ -1248,8 +1235,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         val rewritten = base.select(outCols.toSeq: _*)
         // CHECK constraints see the post-image of the updated rows
         checkConstraints(s, rewritten.filter(hit))
-        Seq(writeFiles(s, rewritten, writeId, log = false)
-          .copy(remove = touched))
+        writeFiles(s, rewritten, writeId, log = false).copy(remove = touched)
       }
     }
   }
@@ -1279,19 +1265,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       k.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         writeCommit(s, "delete") { (writeId, _) =>
-          val candidates = pruneCandidates(s, k)
-          val touched = withJoinIds(readFiles(candidates, sh, relFile = true), ks)
-            .join(k, ks.joinIdCols, "left_semi")
-            .select(REL_FILE).distinct().collect().map(_.getString(0)).toSeq
-          if (touched.isEmpty) Seq.empty
-          else {
-            val touchedSet = touched.toSet
-            val kept = withJoinIds(
-                readFiles(candidates.filter(a => touchedSet.contains(a.path)), sh), ks)
-              .join(k, ks.joinIdCols, "left_anti")
-              .drop(PID)
-              .drop("_file_name")
-            Seq(writeFiles(s, kept, writeId, log = false).copy(remove = touched))
+          rewriteTouched(s, pruneCandidates(s, k),
+              withJoinIds(_, ks).join(k, ks.joinIdCols, "left_semi")).toSeq.map {
+            case (touched, rows) =>
+              val kept = withJoinIds(rows, ks).join(k, ks.joinIdCols, "left_anti")
+                .drop(PID)
+                .drop("_file_name")
+              writeFiles(s, kept, writeId, log = false).copy(remove = touched)
           }
         }
       } finally {

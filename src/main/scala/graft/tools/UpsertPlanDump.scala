@@ -7,17 +7,24 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.lake.{LakeTable, TableSpec}
 
-/** Dump the EXECUTED plans of the b2-shaped CoW upsert and the b8-shaped
-  * CDF read — the write-path internals `PlanDump` (declared queries) cannot
-  * reach. Every execution the upsert/changes runs is captured via a
-  * QueryExecutionListener and written as
-  * `<outDir>/b2_cow_upsert_<suffix>_<i>.txt` / `b8_changes_<suffix>.txt`.
-  * Usage: runMain graft.tools.UpsertPlanDump <sfDir> <outDir> <suffix> */
+/** The one plan dumper. Names are captured in the order given, each to
+  * `<outDir>/<name>_<suffix>.txt`:
+  *   - the write-path captures on a b2-shaped CoW table (lineitem keyed by
+  *     `lkey`): `b2_cow_upsert`, `b8_changes` (the CDF read after it),
+  *     `b2_cow_overwrite_where`, `b2_cow_delete`, `b2_cow_update` and
+  *     `b2_cow_delete_keys`. Every execution the operation runs is
+  *     captured via a QueryExecutionListener, executed plans numbered;
+  *   - any other name is a declared query (`SparkEntry.queries`), dumped
+  *     as its `.explain("formatted")` — the plans/r13 evidence artifacts.
+  * Without a name list, every write-path capture runs.
+  * Usage: runMain graft.tools.UpsertPlanDump <sfDir> <outDir> <suffix> [n1,n2,...] */
 object UpsertPlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
     val spark = graft.core.GraftSession.local("upsert-plan-dump", 8)
     Files.createDirectories(Paths.get(outDir))
+    def write(name: String, text: String): Unit =
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), text.getBytes("UTF-8"))
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -29,10 +36,23 @@ object UpsertPlanDump {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
+    def capture(name: String)(body: => Unit): Unit = {
+      plans.clear()
+      spark.listenerManager.register(listener)
+      body
+      // QueryExecutionListener callbacks are async — give the bus a moment
+      Thread.sleep(1500)
+      spark.listenerManager.unregister(listener)
+      write(name, plans.zipWithIndex.map { case (p, i) => s"---- execution $i ----\n$p" }
+        .mkString("\n"))
+      println(s"wrote ${name}_$suffix.txt (${plans.size} executions)")
+    }
 
-    val work = Files.createTempDirectory("upd_work").toString
     def li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .withColumn("lkey", col("l_orderkey") * 10 + col("l_linenumber"))
+    // each op hits a disjoint 1% of the orders, selected by key alone, so
+    // overwriteWhere's incoming keys never cross its predicate
+    def slice(r: Int) = expr(s"(lkey DIV 10) % 100 = $r")
     def liSource = {
       val base = li
       base.filter(expr("(lkey DIV 10) % 10 = 0"))
@@ -41,25 +61,29 @@ object UpsertPlanDump {
         .unionByName(base.filter(expr("(lkey DIV 10) % 50 = 0"))
           .withColumn("lkey", col("lkey") + 100000000L))
     }
-    val t = LakeTable.create(spark, s"$work/cow", TableSpec("lkey", "l_shipdate"),
-      li, bulkInsert = true)
+    lazy val t = LakeTable.create(spark, Files.createTempDirectory("upd_work").toString + "/cow",
+      TableSpec("lkey", "l_shipdate"), li, bulkInsert = true)
+    val writePath: Seq[(String, () => Any)] = Seq(
+      "b2_cow_upsert" -> (() => t.upsert(liSource)),
+      "b8_changes" -> (() =>
+        t.changes(0).write.mode("overwrite").format("noop").save()),
+      "b2_cow_overwrite_where" -> (() => t.overwriteWhere(li.filter(slice(3))
+        .withColumn("l_extendedprice", col("l_extendedprice") + 2.0), slice(3))),
+      "b2_cow_delete" -> (() => t.delete(slice(5))),
+      "b2_cow_update" -> (() => t.update(slice(7), Map("l_quantity" -> (col("l_quantity") + 1)))),
+      "b2_cow_delete_keys" -> (() => t.deleteKeys(li.filter(slice(9)).select("lkey"))))
 
-    def capture(name: String)(body: => Unit): Unit = {
-      plans.clear()
-      spark.listenerManager.register(listener)
-      body
-      // QueryExecutionListener callbacks are async — give the bus a moment
-      Thread.sleep(1500)
-      spark.listenerManager.unregister(listener)
-      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-        plans.zipWithIndex.map { case (p, i) => s"---- execution $i ----\n$p" }
-          .mkString("\n").getBytes("UTF-8"))
-      println(s"wrote ${name}_$suffix.txt (${plans.size} executions)")
-    }
-
-    capture("b2_cow_upsert") { t.upsert(liSource); () }
-    capture("b8_changes") {
-      t.changes(0).write.mode("overwrite").format("noop").save()
+    val names = args.lift(3).fold(writePath.map(_._1))(_.split(",").toSeq.filter(_.nonEmpty))
+    names.foreach { n =>
+      writePath.find(_._1 == n) match {
+        case Some((_, op)) =>
+          t // created outside the capture
+          capture(n)(op())
+        case None =>
+          val df = graft.SparkEntry.queries(n)(spark, sfDir)
+          write(n, df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+          println(s"wrote ${n}_$suffix.txt")
+      }
     }
     spark.stop()
   }

@@ -47,6 +47,20 @@ class PartitionEncodingSpec extends AnyFunSuite {
     val remaining = t.read().select("k", "p").as[(Long, String)].collect().toSeq
     assert(!remaining.exists { case (k, p) => p == "has space" && k <= 10L })
     assert(remaining.size == 30 - (1L to 10L).count(i => i % 5 == 1))
+    // update, replaceWhere and keyed delete find their touched files in the
+    // same partition through the same decoded file identity: a missed file
+    // would lose the update, duplicate the replaced key, or keep the key
+    val sp = col("p") === "has space"
+    t.update(sp && col("k") === 11L, Map("v" -> lit("upd")))
+    t.overwriteWhere(Seq((16L, 2L, "ow", "has space")).toDF("k", "ts", "v", "p"),
+      sp && col("k") === 16L)
+    t.deleteKeys(Seq((21L, "has space")).toDF("k", "p"))
+    val rows = t.read().select("k", "v").as[(Long, String)].collect().toSeq
+    assert(rows.size == remaining.size - 1, s"duplicate or lost keys: ${rows.sorted}")
+    assert(rows.map(_._1).distinct.size == rows.size)
+    val byKey = rows.toMap
+    assert(byKey(11L) == "upd" && byKey(16L) == "ow" && !byKey.contains(21L))
+    assert(byKey(26L) == "v26" && byKey(12L) == "v12")
   }
 
   test("deletion vectors anti-join correctly across encoded partition paths") {

@@ -122,13 +122,29 @@ class ScaleSpec extends AnyFunSuite {
     val path = Files.createTempDirectory("graft_prune").toString
     val base = (1 to 3000).map(i => (i, 1L, i % 3, s"v$i")).toDF("k", "pc", "part", "payload")
     val t = LakeTable.create(spark, path, TableSpec("k", "pc", partition = Some("part")), base)
-    // update keys that all live in partition 0
+    // every op below hits keys that all live in partition 0
+    def rewritesOnlyPart0(op: String): Unit = {
+      val c = t.commits.last
+      assert(c.operation == op)
+      assert(c.remove.nonEmpty, s"$op removed no file")
+      assert(c.remove.forall(_.contains("part=0")),
+        s"$op may rewrite only partition 0 files, got ${c.remove}")
+    }
     t.upsert(Seq((3, 2L, 0, "x"), (6, 2L, 0, "y")).toDF("k", "pc", "part", "payload"))
-    val up = t.commits.find(_.operation == "upsert").get
-    assert(up.remove.nonEmpty)
-    assert(up.remove.forall(_.contains("part=0")),
-      s"only partition 0 files may be rewritten, got ${up.remove}")
-    assert(t.read().count() == 3000)
+    rewritesOnlyPart0("upsert")
+    t.delete(col("k") === 9)
+    rewritesOnlyPart0("delete")
+    t.update(col("k") === 12, Map("payload" -> lit("u")))
+    rewritesOnlyPart0("update")
+    t.deleteKeys(Seq(15).toDF("k"))
+    rewritesOnlyPart0("delete")
+    t.overwriteWhere(Seq((18, 2L, 0, "w")).toDF("k", "pc", "part", "payload"), col("k") === 18)
+    rewritesOnlyPart0("overwriteWhere")
+    val got = t.read().select("k", "payload").as[(Int, String)].collect().toMap
+    assert(got.size == 2998 && t.read().count() == 2998)
+    assert(!got.contains(9) && !got.contains(15))
+    assert(Seq(3 -> "x", 6 -> "y", 12 -> "u", 18 -> "w", 21 -> "v21").forall {
+      case (k, v) => got(k) == v })
   }
 
   test("optimize concatenates small files without changing contents") {
