@@ -544,16 +544,15 @@ object Similarity {
 
     val q0 = queries.select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
       .withColumn("qn", normSq(col("qv")))
-    // per table: own bucket + Hamming-1 probes
-    val q = q0.withColumn("tb", explode(array((for {
-        (p, t) <- tables.zipWithIndex
-        probe <- 0 to numPlanes
-      } yield {
-        val sig = hyperplaneSignature(col("qv"), p)
-        val b = if (probe == 0) sig else sig.bitwiseXOR(lit(1L << (probe - 1)))
-        struct(lit(t).as("t"), b.as("bucket"))
-      }): _*)))
-      .select(col("query_id"), col("qv"), col("qn"), col("tb.t"), col("tb.bucket"))
+    // per table: one signature, then own bucket + Hamming-1 probes (flip 0
+    // keeps the bucket, flip 1<<i moves to the neighbour across plane i)
+    val q = q0.withColumn("tb", explode(array(tables.zipWithIndex.map { case (p, t) =>
+        struct(lit(t).as("t"), hyperplaneSignature(col("qv"), p).as("sig"))
+      }: _*)))
+      .withColumn("flip", explode(array(
+        (0L +: (0 until numPlanes).map(1L << _)).map(lit): _*)))
+      .select(col("query_id"), col("qv"), col("qn"), col("tb.t"),
+        col("tb.sig").bitwiseXOR(col("flip")).as("bucket"))
 
     val scored = c.join(broadcast(q), Seq("t", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))

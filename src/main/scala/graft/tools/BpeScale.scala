@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,11 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object BpeScale {
 
-  private final class JobCounter extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-  }
-
   def main(args: Array[String]): Unit = {
     val merges = args.headOption.map(_.toInt).getOrElse(1000)
     val controlMerges = args.lift(1).map(_.toInt).getOrElse(24)
@@ -57,20 +51,10 @@ object BpeScale {
           |    i -> concat_ws('_', slice(split(text, ' '), i + 1, 3))))
           |END""".stripMargin).as("text"))
 
-    def timedJobs[A](body: => A): (A, Double, Long) = {
-      val c = new JobCounter
-      spark.sparkContext.addSparkListener(c)
-      val t0 = System.nanoTime()
-      val r = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(c)
-      (r, wall, c.jobs.get())
-    }
-
     val ((batched, stats), wallB, jobsB) =
-      timedJobs(graft.ext.Bpe.trainWithStats(docs, numMerges = merges))
+      graft.Bench.timedJobs(spark)(graft.ext.Bpe.trainWithStats(docs, numMerges = merges))
     val (control, wallC, jobsC) =
-      timedJobs(graft.ext.Bpe.trainRecount(docs, numMerges = controlMerges))
+      graft.Bench.timedJobs(spark)(graft.ext.Bpe.trainRecount(docs, numMerges = controlMerges))
     val prefix = control.pairs.take(controlMerges)
       .zip(batched.pairs.take(controlMerges)).takeWhile { case (a, b) => a == b }.size
     require(prefix == math.min(controlMerges, batched.pairs.size),

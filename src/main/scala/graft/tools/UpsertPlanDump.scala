@@ -9,8 +9,9 @@ import graft.lake.{LakeTable, TableSpec}
 
 /** The one plan dumper. Names are captured in the order given, each to
   * `<outDir>/<name>_<suffix>.txt`:
-  *   - the write-path captures on a b2-shaped CoW table (lineitem keyed by
-  *     `lkey`): `b2_cow_upsert`, `b8_changes` (the CDF read after it),
+  *   - the write-path captures on a b2-shaped CoW table (the bench's
+  *     driver-fixture lineitem, keyed by `lkey`, and b2's `liSource`):
+  *     `b2_cow_upsert`, `b8_changes` (the CDF read after it),
   *     `b2_cow_overwrite_where`, `b2_cow_delete`, `b2_cow_update` and
   *     `b2_cow_delete_keys`. Every execution the operation runs is
   *     captured via a QueryExecutionListener, executed plans numbered;
@@ -48,30 +49,21 @@ object UpsertPlanDump {
       println(s"wrote ${name}_$suffix.txt (${plans.size} executions)")
     }
 
-    def li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .withColumn("lkey", col("l_orderkey") * 10 + col("l_linenumber"))
+    val fx = graft.Bench.Fixtures.driver(spark, sfDir)
     // each op hits a disjoint 1% of the orders, selected by key alone, so
     // overwriteWhere's incoming keys never cross its predicate
     def slice(r: Int) = expr(s"(lkey DIV 10) % 100 = $r")
-    def liSource = {
-      val base = li
-      base.filter(expr("(lkey DIV 10) % 10 = 0"))
-        .withColumn("l_extendedprice", col("l_extendedprice") + 1.0)
-        .withColumn("l_shipdate", col("l_shipdate") + expr("INTERVAL 1 DAY"))
-        .unionByName(base.filter(expr("(lkey DIV 10) % 50 = 0"))
-          .withColumn("lkey", col("lkey") + 100000000L))
-    }
     lazy val t = LakeTable.create(spark, Files.createTempDirectory("upd_work").toString + "/cow",
-      TableSpec("lkey", "l_shipdate"), li, bulkInsert = true)
+      TableSpec("lkey", "l_shipdate"), fx.li, bulkInsert = true)
     val writePath: Seq[(String, () => Any)] = Seq(
-      "b2_cow_upsert" -> (() => t.upsert(liSource)),
+      "b2_cow_upsert" -> (() => t.upsert(fx.liSource)),
       "b8_changes" -> (() =>
         t.changes(0).write.mode("overwrite").format("noop").save()),
-      "b2_cow_overwrite_where" -> (() => t.overwriteWhere(li.filter(slice(3))
+      "b2_cow_overwrite_where" -> (() => t.overwriteWhere(fx.li.filter(slice(3))
         .withColumn("l_extendedprice", col("l_extendedprice") + 2.0), slice(3))),
       "b2_cow_delete" -> (() => t.delete(slice(5))),
       "b2_cow_update" -> (() => t.update(slice(7), Map("l_quantity" -> (col("l_quantity") + 1)))),
-      "b2_cow_delete_keys" -> (() => t.deleteKeys(li.filter(slice(9)).select("lkey"))))
+      "b2_cow_delete_keys" -> (() => t.deleteKeys(fx.li.filter(slice(9)).select("lkey"))))
 
     val names = args.lift(3).fold(writePath.map(_._1))(_.split(",").toSeq.filter(_.nonEmpty))
     names.foreach { n =>
