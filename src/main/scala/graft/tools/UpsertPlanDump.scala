@@ -14,7 +14,8 @@ import graft.lake.{LakeTable, TableSpec}
   *     `b2_cow_upsert`, `b8_changes` (the CDF read after it),
   *     `b2_cow_overwrite_where`, `b2_cow_delete`, `b2_cow_update` and
   *     `b2_cow_delete_keys`. Every execution the operation runs is
-  *     captured via a QueryExecutionListener, executed plans numbered;
+  *     captured via a QueryExecutionListener, executed plans numbered,
+  *     and the table's row count and row digest after it are printed;
   *   - any other name is a declared query (`SparkEntry.queries`), dumped
   *     as its `.explain("formatted")` — the plans/r13 evidence artifacts.
   * Without a name list, every write-path capture runs.
@@ -71,6 +72,14 @@ object UpsertPlanDump {
         case Some((_, op)) =>
           t // created outside the capture
           capture(n)(op())
+          // content check across builds: row count and an order-free row
+          // hash of the table after the op (meta columns vary per run), read
+          // in a session of its own so no later capture's listener sees it
+          val data = LakeTable.load(spark.newSession(), t.path).read()
+            .drop(LakeTable.META_COLS: _*)
+          val r = data.agg(count(lit(1)),
+            sum(xxhash64(data.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
+          println(s"$n table rows=${r.get(0)} digest=${r.get(1)}")
         case None =>
           val df = graft.SparkEntry.queries(n)(spark, sfDir)
           write(n, df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
