@@ -423,7 +423,9 @@ object Bench {
       // E9: incremental-dedup probe — a new batch against the persisted
       // fingerprint index (index build untimed: it is long-lived state at
       // scale; the recurring cost is the probe). Timed: within-batch dedup
-      // + pruned containsKeys probe + anti-join, cost ∝ batch.
+      // + the eager containsKeys probe (key summary, pruning, one job
+      // collecting the present keys) + anti-join with that driver-side
+      // set, cost ∝ batch.
       entry("e9_inc_dedup") {
         val docs = fx.docs.select("doc_id", "text")
         val even = docs.filter(col("doc_id") % 2 === 0)

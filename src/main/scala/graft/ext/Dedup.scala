@@ -37,28 +37,35 @@ object Dedup {
     *
     * Within-batch duplicates keep the smallest id; batch rows whose
     * fingerprint the index already contains drop. `commit = true` then
-    * upserts the survivors' (fingerprint, id) into the index so the next
+    * inserts the survivors' (fingerprint, id) into the index so the next
     * batch probes an up-to-date corpus memory — the index is the only
-    * state, and it grows by distinct content, not by corpus reads.
+    * state, and it grows by distinct content, not by corpus reads. The
+    * probe and the insert read ONE index snapshot and commit the next
+    * version (a conflicting commit reruns both), so two writers racing on
+    * the same new content never both keep it.
     *
-    * Scale shape: one hash agg over the batch + [[graft.lake.LakeTable
-    * .containsKeys]] (key-range + bloom-sidecar pruned probe: cost ∝ batch
-    * and its candidate index files, never index size) + one anti-join.
-    * The returned frame carries the batch's columns plus `fingerprint`. */
+    * Scale shape: one hash agg over the batch, then the index's pruned
+    * probe — the batch's key summary (one job), key-range + bloom-sidecar
+    * pruning and one job collecting the batch keys found in the candidate
+    * index files, cost ∝ batch and its candidate files, never index size
+    * ([[graft.lake.LakeTable.containsKeys]]). `commit = true` probes and
+    * inserts in one write that writes the absent rows with no detection
+    * scan and no rewrite. The returned frame, the batch rows minus the
+    * present fingerprints (an anti-join with that driver-side set),
+    * carries the batch's columns plus `fingerprint`. */
   def incrementalDedup(index: graft.lake.LakeTable, batch: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       commit: Boolean = true): DataFrame = {
-    val key = index.spec.key
+    val spec = index.spec
+    val key = spec.key
     val fp = batch.withColumn("fingerprint", TextAnalysis.fingerprint(col(textCol)))
     val firstIds = fp.groupBy("fingerprint").agg(min(col(idCol)).as(idCol))
     val inBatch = fp.join(firstIds, Seq("fingerprint", idCol), "left_semi")
-    val seen = index.containsKeys(fp.select(col("fingerprint").as(key)))
-      .withColumnRenamed(key, "fingerprint")
-    val survivors = inBatch.join(seen, Seq("fingerprint"), "left_anti")
-    if (commit)
-      index.upsert(survivors.select(col("fingerprint").as(key),
-        col(idCol).cast("long").as(index.spec.precombine)))
-    survivors
+    val seen =
+      if (commit) index.insertAbsent(inBatch.select(col("fingerprint").as(key),
+        col(idCol).cast("long").as(spec.precombine)))
+      else index.containsKeys(fp.select(col("fingerprint").as(key)))
+    inBatch.join(seen.withColumnRenamed(key, "fingerprint"), Seq("fingerprint"), "left_anti")
   }
 
   // ---- shingles -------------------------------------------------------

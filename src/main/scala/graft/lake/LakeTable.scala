@@ -542,24 +542,57 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Existence probe: the DISTINCT values of `keys`' `spec.key` column
-    * already present in the snapshot — the upsert's pruned detection scan
-    * exposed standalone (the primitive behind incremental cross-snapshot
-    * dedup: "which of these fingerprints has the corpus already seen?").
+    * already present in the snapshot, in the table's key type (the
+    * primitive behind incremental cross-snapshot dedup: "which of these
+    * fingerprints has the corpus already seen?"). Key-only semantics: on
+    * partitioned tables a key reports existing in ANY partition.
     *
-    * CoW snapshots scan only candidate files — partition, key-range and
-    * bloom-sidecar pruning narrow the file set exactly as `upsert` does —
-    * so probe cost scales with the batch and its matching files, never the
-    * table. MoR snapshots with live logs probe through the merged realtime
-    * read instead (a tombstoned key must NOT report as existing). Key-only
-    * semantics: on partitioned tables a key reports existing in ANY
-    * partition. */
+    * Eager and collected on the driver: the batch's [[KeySummary]] prunes
+    * the candidate files (key range and bloom sidecars, exactly as
+    * `upsert` does) and one job collects the batch keys found in them
+    * ([[presentKeys]]), so the answer is a local frame bounded by the
+    * summary and its cost scales with the batch and its matching files,
+    * never the table. Two cases keep the lazy distributed probe: a batch
+    * past the summary's cap, and a MoR snapshot with live logs, which
+    * probes through the merged realtime read (a tombstoned key must NOT
+    * report as existing). */
   def containsKeys(keys: DataFrame): DataFrame = {
     val s = snapshot()
+    val k = keys.select(col(s.spec.key))
+    presentKeys(s, k).fold(probeKeys(s, k))(_.ids)
+  }
+
+  /** [[containsKeys]] on `s` as a lazy distributed probe: the key-only
+    * frame `k`'s distinct keys semi-joined with the candidate rows. */
+  private def probeKeys(s: Snapshot, k: DataFrame): DataFrame = {
     val key = s.spec.key
-    val k = keys.select(col(key))
     k.filter(col(key).isNotNull).distinct()
       .join(candidateRows(s, k).select(col(key)), Seq(key), "left_semi")
   }
+
+  /** The keys of the key-only frame `k` present in `s`, as a bounded
+    * [[KeySummary]] of their own: `k`'s summary prunes the candidate
+    * files once, and one job collects the summary keys found in them,
+    * each task returning its own set (as [[rewriteTouched]] collects
+    * touched paths; no shuffle, no join). None where the answer cannot
+    * be bounded on the driver: `k`'s summary is wide, or `s` has live
+    * MoR logs, whose merge decides presence. */
+  private def presentKeys(s: Snapshot, k: DataFrame): Option[KeySummary] =
+    if (s.live.exists(_.log)) None
+    else {
+      val ks = keyShape(k, s.shape)
+      val inKeys = keySummary(k, ks)
+      inKeys.keys.map { rows =>
+        val cands = pruneCandidates(s, inKeys)
+        val found = inKeys.semi(readFiles(cands, s.shape).select(ks.joinIdCols.map(col): _*))
+        // a subset of the summary's keys, so the set is never wide
+        val present =
+          if (cands.isEmpty) Array.empty[Row]
+          else boundedDistinct(found, math.max(rows.length, 1)).get
+        new KeySummary(ks, spark.createDataFrame(java.util.Arrays.asList(present: _*),
+          found.schema), Some(present))
+      }
+    }
 
   /** Pruned candidate read for a key set: the rows of files that MIGHT
     * hold one of `keys` (same partition/key-range/bloom pruning as the
@@ -952,6 +985,44 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     persistUnlessCheap(checkedKeys(s, conformed)) { incoming =>
       if (s.spec.mor) upsertMor(s, incoming, evolved, txn, copyFiles, idHighs)
       else upsertCow(s, incoming, evolved, txn, copyFiles, idHighs, txnMany)
+    }
+  }
+
+  /** Insert-if-absent: commit the rows of `df` whose key is absent from
+    * the table and return the distinct keys of `df` that were present,
+    * as [[containsKeys]] answers them (key-only, in the table's key type).
+    * One attempt on one [[Snapshot]] `s`: the batch's [[KeySummary]] is
+    * built once and prunes once, one job collects the present keys
+    * ([[presentKeys]]), and the absent rows take the CoW upsert's
+    * all-insert path (stamp, within-batch latest-wins dedup, write) at
+    * `s.version + 1` — no touched-file detection and no rewrite, since no
+    * live row shares their key. A conflicting commit reruns the whole
+    * attempt, probe included, so a key another writer committed meanwhile
+    * is found present. The commit is an `upsert`, as the upsert of the
+    * absent rows would be. A batch past the summary's cap, a snapshot
+    * with live MoR logs and a table with identity columns take the
+    * general path on the same snapshot: the distributed probe, then the
+    * upsert of the absent rows. */
+  private[graft] def insertAbsent(df: DataFrame): DataFrame = retrying { s =>
+    val key = s.spec.key
+    def general(): DataFrame = {
+      val present = probeKeys(s, df.select(col(key)))
+      upsertAt(s, df.join(present, Seq(key), "left_anti"))
+      present
+    }
+    if (s.spec.identity.nonEmpty) general()
+    else persistUnlessCheap(checkedKeys(s, conform(s, df)._1)) { incoming =>
+      presentKeys(s, incoming.select(col(key))) match {
+        case None => general()
+        case Some(present) =>
+          writeCommit(s, "upsert") { (writeId, commitTime) =>
+            val absent = present.anti(incoming)
+            val winner = dedupLatest(stampMeta(s, absent, commitTime), s.shape.idCols,
+              s.spec.precombine, xxhash64(absent.columns.toSeq.map(col): _*))
+            Seq(writeFiles(s, winner, writeId, log = false))
+          }
+          present.ids
+      }
     }
   }
 
@@ -2705,9 +2776,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * it); past that they join the distributed distinct frame. Past its
     * cap the summary is WIDE: `keys` is None. `ids` holds exactly the join
     * ids, in the table's types. */
-  private final class KeySummary(val sh: Shape, val ids: DataFrame) {
-    lazy val keys: Option[Array[Row]] = boundedDistinct(ids,
-      if (sh.spec.bloomBitsPerKey > 0) LakeTable.KEY_SUMMARY_CAP else LakeTable.KEY_SET_LITERAL_CAP)
+  private final class KeySummary(val sh: Shape, val ids: DataFrame,
+      known: Option[Array[Row]] = None) {
+    /** `known`: identities already collected on the driver (`ids` is then
+      * their local frame), so deriving the summary runs no job. */
+    lazy val keys: Option[Array[Row]] = known.orElse(boundedDistinct(ids,
+      if (sh.spec.bloomBitsPerKey > 0) LakeTable.KEY_SUMMARY_CAP else LakeTable.KEY_SET_LITERAL_CAP))
     // a literal set matches exactly what the equi-join matches only where
     // SQL equality is value equality: not for float/double (joins
     // normalize -0.0 and NaN), binary or collated strings — those keep the

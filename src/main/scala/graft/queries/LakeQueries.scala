@@ -2835,8 +2835,10 @@ object LakeQueries {
     // (graft table keyed on content md5, bloom sidecars) seeded from the
     // even-doc_id half of the corpus; a new batch of odd docs + planted
     // copies of indexed docs + planted within-batch dups dedups against it.
-    // Index-hits and within-batch later copies drop; cost ∝ batch via the
-    // pruned containsKeys probe, never index size.
+    // Index-hits and within-batch later copies drop, and the survivors
+    // commit to the index in the same write that probed it (one snapshot,
+    // no detection scan); cost ∝ batch via the pruned probe, never index
+    // size.
     "q98_incremental_dedup" -> ((
       (s: SparkSession, d: String) => {
         val dir = freshDir(s"incdedup_${d.replaceAll("[^a-z0-9.]", "_")}")

@@ -23,6 +23,12 @@ import graft.lake.LakeTable
   * would LOSE data — an index-first replay would see its own fingerprints
   * and drop the batch before the target ever saw it.
   *
+  * The index absorbs the survivors through its insert-if-absent write
+  * ([[graft.lake.LakeTable.insertAbsent]]): they were just probed absent,
+  * so the write re-probes one snapshot and inserts, with no touched-file
+  * detection; a fingerprint another writer indexed meanwhile keeps its
+  * stored id.
+  *
   * Scale shape: per batch, cost ∝ batch + its pruned candidate index files
   * (never index size); state lives in two graft tables, not in streaming
   * state — restartable from any checkpoint. */
@@ -48,7 +54,7 @@ object DedupStream {
             if (!survivors.isEmpty) {
               target.upsert(survivors.drop("fingerprint"),
                 txn = Some(("graft-dedup-ingest", batchId)))
-              index.upsert(survivors.select(
+              index.insertAbsent(survivors.select(
                 col("fingerprint").as(index.spec.key),
                 col(idCol).cast("long").as(index.spec.precombine)))
               ()

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ext.Dedup
 import graft.lake.{Commit, CommitConflictException, CommitLog, LakeTable, TableSpec}
 
 /** Optimistic concurrency: version claims are exclusive, losing writers
@@ -110,6 +111,40 @@ class ConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  // Writer A's dedup batch runs writer B's whole incremental dedup the
+  // first time a job evaluates it, so B indexes the shared content while
+  // A's attempt is between probing the index and committing. A must rerun
+  // its probe on B's commit: the content survives for B only, and the
+  // index keeps B's id.
+  test("racing incremental dedups keep shared content once, for the writer that committed it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_occ_dedup").toString
+    LakeTable.create(spark, dir, TableSpec("fingerprint", "doc_id", bloomBitsPerKey = 10),
+      Dedup.copyCounts(Seq((1L, "seed document")).toDF("doc_id", "text"))
+        .select(col("fingerprint"), col("keep_id").cast("long").as("doc_id")))
+    val shared = "content both writers land"
+    @volatile var survivorsB = Set.empty[Long]
+    RaceHook.arm(() => {
+      survivorsB = Dedup.incrementalDedup(LakeTable.load(spark, dir),
+          Seq((10L, shared)).toDF("doc_id", "text"))
+        .select("doc_id").as[Long].collect().toSet
+      ()
+    }, until = () => LakeTable.load(spark, dir).latestVersion >= 1)
+    val race = udf((_: Long) => RaceHook.fire()).asNondeterministic()
+    val batchA = spark.range(2)
+      .select((col("id") + 20L).as("doc_id"),
+        when(col("id") === 0, shared).otherwise("content only A lands").as("text"))
+      .filter(race(col("doc_id")))
+    val survivorsA = Dedup.incrementalDedup(LakeTable.load(spark, dir), batchA)
+      .select("doc_id").as[Long].collect().toSet
+    assert(RaceHook.ran(), "writer B never ran")
+    assert(survivorsB == Set(10L))
+    assert(survivorsA == Set(21L), s"A's survivors: $survivorsA")
+    val index = LakeTable.load(spark, dir).read()
+    assert(index.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 10L, 21L))
+    assert(index.select("fingerprint").distinct().count() == 3)
+  }
+
   test("a restore losing a race never deletes historical files") {
     import spark.implicits._
     val path = seedTable("restore_race")
@@ -201,29 +236,39 @@ class ConcurrencySpec extends AnyFunSuite {
   }
 }
 
-/** The racing writer for ConcurrencySpec's mid-attempt test: the first
+/** The racing writer for ConcurrencySpec's mid-attempt tests: the first
   * [[fire]] (from inside a Spark task) runs the armed writer on a thread
-  * of its own and waits for it. */
+  * of its own and waits for it to end, or only until `landed` holds — a
+  * writer that persists a frame must not finish inside the task whose job
+  * is building another persisted frame (its unpersist would wait for that
+  * build's lock). */
 object RaceHook {
   private val fired = new java.util.concurrent.atomic.AtomicBoolean(true)
   @volatile private var writer: () => Unit = () => ()
+  @volatile private var landed: () => Boolean = () => false
+  @volatile private var thread: Option[Thread] = None
   @volatile private var failure: Option[Throwable] = None
 
-  def arm(w: () => Unit): Unit = { writer = w; failure = None; fired.set(false) }
+  def arm(w: () => Unit, until: () => Boolean = () => false): Unit = {
+    writer = w; landed = until; thread = None; failure = None; fired.set(false)
+  }
 
   def fire(): Boolean = {
     if (fired.compareAndSet(false, true)) {
       val t = new Thread(() =>
         try writer() catch { case e: Throwable => failure = Some(e) })
+      thread = Some(t)
       t.start()
-      t.join()
+      while (t.isAlive && failure.isEmpty && !landed()) t.join(50)
     }
     true
   }
 
-  /** Did the armed writer run to completion? Rethrows its failure. */
+  /** Did the armed writer run to completion? Waits for it and rethrows its
+    * failure. */
   def ran(): Boolean = {
+    thread.foreach(_.join(600000))
     failure.foreach(e => throw e)
-    fired.get
+    fired.get && thread.forall(!_.isAlive)
   }
 }

@@ -15,7 +15,8 @@ import graft.lake.{FileAction, LakeTable, TableSpec}
   * detection and the contested split. Its prune decisions must equal the
   * distributed aggregate's (Spark's own orderings), a batch past the cap
   * must write exactly what the same change split under the cap writes, and
-  * a small CoW upsert stays inside its Spark-job budget. */
+  * a small CoW upsert and an incremental dedup batch stay inside their
+  * Spark-job budgets. */
 class KeySummarySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -173,24 +174,66 @@ class KeySummarySpec extends AnyFunSuite {
     }
   }
 
-  test("a small CoW upsert runs at most 4 Spark jobs") {
-    val t = LakeTable.create(spark, tmp(), TableSpec("k", "ver"),
-      spark.range(0, 100, 1, 2).select(col("id").as("k"), lit(1L).as("ver"), col("id").as("v")),
-      bulkInsert = true)
-    val batch = Seq((5L, 2L, -5L), (60L, 2L, -60L), (500L, 2L, -500L)).toDF("k", "ver", "v")
+  /** The Spark jobs `body` starts, counted once the listener bus settles. */
+  private def jobsOf(body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      t.upsert(batch)
+      body
       var last = -1
       while (n.get() != last) { last = n.get(); Thread.sleep(300) }
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(n.get() <= 4, s"a 3-row CoW upsert must run at most 4 jobs, ran ${n.get()}")
+    n.get()
+  }
+
+  test("a small CoW upsert runs at most 4 Spark jobs") {
+    val t = LakeTable.create(spark, tmp(), TableSpec("k", "ver"),
+      spark.range(0, 100, 1, 2).select(col("id").as("k"), lit(1L).as("ver"), col("id").as("v")),
+      bulkInsert = true)
+    val batch = Seq((5L, 2L, -5L), (60L, 2L, -60L), (500L, 2L, -500L)).toDF("k", "ver", "v")
+    val n = jobsOf(t.upsert(batch))
+    assert(n <= 4, s"a 3-row CoW upsert must run at most 4 jobs, ran $n")
     assert(t.read().count() == 101)
     assert(t.read().filter(col("ver") === 2L).select("k", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((5L, -5L), (60L, -60L), (500L, -500L)))
+  }
+
+  test("an incremental dedup batch probes and inserts in at most 9 Spark jobs, one version each") {
+    import graft.ext.Dedup
+    // a fingerprint index over the even half of 40 documents, unpartitioned
+    // and partitioned by a generated shard column, whose write pays one
+    // more exchange: writeFiles repartitions the rows by the partition
+    val indexed = (0 until 40).filter(_ % 2 == 0).map(i => (i.toLong, s"document $i"))
+      .toDF("doc_id", "text")
+    val seed = Dedup.copyCounts(indexed)
+      .select(col("fingerprint"), col("keep_id").cast("long").as("doc_id"))
+    val specs = Seq(TableSpec("fingerprint", "doc_id", bloomBitsPerKey = 10) -> 9,
+      TableSpec("fingerprint", "doc_id", partition = Some("shard"), bloomBitsPerKey = 10,
+        generated = Map("shard" -> "substring(fingerprint, 1, 1)")) -> 10)
+    specs.foreach { case (spec, budget) =>
+      val index = LakeTable.create(spark, tmp(), spec, seed)
+      // each batch: two new contents, a within-batch copy of one of them,
+      // an indexed document and document 5, new in batch 0 only; read from
+      // a landed file as a real batch is
+      val survivors = Seq(0, 1).map { b =>
+        val dir = tmp() + "/batch"
+        Seq((1000L * b + 1, s"fresh $b one"), (1000L * b + 2, s"fresh $b two"),
+          (1000L * b + 3, s"fresh $b one"), (1000L * b + 4, "document 4"),
+          (1000L * b + 5, "document 5")).toDF("doc_id", "text").coalesce(1).write.parquet(dir)
+        val (batch, v) = (spark.read.parquet(dir), index.latestVersion)
+        var out: DataFrame = null
+        val n = jobsOf { out = Dedup.incrementalDedup(index, batch) }
+        assert(n <= budget, s"${spec.partition}: batch $b ran $n jobs, want at most $budget")
+        assert(index.latestVersion == v + 1, s"${spec.partition}: batch $b committed " +
+          s"${index.latestVersion - v} versions")
+        out.select("doc_id").as[Long].collect().toSet
+      }
+      assert(survivors == Seq(Set(1L, 2L, 5L), Set(1001L, 1002L)), s"${spec.partition}")
+      val fps = index.read().select("fingerprint")
+      assert(fps.count() == 25 && fps.distinct().count() == 25, s"${spec.partition}")
+    }
   }
 }

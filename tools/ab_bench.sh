@@ -1,9 +1,18 @@
 #!/usr/bin/env bash
 # Interleaved A/B bench for optimization work: alternate HEAD (current
 # repo classes) and CONTROL (.opt-ctrl worktree classes) runs of a bench
-# entry subset in the same window, so host drift hits both arms equally.
+# entry subset in the same window, so host drift hits both arms equally;
+# which arm runs first alternates from pair to pair.
 # Usage: tools/ab_bench.sh <entries-csv> <n_pairs> <out_dir> [mainClass]
+#        tools/ab_bench.sh perfbench <parent_dir> <change_dir> <workload> \
+#          <seed_lo> <seed_hi> [out_dir]
+# The perfbench mode runs perfbench/run.py --trace 0 pairs of two
+# checkouts, one per seed (tools/ab_perfbench.py).
 set -uo pipefail
+if [ "${1:-}" = perfbench ]; then
+  shift
+  exec python3 "$(dirname "$0")/ab_perfbench.py" "$@"
+fi
 ENTRIES="$1"; N="${2:-3}"; OUT="${3:-/tmp/ab_bench}"; MAIN="${4:-graft.Bench}"
 # fail fast on a missing classpath file — otherwise a bench arm silently
 # writes empty JSON and the python summary dies with an unrelated traceback
@@ -31,8 +40,13 @@ run() { # arm cpfile idx
   echo "== $arm $i: $(head -c 200 "$OUT/${arm}_${i}.json")"
 }
 for i in $(seq 1 "$N"); do
-  run head /tmp/graft_cp.txt "$i"
-  run ctrl /tmp/graft_cp_ctrl.txt "$i"
+  if [ $((i % 2)) -eq 1 ]; then
+    run head /tmp/graft_cp.txt "$i"
+    run ctrl /tmp/graft_cp_ctrl.txt "$i"
+  else
+    run ctrl /tmp/graft_cp_ctrl.txt "$i"
+    run head /tmp/graft_cp.txt "$i"
+  fi
 done
 python3 - "$OUT" "$N" <<'PY'
 import json, statistics, sys
