@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.lake.{LakeTable, TableSpec}
 
@@ -97,17 +97,18 @@ class TextIndex private[ext] (spark: SparkSession, val path: String) {
   private def postingsTable: LakeTable = LakeTable.load(spark, s"$path/postings")
   private def docsTable: LakeTable = LakeTable.load(spark, s"$path/docs")
 
-  /** The two BM25 corpus scalars (doc count, total tokens) from the docs
-    * table's commit-log METADATA — exact live row count + the declared
-    * `dl` sum column, zero data files opened. Falls back to one bounded
-    * aggregate scan if any live file predates the sum column. */
+  /** The two BM25 corpus scalars (doc count, total tokens) as the
+    * metadata answer to `count(*), sum(dl)` over one snapshot of the docs
+    * table ([[graft.sql.GraftMetadataOnlyCount.answer]]: live row counts +
+    * the declared `dl` sum column, zero data files opened). Falls back to
+    * one bounded aggregate scan when metadata is not exact, e.g. a live
+    * file predates the sum column. */
   private def corpusScalars: (Long, Long) = {
+    import graft.sql.GraftMetadataOnlyCount.{answer, WantCount, WantSum}
     val dt = docsTable
-    dt.fileSums("dl") match {
-      case Some(sums) =>
-        val n = dt.liveFiles(None).map(a => a.rows - a.dvRows).sum
-        (n, sums.map(s => BigInt(s._1)).sum.toLong)
-      case None =>
+    answer(dt.snapshot(), Seq(WantCount, WantSum("dl", LongType)), None, None) match {
+      case Some(Seq(Seq(n: Long, tot))) => (n, Option(tot).fold(0L)(_.asInstanceOf[Long]))
+      case _ =>
         val r = dt.read()
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L))).head()
         (r.getLong(0), r.getLong(1))

@@ -83,7 +83,7 @@ private[graft] object IcebergExport {
       "iceberg export of a column-mapped table would mismatch physical names")
     require(live.forall(_.base.isEmpty),
       "iceberg export needs self-contained files (shallow clone/convert) — compact() first")
-    require(!tbl.mixedPartitionEras(live, spec),
+    require(!LakeTable.mixedPartitionEras(live, spec),
       "iceberg export needs a single partition layout — compact() after partition evolution")
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

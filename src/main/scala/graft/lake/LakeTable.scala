@@ -52,15 +52,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   private[graft] def snapshot(asOf: Option[Long] = None): Snapshot =
     Snapshot.of(path, conf, asOf)
 
-  /** (live file count, live row count) from commit-log metadata — no scan.
-    * Rows are the per-file totals; for MoR the log rows count too (they
-    * are post-images, so this over-counts contested keys — same caveat as
-    * Hudi's timeline row stats). */
-  def liveFileStats: (Long, Long) = {
-    val live = liveFiles(None)
-    (live.size.toLong, live.map(a => a.rows - a.dvRows).sum)
-  }
-
   /** Version whose snapshot was current at `epochMillis` (Delta
     * `TIMESTAMP AS OF` semantics): the newest commit at-or-before the
     * instant. Commit times are UTC-millisecond, strictly monotonic. */
@@ -73,93 +64,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     at.map(_.version).max
   }
 
-  /** Snapshot row count from commit-log metadata alone, when it is EXACT:
-    * base-file rows minus DV-killed rows. Live MoR log files make the
-    * metadata count an over-estimate (contested keys merge at read), so the
-    * answer is None and callers must fall back to a scan. Feeds the
-    * metadata-only `count(*)` rewrite ([[graft.sql.GraftMetadataOnlyCount]]). */
-  def exactRowCount(asOf: Option[Long] = None): Option[Long] = {
-    val live = liveFiles(asOf)
-    if (live.exists(_.log)) None
-    else Some(live.map(a => a.rows - a.dvRows).sum)
-  }
-
-  /** Per-live-file (min, max) of `colName` in FooterStats' rendered string
-    * forms, when they are EXACT for the whole snapshot: the record key and
-    * declared `statsColumns` carry file stats; live MoR logs, tombstones,
-    * or deletion vectors (which may have killed an extremal row), or any
-    * file with sentinel/partial stats, make the metadata inexact → None.
-    * Feeds the metadata-only MIN/MAX rewrite. */
-  def fileExtremes(colName: String, asOf: Option[Long] = None): Option[Seq[(String, String)]] =
-    fileExtremesWithPartition(colName, asOf).map(_.map(_._2))
-
-  /** [[fileExtremes]] with each file's partitionValue attached (null
-    * partition = `__HIVE_DEFAULT_PARTITION__`) — feeds the
-    * partition-grouped metadata aggregate. Same exactness gates. */
-  def fileExtremesWithPartition(colName: String, asOf: Option[Long] = None):
-      Option[Seq[(String, (String, String))]] = {
-    val s = snapshot(asOf)
-    val live = s.live
-    if (live.isEmpty) return None
-    if (live.exists(a => a.log || a.dv.isDefined || a.dvRows > 0)) return None
-    val sp = s.spec
-    // after a partition evolution, an old-era file's stored partitionValue
-    // belongs to a DIFFERENT column — grouped answers would mis-attribute
-    if (mixedPartitionEras(live, sp)) return None
-    val perFile = live.map { a =>
-      val mm =
-        if (colName.equalsIgnoreCase(sp.key)) Some((a.minKey, a.maxKey))
-        else a.colStats.collectFirst { case (c, s) if c.equalsIgnoreCase(colName) => s }
-      mm.map(a.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__") -> _)
-    }
-    // sentinel whole-range stats ("", "￿") mean "unknown" — an actual
-    // empty-string minimum is indistinguishable, so treat both as opaque
-    if (perFile.exists(s => s.isEmpty || s.get._2._1.isEmpty || s.get._2._2 == "￿")) None
-    else Some(perFile.map(_.get))
-  }
-
-  /** Per-live-file (exact sum string, non-null count) of `colName`, when
-    * the snapshot-wide total is EXACT: every live file must carry sums for
-    * the column (files written before the column joined `sumColumns`
-    * don't), and live MoR logs, tombstones, or deletion vectors (which
-    * drop rows the stored sums still include) all make metadata inexact →
-    * None. Feeds the metadata-only SUM/COUNT(col) rewrite. */
-  def fileSums(colName: String, asOf: Option[Long] = None): Option[Seq[(String, Long)]] =
-    fileSumsWithPartition(colName, asOf).map(_.map(_._2))
-
-  /** [[fileSums]] with each file's partitionValue attached — feeds the
-    * partition-grouped metadata aggregate. Same exactness gates. */
-  def fileSumsWithPartition(colName: String, asOf: Option[Long] = None):
-      Option[Seq[(String, (String, Long))]] = {
-    val s = snapshot(asOf)
-    val live = s.live
-    if (live.isEmpty) return None
-    if (live.exists(a => a.log || a.tombstone || a.dv.isDefined || a.dvRows > 0)) return None
-    // partition-evolution era guard — see fileExtremesWithPartition
-    if (mixedPartitionEras(live, s.spec)) return None
-    // files store PHYSICAL names (column mapping), callers pass LOGICAL
-    val phys = s.spec.physical(colName)
-    val perFile = live.map { a =>
-      a.colSums.collectFirst { case (c, sv) if c.equalsIgnoreCase(phys) => sv }
-        .map(a.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__") -> _)
-    }
-    if (perFile.exists(_.isEmpty)) None else Some(perFile.map(_.get))
-  }
-
-  /** Exact per-partition live row counts from commit-log metadata (DV'd
-    * files discounted); None for unpartitioned tables or when live MoR
-    * logs make counts inexact. Keys are the stored partitionValue strings
-    * (null partition = `__HIVE_DEFAULT_PARTITION__`). */
-  def partitionRowCounts(asOf: Option[Long] = None): Option[Map[String, Long]] = {
-    val s = snapshot(asOf)
-    if (s.spec.partition.isEmpty) return None
-    // partition-evolution era guard — see fileExtremesWithPartition
-    if (mixedPartitionEras(s.live, s.spec)) return None
-    if (s.live.exists(_.log)) None
-    else Some(s.live.groupBy(_.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__"))
-      .map { case (pv, as) => pv -> as.map(a => a.rows - a.dvRows).sum })
-  }
-
   /** Total on-disk bytes of the live snapshot, from commit-log metadata —
     * the table-size statistic Catalyst's join planner consumes (a small dim
     * table under `spark.sql.autoBroadcastJoinThreshold` then broadcasts
@@ -167,9 +71,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * one driver-side file-status call each; DV'd files are discounted by
     * the killed-row fraction so a mostly-deleted file doesn't block a
     * broadcast. */
-  def sizeBytes(asOf: Option[Long] = None): Long = {
+  def sizeBytes(asOf: Option[Long] = None): Long = sizeAt(snapshot(asOf))
+
+  /** [[sizeBytes]] of a resolved snapshot. */
+  private[graft] def sizeAt(s: Snapshot): Long = {
     val fs = new Path(path).getFileSystem(conf)
-    liveFiles(asOf).map { a =>
+    s.live.map { a =>
       val physical =
         if (a.bytes > 0) a.bytes
         else try fs.getFileStatus(new Path(s"${a.base.getOrElse(dataDir)}/${a.path}")).getLen
@@ -318,36 +225,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       val v = wid / LakeTable.WRITE_SLOTS
       DataType.fromJson(CommitLog.read(path, v, conf).schemaJson).asInstanceOf[StructType]
     }
-  }
-
-  /** The hive-style dir column a file was physically WRITTEN under, parsed
-    * from its own path (`_v=N/<col>=<val>/part-*.parquet`) — the file's
-    * PARTITION ERA. After [[changePartition]] eras differ per file; the
-    * layout is self-describing, so evolution needed no commit-log change.
-    * None = flat layout (unpartitioned era) or a foreign/converted base.
-    * Returns the PHYSICAL dir name (`_bucket` for bucketed files). */
-  private[graft] def partitionColOf(a: FileAction): Option[String] = {
-    val segs = a.path.split("/")
-    if (segs.length >= 3 && segs(0).startsWith(s"$WRITE_ID=")) {
-      val d = segs(1)
-      val i = d.indexOf('=')
-      if (i > 0) Some(LakeTable.unescapePathName(d.substring(0, i))) else None
-    } else None
-  }
-
-  /** The dir column files of spec `sp` are written under: the partition
-    * column, or `_bucket` for bucketed tables. */
-  private def expectedDirCol(sp: TableSpec): Option[String] =
-    if (sp.buckets > 0) Some(TableSpec.BUCKET_COL) else sp.partition
-
-  /** True when any live file predates the current partitioning layout —
-    * possible only after [[changePartition]], until a full rewrite
-    * (compact()/zorder()) migrates every row forward. Every metadata
-    * shortcut keyed on `partitionValue` must refuse mixed-era snapshots:
-    * an old-era file's stored value belongs to a DIFFERENT column. */
-  private[graft] def mixedPartitionEras(live: Seq[FileAction], sp: TableSpec): Boolean = {
-    val want = expectedDirCol(sp)
-    live.exists(a => partitionColOf(a) != want)
   }
 
   /** A file's recorded (min, max) stat strings for `c`: key-range for the
@@ -2622,15 +2499,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   /** Newest `ANALYZE` stats at-or-before `asOf` (latest by default):
     * walk the commit tail backwards — reads are memoized, so this is a
     * handful of cached lookups, not a log replay. */
-  def tableStats(asOf: Option[Long] = None): Option[TableStats] = {
-    var v = asOf.map(a => math.min(a, latestVersion)).getOrElse(latestVersion)
-    while (v >= 0) {
-      val c = CommitLog.read(path, v, conf)
-      if (c.tableStats.isDefined) return c.tableStats
-      v -= 1
-    }
-    None
-  }
+  def tableStats(asOf: Option[Long] = None): Option[TableStats] = tableStatsAt(snapshot(asOf))
+
+  /** [[tableStats]] of a resolved snapshot. */
+  private[graft] def tableStatsAt(s: Snapshot): Option[TableStats] =
+    (s.version to 0L by -1L).iterator.flatMap(v => s.at(v).commit.tableStats).nextOption()
 
   /** `ALTER TABLE … SET TBLPROPERTIES` — edit the MUTABLE TableSpec knobs
     * with a metadata-only commit (OCC-safe): auto-maintenance thresholds,
@@ -3337,6 +3210,36 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 }
 
 object LakeTable {
+  /** The hive-style dir column a file was physically WRITTEN under, parsed
+    * from its own path (`_v=N/<col>=<val>/part-*.parquet`) — the file's
+    * PARTITION ERA. After [[changePartition]] eras differ per file; the
+    * layout is self-describing, so evolution needed no commit-log change.
+    * None = flat layout (unpartitioned era) or a foreign/converted base.
+    * Returns the PHYSICAL dir name (`_bucket` for bucketed files). */
+  private[graft] def partitionColOf(a: FileAction): Option[String] = {
+    val segs = a.path.split("/")
+    if (segs.length >= 3 && segs(0).startsWith(s"$WRITE_ID=")) {
+      val d = segs(1)
+      val i = d.indexOf('=')
+      if (i > 0) Some(LakeTable.unescapePathName(d.substring(0, i))) else None
+    } else None
+  }
+
+  /** The dir column files of spec `sp` are written under: the partition
+    * column, or `_bucket` for bucketed tables. */
+  private def expectedDirCol(sp: TableSpec): Option[String] =
+    if (sp.buckets > 0) Some(TableSpec.BUCKET_COL) else sp.partition
+
+  /** True when any live file predates the current partitioning layout —
+    * possible only after [[changePartition]], until a full rewrite
+    * (compact()/zorder()) migrates every row forward. Every metadata
+    * shortcut keyed on `partitionValue` must refuse mixed-era snapshots:
+    * an old-era file's stored value belongs to a DIFFERENT column. */
+  private[graft] def mixedPartitionEras(live: Seq[FileAction], sp: TableSpec): Boolean = {
+    val want = expectedDirCol(sp)
+    live.exists(a => partitionColOf(a) != want)
+  }
+
   private[lake] val WRITE_ID = "_v"
   private[lake] val PID = "_graft_pid"
   private[lake] val RANK = "_graft_rank"

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecor
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.lake.TableSpec
+import graft.lake.{LakeTable, Snapshot, TableSpec}
 
 /** One live file of a bucketed snapshot, as the executor-side reader needs
   * it: absolute path, the commit-log-relative identity DV sidecars key on,
@@ -68,7 +68,7 @@ case class BucketMergeSpec(keyOrd: Int, keyType: DataType,
   * Only shallow-clone / converted-in-place snapshots (foreign base dirs)
   * and column-mapped tables still fall back to the general V1 path.
   */
-class GraftBucketScan(path: String, asOf: Option[Long], numBuckets: Int,
+class GraftBucketScan private[graft] (table: LakeTable, snap: Snapshot, numBuckets: Int,
     filesByBucket: Map[Int, Seq[BucketFileDesc]], required: StructType,
     fileSchema: StructType, outIdx: Array[Int], merge: Option[BucketMergeSpec])
   extends Scan with Batch with SupportsReportPartitioning
@@ -81,7 +81,7 @@ class GraftBucketScan(path: String, asOf: Option[Long], numBuckets: Int,
     * scan does, so a bucketed multi-fact join still reorders onto the
     * selective dimension. */
   override def estimateStatistics(): Statistics =
-    GraftScanStats.estimate(path, asOf)
+    GraftScanStats.estimate(table, snap)
 
   override def toBatch: Batch = this
 

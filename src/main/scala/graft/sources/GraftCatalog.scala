@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
@@ -17,7 +18,7 @@ import org.apache.spark.sql.sources.{AlwaysTrue, BaseRelation, Filter, Insertabl
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{CommitLog, IdentityDef, LakeTable, TableSpec}
+import graft.lake.{CommitLog, IdentityDef, LakeTable, Snapshot, TableSpec}
 
 /** DSv2 `TableCatalog` for graft tables (SURVEY.md §7.4): register with
   *
@@ -342,7 +343,7 @@ case class GraftCatalogTable(ident: Identifier, path: String, asOf: Option[Long]
       lake.schemaAt(asOf).fields)
 
   override def partitioning(): Array[Transform] =
-    lake.spec.partition.map(p => Expressions.identity(p)).toArray
+    lake.specAt(asOf).partition.map(p => Expressions.identity(p)).toArray
 
   override def properties(): util.Map[String, String] = {
     val spec = lake.spec
@@ -398,6 +399,10 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
   private var filters: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
   private var aggAnswer: Option[(StructType, Seq[Seq[Any]])] = None
+  // one state of the table behind the aggregate answer and whichever scan
+  // is built, resolved on first use
+  private lazy val table: LakeTable = LakeTable.load(SparkSession.active, path)
+  private lazy val snap: Snapshot = table.snapshot(asOf)
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
@@ -418,154 +423,77 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
     if (filters.nonEmpty) false
     else { limit = Some(n); true }
 
-  /** DSv2 aggregate push-down: unfiltered `COUNT(*)` / `MIN(col)` /
-    * `MAX(col)` — ungrouped, or `GROUP BY` the table's PARTITION column —
-    * collapse to commit-log metadata rows (one per group) — zero data
-    * files opened, on ANY session (the optimizer-rule variant,
-    * [[graft.sql.GraftMetadataOnlyCount]], needs GraftExtensions; this is
-    * the pure-DSv2 route). Accepted only when metadata answers EXACTLY:
-    * count needs no live MoR logs (DVs stay exact via rows − dvRows);
-    * extremes additionally need no DVs, key/stats-column footer stats on
-    * every file, and a string-round-trippable type; the grouped form
-    * additionally needs an exact-round-trip partition column type.
-    * Complete push-down: Spark consumes the rows directly, no
-    * re-aggregation — `SELECT p, count(*), max(x) FROM t GROUP BY p` on a
-    * 100 TB table is a pure driver-metadata answer. */
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
+  /** DSv2 aggregate push-down: unfiltered `COUNT(*)`, `COUNT(col)`,
+    * `MIN`/`MAX` and `SUM` — ungrouped, or `GROUP BY` the table's
+    * PARTITION column — collapse to commit-log metadata rows (one per
+    * group), zero data files opened, on ANY session (the optimizer-rule
+    * variant, [[graft.sql.GraftMetadataOnlyCount]], needs GraftExtensions;
+    * this is the pure-DSv2 route). A thin translator onto the rule's
+    * [[graft.sql.GraftMetadataOnlyCount.answer]]: each aggregate is
+    * classified from the schema first, so a shape metadata can never
+    * answer (an expression argument such as `sum(CAST(x AS BIGINT))`, a
+    * float sum, a non-partition-typed group column) returns before the
+    * snapshot is resolved; the answer's exactness gates decide the rest.
+    * Spark asks `supportCompletePushDown` and then `pushAggregation` of
+    * the same aggregation; both fold the one lazily resolved snapshot, so
+    * the second lists nothing. Complete push-down: Spark
+    * consumes the rows directly, no re-aggregation — `SELECT p, count(*),
+    * max(x) FROM t GROUP BY p` on a 100 TB table is a pure driver-metadata
+    * answer. */
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
     tryAnswer(agg).isDefined
 
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    tryAnswer(agg) match {
-      case some @ Some(_) => aggAnswer = some; true
-      case None => false
-    }
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    aggAnswer = tryAnswer(agg)
+    aggAnswer.isDefined
+  }
 
-  private def tryAnswer(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation):
-      Option[(StructType, Seq[Seq[Any]])] =
-    try {
-      import org.apache.spark.sql.connector.expressions.aggregate._
-      if (filters.nonEmpty || limit.isDefined) return None
-      val t = LakeTable.load(SparkSession.active, path)
-      def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
-        e match {
-          case nr: org.apache.spark.sql.connector.expressions.NamedReference
-              if nr.fieldNames.length == 1 =>
-            fullSchema.fields.find(_.name == nr.fieldNames.head)
-          case _ => None
-        }
-      val groupBy = agg.groupByExpressions().toSeq
-      // grouped form: exactly GROUP BY the table's partition column
-      val partField: Option[StructField] = groupBy match {
-        case Seq() => None
-        case Seq(g) =>
-          val f = colOf(g)
-          val exact = Set[org.apache.spark.sql.types.DataType](
-            org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-            org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType,
-            org.apache.spark.sql.types.StringType)
-          if (f.exists(x => t.spec.partition.exists(_.equalsIgnoreCase(x.name)) &&
-              exact.contains(x.dataType))) f
-          else return None
-        case _ => return None
+  private def tryAnswer(agg: Aggregation): Option[(StructType, Seq[Seq[Any]])] = {
+    import org.apache.spark.sql.connector.expressions.aggregate._
+    import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
+    import graft.sql.GraftMetadataOnlyCount.{answer, groupable, Want, WantCount, WantNonNull}
+    if (filters.nonEmpty || limit.isDefined) return None
+    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
+      e match {
+        case nr: org.apache.spark.sql.connector.expressions.NamedReference
+            if nr.fieldNames.length == 1 =>
+          fullSchema.fields.find(_.name == nr.fieldNames.head)
+        case _ => None
       }
-      // per-group answer functions: pv = stored partitionValue string
-      // (ungrouped = single pseudo-group answering from whole-table stats)
-      val longT = org.apache.spark.sql.types.LongType
-      def const(v: Any): String => Any = _ => v
-      val answered: Seq[Option[(StructField, String => Any)]] =
-        agg.aggregateExpressions().toSeq.map {
-          case _: CountStar => partField match {
-            case None => t.exactRowCount(asOf).map(n =>
-              (StructField("count(*)", longT, nullable = false), const(n)))
-            case Some(_) => t.partitionRowCounts(asOf).map(counts =>
-              (StructField("count(*)", longT, nullable = false),
-                (pv: String) => counts(pv)))
-          }
-          case m: Min => colOf(m.column).flatMap { f => partField match {
-            case None => graft.sql.GraftMetadataOnlyCount
-              .metaExtreme(t, f.name, f.dataType, isMin = true, asOf)
-              .map(v => (StructField(s"min(${f.name})", f.dataType), const(v)))
-            case Some(_) => graft.sql.GraftMetadataOnlyCount
-              .metaExtremeByPartition(t, f.name, f.dataType, isMin = true, asOf)
-              .map(vs => (StructField(s"min(${f.name})", f.dataType),
-                (pv: String) => vs(pv)))
-          }}
-          case m: Max => colOf(m.column).flatMap { f => partField match {
-            case None => graft.sql.GraftMetadataOnlyCount
-              .metaExtreme(t, f.name, f.dataType, isMin = false, asOf)
-              .map(v => (StructField(s"max(${f.name})", f.dataType), const(v)))
-            case Some(_) => graft.sql.GraftMetadataOnlyCount
-              .metaExtremeByPartition(t, f.name, f.dataType, isMin = false, asOf)
-              .map(vs => (StructField(s"max(${f.name})", f.dataType),
-                (pv: String) => vs(pv)))
-          }}
-          // SUM(col) / COUNT(col) from stored per-file (sum, nonNull)
-          // pairs — only columns declared in `sumColumns` carry them, and
-          // fileSums bails on MoR logs / DVs / any sum-less file, so the
-          // answer is exact whenever one exists. The result types mirror
-          // Spark's Sum resolution (integral → LongType, decimal →
-          // widened decimal) so complete push-down type-checks.
-          case sm: Sum if !sm.isDistinct => colOf(sm.column).flatMap { f =>
-            val resultDt = f.dataType match {
-              case _: org.apache.spark.sql.types.ByteType |
-                   _: org.apache.spark.sql.types.ShortType |
-                   _: org.apache.spark.sql.types.IntegerType |
-                   _: org.apache.spark.sql.types.LongType => Some(longT)
-              case d: org.apache.spark.sql.types.DecimalType =>
-                Some(org.apache.spark.sql.types.DecimalType(
-                  math.min(38, d.precision + 10), d.scale))
-              case _ => None // float/double sums are order-dependent
-            }
-            resultDt.flatMap { dt => partField match {
-              case None => graft.sql.GraftMetadataOnlyCount
-                .metaSum(t, f.name, dt, asOf)
-                .map(v => (StructField(s"sum(${f.name})", dt), const(v)))
-              case Some(_) => graft.sql.GraftMetadataOnlyCount
-                .metaSumByPartition(t, f.name, dt, asOf)
-                .map(vs => (StructField(s"sum(${f.name})", dt),
-                  (pv: String) => vs(pv)))
-            }}
-          }
-          case ct: Count if !ct.isDistinct => colOf(ct.column).flatMap { f =>
-            partField match {
-              case None => graft.sql.GraftMetadataOnlyCount
-                .metaNonNull(t, f.name, asOf)
-                .map(n => (StructField(s"count(${f.name})", longT,
-                  nullable = false), const(n)))
-              case Some(_) => graft.sql.GraftMetadataOnlyCount
-                .metaNonNullByPartition(t, f.name, asOf)
-                .map(ns => (StructField(s"count(${f.name})", longT,
-                  nullable = false), (pv: String) => ns(pv)))
-            }
-          }
-          case _ => None
+    val groupBy: Option[Option[StructField]] = agg.groupByExpressions().toSeq match {
+      case Seq() => Some(None)
+      case Seq(g) => colOf(g).filter(f => groupable(f.dataType)).map(Some(_))
+      case _ => None
+    }
+    def extreme(f: StructField, fn: String, isMin: Boolean): Option[(StructField, Want)] =
+      Want.extreme(f.name, f.dataType, isMin).map((StructField(s"$fn(${f.name})", f.dataType), _))
+    // (output field, metadata aggregate) per aggregate, from types alone
+    val classified: Seq[Option[(StructField, Want)]] = agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => Some((StructField("count(*)", LongType, nullable = false), WantCount))
+      case m: Min => colOf(m.column).flatMap(extreme(_, "min", isMin = true))
+      case m: Max => colOf(m.column).flatMap(extreme(_, "max", isMin = false))
+      // result types mirror Spark's Sum resolution (integral → LongType,
+      // decimal → widened decimal) so complete push-down type-checks
+      case sm: Sum if !sm.isDistinct => colOf(sm.column).flatMap { f =>
+        val resultDt = f.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => LongType
+          case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
+          case other => other
         }
-      if (answered.exists(_.isEmpty) || answered.isEmpty) None
-      else {
-        val pairs = answered.map(_.get)
-        val aggSchema = pairs.map(_._1)
-        partField match {
-          case None =>
-            Some((StructType(aggSchema), Seq(pairs.map(_._2("")))))
-          case Some(pf) =>
-            // complete grouped push-down: output = group column, then aggs
-            val pvs = t.liveFiles(asOf)
-              .map(_.partitionValue.getOrElse("__HIVE_DEFAULT_PARTITION__"))
-              .distinct.sorted
-            val keys = pvs.map(pv =>
-              graft.sql.GraftMetadataOnlyCount.parsePartitionValue(pv, pf.dataType)
-                .map(pv -> _))
-            if (keys.exists(_.isEmpty)) return None
-            val rows = keys.map(_.get).map { case (pv, k) =>
-              k +: pairs.map(_._2(pv))
-            }
-            Some((StructType(pf +: aggSchema), rows))
-        }
+        Want.sum(f.name, resultDt).map((StructField(s"sum(${f.name})", resultDt), _))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      case ct: Count if !ct.isDistinct => colOf(ct.column).map(f =>
+        (StructField(s"count(${f.name})", LongType, nullable = false), WantNonNull(f.name)))
+      case _ => None
+    }
+    for {
+      part <- groupBy
+      pairs <- if (classified.nonEmpty && classified.forall(_.isDefined)) Some(classified.flatten)
+               else None
+      rows <- try answer(snap, pairs.map(_._2), part, None)
+              catch { case scala.util.control.NonFatal(_) => None }
+    } yield (StructType(part.toSeq ++ pairs.map(_._1)), rows)
+  }
 
   /** Route to the SPJ-capable bucket Batch scan when the snapshot is plain
     * enough for it to be exact; then the general v2 file scan (CoW, no
@@ -588,8 +516,7 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
   private def fileScan(): Option[Scan] =
     try {
       val spark = SparkSession.active
-      val t = LakeTable.load(spark, path)
-      val snap = t.snapshot(asOf)
+      val t = table
       val spec = snap.spec
       if (spec.columnMap.nonEmpty) return None
       if (required.isEmpty) return None
@@ -598,7 +525,7 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
       // partition-evolution era guard: the dir-constant logic below
       // assumes every file's stored partitionValue belongs to the CURRENT
       // partition column — mixed eras read through V1 (era-grouped scans)
-      if (t.mixedPartitionEras(live0, spec)) return None
+      if (LakeTable.mixedPartitionEras(live0, spec)) return None
       val live = t.pruneByFilters(live0, filters.toSeq, snap.shape)
       val dataSchema = snap.schema
       val constCol: Option[String] =
@@ -715,14 +642,13 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
           if (any) arr else null
         }
       }
-      Some(new GraftFileScan(path, asOf, snap.shape, live.zip(descs), required, fileSchema,
+      Some(new GraftFileScan(t, snap, live.zip(descs), required, fileSchema,
         outIdx, maxBytes, limit, filterCols, absentFill))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def bucketScan(): Option[Scan] =
     try {
-      val t = LakeTable.load(SparkSession.active, path)
-      val snap = t.snapshot(asOf)
+      val t = table
       val spec = snap.spec
       // IsNotNull-only filter sets (the join planner's null-guard artifacts)
       // are fine: every filter was returned as residual from pushFilters, so
@@ -797,7 +723,7 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
             a.tombstone, a.dv.map(dvFilesOf).getOrElse(Array.empty))
         }
       }
-      Some(new GraftBucketScan(path, asOf, spec.buckets, byBucket, required,
+      Some(new GraftBucketScan(t, snap, spec.buckets, byBucket, required,
         fileSchema, outIdx, merge))
     } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -812,7 +738,7 @@ class GraftScanBuilder(path: String, asOf: Option[Long], fullSchema: StructType)
       * [[GraftFileScan]] is the path that actually feeds the CBO; this
       * report covers direct consumers of the un-pushed relation. */
     override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-      GraftScanStats.estimate(path, asOf)
+      GraftScanStats.estimate(table, snap)
 
     override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
       new BaseRelation with TableScan {
@@ -901,12 +827,13 @@ class GraftWriteBuilder(path: String)
   * joins. All driver-side commit-log metadata — no file footer is
   * opened. */
 object GraftScanStats {
-  def estimate(path: String, asOf: Option[Long]): org.apache.spark.sql.connector.read.Statistics = {
-    val t0: Option[LakeTable] =
-      try Some(LakeTable.load(SparkSession.active, path))
-      catch { case scala.util.control.NonFatal(_) => None }
+  /** Statistics of snapshot `s` of table `t` — the snapshot the scan reads. */
+  private[graft] def estimate(table: => LakeTable,
+      snapshot: => Snapshot): org.apache.spark.sql.connector.read.Statistics = {
+    val ts: Option[(LakeTable, Snapshot)] =
+      try Some((table, snapshot)) catch { case scala.util.control.NonFatal(_) => None }
     val est: Option[(Long, Long)] =
-      try t0.map(t => (t.sizeBytes(asOf), t.liveFileStats._2))
+      try ts.map { case (t, s) => (t.sizeAt(s), s.live.map(a => a.rows - a.dvRows).sum) }
       catch { case scala.util.control.NonFatal(_) => None }
     val colStats: java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
@@ -914,7 +841,7 @@ object GraftScanStats {
       val m = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      try t0.flatMap(_.tableStats(asOf)).foreach { ts =>
+      try ts.flatMap { case (t, s) => t.tableStatsAt(s) }.foreach { ts =>
         ts.cols.foreach { case (name, cs) =>
           m.put(Expressions.column(name),
             new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {

@@ -4,7 +4,6 @@ import java.{util => ju}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -12,7 +11,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.lake.{FileAction, LakeTable, Shape}
+import graft.lake.{FileAction, LakeTable, Snapshot}
 
 /** One live data file as the executor-side reader needs it: absolute path,
   * the commit-log-relative identity DV sidecars key on, the typed
@@ -65,7 +64,7 @@ case class ScanFileDesc(abs: String, rel: String, partVal: Any,
   * Input partitions are files bin-packed to `maxPartitionBytes` using the
   * commit log's byte stats — no filesystem listing at plan time beyond DV
   * sidecar dirs. */
-class GraftFileScan(path: String, asOf: Option[Long], shape: Shape,
+class GraftFileScan private[graft] (table: LakeTable, snap: Snapshot,
     files: Seq[(FileAction, ScanFileDesc)], required: StructType,
     fileSchema: StructType, outIdx: Array[Int], maxBytes: Long,
     limit: Option[Int], filterCols: Array[String],
@@ -80,15 +79,14 @@ class GraftFileScan(path: String, asOf: Option[Long], shape: Shape,
   override def toBatch: Batch = this
 
   override def estimateStatistics(): Statistics =
-    GraftScanStats.estimate(path, asOf)
+    GraftScanStats.estimate(table, snap)
 
   override def filterAttributes(): Array[NamedReference] =
     filterCols.map(Expressions.column)
 
   override def filter(filters: Array[Filter]): Unit = {
     try {
-      val t = LakeTable.load(SparkSession.active, path)
-      val kept = t.pruneByFilters(current.map(_._1), filters.toSeq, shape)
+      val kept = table.pruneByFilters(current.map(_._1), filters.toSeq, snap.shape)
         .map(_.path).toSet
       current = current.filter { case (a, _) => kept.contains(a.path) }
     } catch { case scala.util.control.NonFatal(_) => () }

@@ -606,14 +606,16 @@ case class GraftDescribeDetailCommand(target: String)
 
   override def run(spark: SparkSession): Seq[Row] = {
     val t = GraftSqlParser.resolveTable(spark, target)
-    val live = t.liveFileStats
-    val cons = t.spec.constraints.toSeq.sortBy(_._1)
+    // every column from one state of the table
+    val s = t.snapshot()
+    val spec = s.spec
+    val cons = spec.constraints.toSeq.sortBy(_._1)
       .map { case (n, sql) => s"$n CHECK ($sql)" }.mkString("; ")
-    Seq(Row("graft", t.path, if (t.spec.mor) "merge-on-read" else "copy-on-write",
-      t.spec.key, t.spec.precombine, t.spec.partition.orNull,
-      live._1, live._2, t.sizeBytes(), t.latestVersion,
+    Seq(Row("graft", t.path, if (spec.mor) "merge-on-read" else "copy-on-write",
+      spec.key, spec.precombine, spec.partition.orNull,
+      s.live.size.toLong, s.live.map(a => a.rows - a.dvRows).sum, t.sizeAt(s), s.version,
       if (cons.isEmpty) null else cons,
-      if (t.spec.statsColumns.isEmpty) null else t.spec.statsColumns.mkString(",")))
+      if (spec.statsColumns.isEmpty) null else spec.statsColumns.mkString(",")))
   }
 }
 

@@ -171,7 +171,7 @@ object GraftMetadataTvfs {
     // belongs to the column IT was written under — report (column, value)
     // pairs so mixed-era rollups never conflate two columns' values
     t.liveFiles(asOf)
-      .groupBy(a => (t.partitionColOf(a).orNull, a.partitionValue.orNull))
+      .groupBy(a => (LakeTable.partitionColOf(a).orNull, a.partitionValue.orNull))
       .map { case ((pc, pv), as) =>
         (pc, pv, as.size.toLong, as.count(_.log).toLong,
           as.map(a => a.rows - a.dvRows).sum, as.map(_.bytes).sum)

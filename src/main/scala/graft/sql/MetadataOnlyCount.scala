@@ -11,45 +11,56 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.lake.LakeTable
+import scala.util.control.NonFatal
+
+import graft.lake.{FileAction, LakeTable, Snapshot}
 import graft.sources.{GraftCatalogTable, GraftRelation}
 
-/** Answer unfiltered `count(*)` / `min(col)` / `max(col)` over a graft
+/** Answer `count(*)`, `count(col)`, `min`/`max` and `sum` over a graft
   * table from commit-log stats — zero data files opened (Delta's
   * metadata-only query idea). At 100 TB this turns a full-table scan into
   * one driver-side metadata read.
   *
-  * The rewrite fires only when the metadata answer is EXACT:
-  *   - plain snapshot reads (no incremental/CDF window, no `_ro`/`_rt`
-  *     view override), optionally time-traveled;
-  *   - `count(*)`: no live MoR log files ([[LakeTable.exactRowCount]] —
-  *     log rows over-count contested keys); deletion vectors stay exact
-  *     (rows − dvRows);
-  *   - `min`/`max`: additionally no DVs at all (one could have killed the
-  *     extremal row), the column is the record key or a declared stats
-  *     column, every live file has non-sentinel stats
-  *     ([[LakeTable.fileExtremes]]), and the type round-trips the rendered
-  *     footer form exactly (integral, float/double via Java's reversible
-  *     toString, string, date, timestamp — graft writes files with parquet's
-  *     default untruncated footer statistics);
+  * The rule rewrites an ungrouped aggregate to a `LocalRelation` when:
+  *   - the scan is a plain snapshot read (no incremental/CDF window, no
+  *     `_ro`/`_rt` view override), optionally time-traveled;
   *   - nothing between the aggregate and the scan but aliases/projections
   *     of the scan's own attributes (resolved by exprId, so a renaming
-  *     projection bails out rather than answering for the wrong column);
-  *   - every aggregate is bare and non-distinct with no FILTER clause.
+  *     projection bails out rather than answering for the wrong column)
+  *     and partition-column `=`/`IN` filters;
+  *   - every aggregate is bare and non-distinct with no FILTER clause,
+  *     `min`/`max` over a type whose rendered footer form round-trips
+  *     exactly (integral, float/double via Java's reversible toString,
+  *     string, date, timestamp — graft writes files with parquet's default
+  *     untruncated footer statistics), `sum` over integral or decimal;
+  *   - [[answer]] finds the metadata exact for the resolved snapshot.
   *
   * Escape hatch: `spark.graft.metadataCount.enabled=false`.
   */
 object GraftMetadataOnlyCount extends Rule[LogicalPlan] {
 
-  private sealed trait Want
-  private case object WantCount extends Want
-  private case class WantExtreme(name: String, dt: DataType, isMin: Boolean) extends Want
+  /** One aggregate the commit log may answer. */
+  private[graft] sealed trait Want
+  private[graft] case object WantCount extends Want
+  private[graft] case class WantExtreme(name: String, dt: DataType, isMin: Boolean) extends Want
   /** `SUM(col)` from stored per-file sums; `resultDt` is Spark's Sum
     * result type (LongType for integral input, widened decimal for
-    * decimal input) so the LocalRelation value matches the plan's type. */
-  private case class WantSum(name: String, resultDt: DataType) extends Want
+    * decimal input) so the answered value matches the plan's type. */
+  private[graft] case class WantSum(name: String, resultDt: DataType) extends Want
   /** `COUNT(col)` — non-null count from the same stored per-file pairs. */
-  private case class WantNonNull(name: String) extends Want
+  private[graft] case class WantNonNull(name: String) extends Want
+
+  /** The shapes [[answer]] can ever take, decided from types alone so a
+    * translator stops before it resolves a snapshot. */
+  private[graft] object Want {
+    // every round-tripping type parses "0"
+    def extreme(name: String, dt: DataType, isMin: Boolean): Option[Want] =
+      parse("0", dt).map(_ => WantExtreme(name, dt, isMin))
+    def sum(name: String, resultDt: DataType): Option[Want] = resultDt match {
+      case LongType | _: DecimalType => Some(WantSum(name, resultDt))
+      case _ => None // float/double sums are order-dependent, never stored
+    }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val spark = SparkSession.active
@@ -59,8 +70,9 @@ object GraftMetadataOnlyCount extends Rule[LogicalPlan] {
         (for {
           (path, resolveAsOf, relOut, allowed) <- scanTarget(child)
           wants <- traverse(aggs)(classify(_, relOut))
-          values <- answer(spark, path, resolveAsOf, wants, allowed)
-        } yield LocalRelation(agg.output, Seq(InternalRow.fromSeq(values))))
+          s <- snapshotOf(spark, path, resolveAsOf)
+          rows <- answer(s, wants, None, allowed)
+        } yield LocalRelation(agg.output, rows.map(InternalRow.fromSeq)))
           .getOrElse(agg)
     }
   }
@@ -116,18 +128,19 @@ object GraftMetadataOnlyCount extends Rule[LogicalPlan] {
       case a: AggregateExpression => Some(a)
       case _ => None
     }
+    def scanned(a: AttributeReference) = relOut.find(_.exprId == a.exprId)
     ae.flatMap {
       case AggregateExpression(Count(children), Complete, false, None, _)
           if children.forall { case Literal(v, _) => v != null; case _ => false } =>
         Some(WantCount)
       case AggregateExpression(Count(Seq(a: AttributeReference)), Complete, false, None, _) =>
-        relOut.find(_.exprId == a.exprId).map(r => WantNonNull(r.name))
+        scanned(a).map(r => WantNonNull(r.name))
       case AggregateExpression(Min(a: AttributeReference), Complete, false, None, _) =>
-        relOut.find(_.exprId == a.exprId).map(r => WantExtreme(r.name, r.dataType, isMin = true))
+        scanned(a).flatMap(r => Want.extreme(r.name, r.dataType, isMin = true))
       case AggregateExpression(Max(a: AttributeReference), Complete, false, None, _) =>
-        relOut.find(_.exprId == a.exprId).map(r => WantExtreme(r.name, r.dataType, isMin = false))
+        scanned(a).flatMap(r => Want.extreme(r.name, r.dataType, isMin = false))
       case AggregateExpression(s @ Sum(a: AttributeReference, _), Complete, false, None, _) =>
-        relOut.find(_.exprId == a.exprId).map(r => WantSum(r.name, s.dataType))
+        scanned(a).flatMap(r => Want.sum(r.name, s.dataType))
       case _ => None
     }
   }
@@ -177,55 +190,91 @@ object GraftMetadataOnlyCount extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def answer(spark: SparkSession, path: String,
-      resolveAsOf: LakeTable => Option[Long], wants: Seq[Want],
-      allowed: Option[(String, Set[String])]): Option[Seq[Any]] =
+  private def snapshotOf(spark: SparkSession, path: String,
+      resolveAsOf: LakeTable => Option[Long]): Option[Snapshot] =
     try {
       val t = LakeTable.load(spark, path)
-      val asOf = resolveAsOf(t)
-      // a filter is only answerable when it constrains the partition column
-      allowed.foreach { case (name, _) =>
-        if (!t.specAt(asOf).partition.exists(_.equalsIgnoreCase(name))) return None
-      }
-      val vals = allowed.map(_._2)
-      traverse(wants) {
-        case WantCount => vals match {
-          case None => t.exactRowCount(asOf).map(n => n: Any)
-          case Some(vs) => t.partitionRowCounts(asOf)
-            .map(m => vs.toSeq.map(v => m.getOrElse(v, 0L)).sum: Any)
-        }
-        case WantExtreme(name, dt, isMin) => vals match {
-          case None => metaExtreme(t, name, dt, isMin, asOf)
-          case Some(vs) => metaExtremeByPartition(t, name, dt, isMin, asOf).map { m =>
-            val sel = m.collect { case (pv, v) if vs.contains(pv) => v }
-            // empty selection = no rows in the allowed partitions → NULL,
-            // the exact SQL answer for MIN/MAX over zero rows
-            if (sel.isEmpty) null
-            else sel.reduce((a, b) => if (isMin == lessThan(a, b)) a else b)
-          }
-        }
-        case WantSum(name, resultDt) =>
-          metaSumPairs(t, name, asOf, vals).flatMap(ps => renderSum(ps, resultDt))
-        case WantNonNull(name) =>
-          metaSumPairs(t, name, asOf, vals).map(ps => ps.map(_._2).sum: Any)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      Some(t.snapshot(resolveAsOf(t)))
+    } catch { case NonFatal(_) => None }
 
-  /** The live (sum, nonNull) pairs of a stat'd column, optionally
-    * restricted to a set of stored partitionValue strings. */
-  private def metaSumPairs(t: LakeTable, name: String, asOf: Option[Long],
-      allowed: Option[Set[String]]): Option[Seq[(String, Long)]] =
-    allowed match {
-      case None => t.fileSums(name, asOf)
-      case Some(vs) => t.fileSumsWithPartition(name, asOf)
-        .map(_.collect { case (pv, sv) if vs.contains(pv) => sv })
+  /** The one metadata answer behind this rule, the DSv2 push-down
+    * ([[graft.sources.GraftScanBuilder]]) and the BM25 corpus scalars
+    * ([[graft.ext.TextIndex]]): every wanted aggregate of snapshot `s`
+    * from its live files' recorded facts — row and DV row counts, footer
+    * min/max, stored sums — with zero data files opened. One row per
+    * group: ungrouped = one row of `wants`; `byPartition` = one row per
+    * stored partition value (the typed group value first, in stored-value
+    * order); `allowed` keeps only the files of the named column's listed
+    * partition values. None = metadata is not exact, scan instead. The
+    * gates:
+    *   - any live MoR log file refuses everything (log rows over-count
+    *     contested keys; tombstones are log files);
+    *   - min/max, sum and count(col) also refuse any deletion vector (the
+    *     killed rows stay in the file's stats and sums);
+    *   - min/max need non-sentinel stats for the column on every file in
+    *     scope, sum/count(col) stored sums for its physical name;
+    *   - partition values are read (grouped or partition-filtered
+    *     answers only) when the column is `s.spec`'s partition column and
+    *     no live file is from an older partition era, whose stored value
+    *     belongs to a different column. */
+  private[graft] def answer(s: Snapshot, wants: Seq[Want], byPartition: Option[StructField],
+      allowed: Option[(String, Set[String])]): Option[Seq[Seq[Any]]] =
+    try {
+      val live = s.live
+      val partCol = byPartition.map(_.name).orElse(allowed.map(_._1))
+      if (live.exists(_.log) ||
+          wants.exists(_ != WantCount) && live.exists(a => a.dv.isDefined || a.dvRows > 0) ||
+          partCol.exists(c => !s.spec.partition.exists(_.equalsIgnoreCase(c)) ||
+            LakeTable.mixedPartitionEras(live, s.spec))) return None
+      val pv: FileAction => String = _.partitionValue.getOrElse(NULL_PARTITION)
+      val inScope = allowed.fold(live) { case (_, vs) => live.filter(a => vs.contains(pv(a))) }
+      val groups: Option[Seq[(Seq[Any], Seq[FileAction])]] = byPartition match {
+        case None => Some(Seq((Nil, inScope)))
+        case Some(f) =>
+          traverse(inScope.groupBy(pv).toSeq.sortBy(_._1)) { case (v, files) =>
+            partitionKey(v, f.dataType).map(k => (Seq(k), files))
+          }
+      }
+      groups.flatMap(traverse(_) { case (key, files) =>
+        traverse(wants)(aggregate(s, _, files)).map(key ++ _)
+      })
+    } catch { case NonFatal(_) => None }
+
+  /** One aggregate over the files of one group, in Spark's internal form
+    * (the value may legally be null: min/max/sum over zero rows). */
+  private def aggregate(s: Snapshot, want: Want, files: Seq[FileAction]): Option[Any] =
+    want match {
+      case WantCount => Some(files.map(a => a.rows - a.dvRows).sum)
+      case WantExtreme(name, dt, isMin) =>
+        traverse(files) { a =>
+          val mm =
+            if (name.equalsIgnoreCase(s.spec.key)) Some((a.minKey, a.maxKey))
+            else a.colStats.collectFirst { case (c, st) if c.equalsIgnoreCase(name) => st }
+          // sentinel whole-range stats ("", "￿") mean "unknown" — an
+          // actual empty-string minimum is indistinguishable, so both are
+          // treated as unknown
+          mm.filter { case (lo, hi) => lo.nonEmpty && hi != "￿" }
+            .flatMap { case (lo, hi) => parse(if (isMin) lo else hi, dt) }
+        }.map { vs =>
+          if (vs.isEmpty) null
+          else vs.reduce((a, b) => if (isMin == lessThan(a, b)) a else b)
+        }
+      case WantSum(name, resultDt) => storedSums(s, name, files).flatMap(renderSum(_, resultDt))
+      case WantNonNull(name) => storedSums(s, name, files).map(_.map(_._2).sum)
     }
+
+  /** The (sum, non-null count) pairs every file stored for a column —
+    * files store PHYSICAL names (column mapping), callers pass LOGICAL. */
+  private def storedSums(s: Snapshot, name: String,
+      files: Seq[FileAction]): Option[Seq[(String, Long)]] = {
+    val phys = s.spec.physical(name)
+    traverse(files)(_.colSums.collectFirst { case (c, sv) if c.equalsIgnoreCase(phys) => sv })
+  }
 
   /** Fold stored per-file sums into Spark's internal value for the Sum
     * result type: Long for integral input (bail rather than reproduce
     * overflow wrap), Decimal for decimal input, NULL over zero non-null
-    * rows (the SQL answer). Wrapped in Some(Some(v))-style Option[Any]
-    * where the inner value may legally be null. */
+    * rows (the SQL answer). */
   private def renderSum(pairs: Seq[(String, Long)], resultDt: DataType): Option[Any] = {
     if (pairs.forall(_._2 == 0L)) return Some(null)
     val total = pairs.filter(_._2 > 0)
@@ -241,66 +290,18 @@ object GraftMetadataOnlyCount extends Rule[LogicalPlan] {
     }
   }
 
-  /** Exact commit-log min/max of a stat'd column in Spark's internal form —
-    * None whenever metadata can't answer exactly (shared with the DSv2
-    * aggregate push-down, [[graft.sources.GraftScanBuilder]]). */
-  private[graft] def metaExtreme(t: LakeTable, name: String, dt: DataType,
-      isMin: Boolean, asOf: Option[Long]): Option[Any] =
-    t.fileExtremes(name, asOf).flatMap { perFile =>
-      val side = perFile.map(mm => if (isMin) mm._1 else mm._2)
-      traverse(side)(parse(_, dt)).map(_.reduce { (a, b) =>
-        val lt = lessThan(a, b)
-        if (isMin == lt) a else b
-      })
-    }
+  private val NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
-  /** Per-PARTITION exact min/max of a stat'd column, keyed by the stored
-    * partitionValue string — the grouped sibling of [[metaExtreme]] behind
-    * the `GROUP BY <partition>` DSv2 aggregate push-down. */
-  private[graft] def metaExtremeByPartition(t: LakeTable, name: String,
-      dt: DataType, isMin: Boolean, asOf: Option[Long]): Option[Map[String, Any]] =
-    t.fileExtremesWithPartition(name, asOf).flatMap { perFile =>
-      val reduced = perFile.groupBy(_._1).map { case (pv, files) =>
-        val side = files.map { case (_, mm) => if (isMin) mm._1 else mm._2 }
-        traverse(side)(parse(_, dt)).map(v => pv -> v.reduce { (a, b) =>
-          if (isMin == lessThan(a, b)) a else b
-        })
-      }
-      if (reduced.exists(_.isEmpty)) None else Some(reduced.map(_.get).toMap)
-    }
+  /** Partition column types whose stored value string round-trips exactly. */
+  private[graft] def groupable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _ => false
+  }
 
-  /** Exact commit-log SUM of a sum-stat'd column in Spark's internal form
-    * (value may legally be null — SUM over zero non-null rows); None when
-    * metadata can't answer exactly. Shared with the DSv2 push-down. */
-  private[graft] def metaSum(t: LakeTable, name: String, resultDt: DataType,
-      asOf: Option[Long]): Option[Any] =
-    t.fileSums(name, asOf).flatMap(ps => renderSum(ps, resultDt))
-
-  /** Per-PARTITION exact SUM, keyed by stored partitionValue string. */
-  private[graft] def metaSumByPartition(t: LakeTable, name: String,
-      resultDt: DataType, asOf: Option[Long]): Option[Map[String, Any]] =
-    t.fileSumsWithPartition(name, asOf).flatMap { perFile =>
-      val grouped = perFile.groupBy(_._1).map { case (pv, fs) =>
-        renderSum(fs.map(_._2), resultDt).map(pv -> _)
-      }
-      if (grouped.exists(_.isEmpty)) None else Some(grouped.map(_.get).toMap)
-    }
-
-  /** Exact commit-log COUNT(col) (non-null count). */
-  private[graft] def metaNonNull(t: LakeTable, name: String,
-      asOf: Option[Long]): Option[Long] =
-    t.fileSums(name, asOf).map(_.map(_._2).sum)
-
-  /** Per-PARTITION exact COUNT(col). */
-  private[graft] def metaNonNullByPartition(t: LakeTable, name: String,
-      asOf: Option[Long]): Option[Map[String, Long]] =
-    t.fileSumsWithPartition(name, asOf).map(_.groupBy(_._1)
-      .map { case (pv, fs) => pv -> fs.map(_._2._2).sum })
-
-  /** A stored partitionValue string in Spark's internal form (null
-    * partition sentinel → null). Only exact-round-trip types. */
-  private[graft] def parsePartitionValue(pv: String, dt: DataType): Option[Any] =
-    if (pv == "__HIVE_DEFAULT_PARTITION__") Some(null) else parse(pv, dt)
+  /** A stored partition value in Spark's internal form (the null
+    * partition sentinel → null). */
+  private def partitionKey(pv: String, dt: DataType): Option[Any] =
+    if (!groupable(dt)) None else if (pv == NULL_PARTITION) Some(null) else parse(pv, dt)
 
   /** Parse a FooterStats-rendered value back to Spark's internal form —
     * only for types where the string round-trip is exact. */

@@ -262,6 +262,96 @@ class AnalyzeStatsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.metadataCount.enabled")
   }
 
+  test("a time-travel GROUP BY answers from that version's partition column") {
+    val path = Files.createTempDirectory("graft_aggpd_tt").toString
+    val tbl = LakeTable.create(spark, path, TableSpec("id", "ts", partition = Some("p")),
+      (1L to 60L).map(i => (i, 1L, s"g${i % 3}", s"h${i % 2}")).toDF("id", "ts", "p", "q"))
+    tbl.changePartition(Some("q"))
+    val cat = "gaggtt"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      Files.createTempDirectory("graft_aggpd_tt_wh").toString)
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.tt")
+    spark.sql(s"CREATE TABLE $cat.default.tt USING graft LOCATION '$path'")
+    spark.conf.set("spark.graft.metadataCount.enabled", "false")
+    try {
+      // at version 0 the table was partitioned by p: q is a data column
+      val got = spark.sql(
+        s"SELECT q, count(*) FROM $cat.default.tt VERSION AS OF 0 GROUP BY q")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      val expected = tbl.read(Some(0L)).groupBy("q").count()
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(expected == Set(("h0", 30L), ("h1", 30L)))
+      assert(got == expected)
+      def partitioning(asOf: Option[Long]): Seq[String] =
+        graft.sources.GraftCatalogTable(
+          org.apache.spark.sql.connector.catalog.Identifier.of(Array("default"), "tt"), path, asOf)
+          .partitioning().toSeq.flatMap(_.references().map(_.fieldNames().mkString(".")))
+      assert(partitioning(Some(0L)) == Seq("p") && partitioning(None) == Seq("q"))
+    } finally {
+      spark.conf.unset("spark.graft.metadataCount.enabled")
+      spark.sql(s"DROP TABLE IF EXISTS $cat.default.tt")
+    }
+  }
+
+  test("a time-travel catalog scan reports its own version's statistics") {
+    val path = Files.createTempDirectory("graft_tt_stats").toString
+    val tbl = LakeTable.create(spark, path, TableSpec("id", "ts"),
+      (1L to 50L).map(i => (i, 1L, s"v$i")).toDF("id", "ts", "v"))
+    tbl.upsert((51L to 250L).map(i => (i, 1L, s"v$i")).toDF("id", "ts", "v"))
+    val cat = "gttstats"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      Files.createTempDirectory("graft_tt_stats_wh").toString)
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.st")
+    spark.sql(s"CREATE TABLE $cat.default.st USING graft LOCATION '$path'")
+    def stats(version: String) = spark.sql(s"SELECT id, v FROM $cat.default.st $version")
+      .queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics()
+    val v0 = stats("VERSION AS OF 0")
+    assert(v0.numRows().getAsLong == 50L)
+    assert(v0.sizeInBytes().getAsLong == tbl.sizeBytes(Some(0L)))
+    assert(stats("").numRows().getAsLong == 250L)
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.st")
+  }
+
+  test("a DSv2 aggregate metadata can never answer resolves no snapshot") {
+    val path = Files.createTempDirectory("graft_aggpd_cast").toString
+    LakeTable.create(spark, path, TableSpec("id", "ts", sumColumns = Seq("x")),
+      (1L to 100L).map(i => (i, 1L, i.toInt)).toDF("id", "ts", "x"))
+    val schema = graft.sources.GraftCatalogTable(
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array("default"), "c"), path, None)
+      .schema()
+    import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expressions}
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation,
+      CountStar, Sum => V2Sum}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val agg = new Aggregation(Array[AggregateFunc](new CountStar(),
+      new V2Sum(new V2Cast(Expressions.column("x"), IntegerType, LongType), false)), Array.empty)
+    val builder = new graft.sources.GraftScanBuilder(path, None, schema)
+    val c = LogOpsProbe.ops {
+      assert(!builder.supportCompletePushDown(agg))
+      assert(!builder.pushAggregation(agg))
+    }
+    assert(c.versionListings == 0 && c.commitReads == 0, s"$c")
+    val cat = "gaggcast"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      Files.createTempDirectory("graft_aggpd_cast_wh").toString)
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.c")
+    spark.sql(s"CREATE TABLE $cat.default.c USING graft LOCATION '$path'")
+    spark.conf.set("spark.graft.metadataCount.enabled", "false")
+    try {
+      val r = spark.sql(s"SELECT count(*), sum(CAST(x AS BIGINT)) FROM $cat.default.c").head()
+      assert(r.getLong(0) == 100L && r.getLong(1) == 5050L)
+    } finally {
+      spark.conf.unset("spark.graft.metadataCount.enabled")
+      spark.sql(s"DROP TABLE IF EXISTS $cat.default.c")
+    }
+  }
+
   /** Leaf table names under the FIRST (deepest) join of the optimized plan. */
   private def bottomJoinTables(df: org.apache.spark.sql.DataFrame): Set[String] = {
     val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.LogOpsProbe.ops
 import graft.lake.{CommitLog, LakeTable, LogOps, TableSpec}
 
 /** [[graft.lake.CommitWindow]]: a version window resolved from one listing
@@ -17,12 +18,6 @@ import graft.lake.{CommitLog, LakeTable, LogOps, TableSpec}
 class CommitWindowSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
-
-  private def ops(body: => Unit): LogOps = {
-    val before = CommitLog.logOps
-    body
-    CommitLog.logOps - before
-  }
 
   private def mkTable(name: String, mor: Boolean = false): LakeTable = {
     val path = Files.createTempDirectory(s"graft_window_$name").toString

@@ -84,11 +84,12 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("a fully-deleted file is dropped, not re-added") {
     val (_, t) = mk(1000, 4)
     // range-partitioned by k: k < 250 is exactly the first file
-    val before = t.liveFileStats._1
+    val before = t.snapshot().live.size
     t.deleteVectors(col("k") < 250)
-    val after = t.liveFileStats
-    assert(after._1 < before, "the all-deleted file must leave the live set")
-    assert(after._2 == 750, "metadata row count must net out the DV")
+    val after = t.snapshot().live
+    assert(after.size < before, "the all-deleted file must leave the live set")
+    assert(after.map(a => a.rows - a.dvRows).sum == 750,
+      "metadata row count must net out the DV")
     assert(keys(t.read()) == (250L until 1000L).toSet)
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -214,6 +214,111 @@ class MetadataCountSpec extends AnyFunSuite {
     val compacted = spark.read.format("graft").load(t.path).agg(sum($"x").as("sx"))
     assert(isMetadataOnly(compacted))
     assert(compacted.collect().head.getLong(0) == (2L to 100L).map(_ * 2).sum + 1000L)
+  }
+
+  test("an empty table answers min/max/sum from metadata with the SQL answer") {
+    val path = Files.createTempDirectory("graft_mc_empty").toString
+    val t = LakeTable.create(spark, path, TableSpec("k", "ts", sumColumns = Seq("x")),
+      (1L to 50L).map(i => (i, 1L, i * 3)).toDF("k", "ts", "x"))
+    t.delete(lit(true))
+    assert(t.snapshot().live.isEmpty)
+    def q = spark.read.format("graft").load(path)
+      .agg(count(lit(1)), min($"k"), max($"k"), sum($"x"), count($"x"))
+    val meta = q
+    assert(isMetadataOnly(meta), meta.queryExecution.optimizedPlan.toString)
+    val got = meta.collect().head
+    assert(got.getLong(0) == 0L && got.isNullAt(1) && got.isNullAt(2) && got.isNullAt(3) &&
+      got.getLong(4) == 0L)
+    spark.conf.set("spark.graft.metadataCount.enabled", "false")
+    try {
+      val scanned = q
+      assert(!isMetadataOnly(scanned))
+      assert(scanned.collect().head == got)
+    } finally spark.conf.set("spark.graft.metadataCount.enabled", "true")
+  }
+
+  test("ungrouped aggregates stay metadata-exact across partition eras; partition filters refuse") {
+    val path = Files.createTempDirectory("graft_mc_eras").toString
+    val t = LakeTable.create(spark, path,
+      TableSpec("k", "ts", partition = Some("region"), sumColumns = Seq("v")),
+      (1L to 40L).map(i => (i, 1L, if (i <= 20) "emea" else "apac", s"c${i % 4}", i * 10))
+        .toDF("k", "ts", "region", "cat", "v"))
+    t.changePartition(Some("cat"))
+    def q = spark.read.format("graft").load(path)
+      .agg(count(lit(1)), min($"k"), max($"k"), sum($"v"), count($"v"))
+    val meta = q
+    assert(isMetadataOnly(meta), meta.queryExecution.optimizedPlan.toString)
+    val got = meta.collect().head
+    assert(got == Row(40L, 1L, 40L, (1L to 40L).map(_ * 10).sum, 40L))
+    spark.conf.set("spark.graft.metadataCount.enabled", "false")
+    try assert(q.collect().head == got)
+    finally spark.conf.set("spark.graft.metadataCount.enabled", "true")
+    // an old-era file's stored partition value belongs to `region`, not
+    // to today's partition column: filters on either column scan
+    Seq("cat = 'c1'" -> 10L, "region = 'emea'" -> 20L).foreach { case (where, n) =>
+      val f = spark.read.format("graft").load(path).filter(where).agg(count(lit(1)))
+      assert(!isMetadataOnly(f), where)
+      assert(f.collect().head.getLong(0) == n, where)
+    }
+  }
+
+  test("the optimizer resolves one snapshot per metadata answer") {
+    val path = Files.createTempDirectory("graft_mc_ops").toString
+    LakeTable.create(spark, path,
+      TableSpec("id", "ts", partition = Some("p"), sumColumns = Seq("ts")),
+      (1L to 300L).map(i => (i, i % 7, s"g${i % 3}")).toDF("id", "ts", "p"))
+    val cat = "graft_mc_ops"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      Files.createTempDirectory("graft_mc_ops_wh").toString)
+    spark.sql(s"CREATE TABLE $cat.default.ops USING graft LOCATION '$path'")
+    /** Version listings of the optimizer phase alone (the query is analyzed first). */
+    def optimized(sql: String): (Long, org.apache.spark.sql.DataFrame) = {
+      val df = spark.sql(sql)
+      df.queryExecution.analyzed
+      (LogOpsProbe.ops(df.queryExecution.optimizedPlan).versionListings, df)
+    }
+    def metaAggScan(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.exists(_.isInstanceOf[graft.sources.GraftMetaAggScan])
+    val flat = s"SELECT count(*), min(id), max(id), sum(ts), count(ts) FROM $cat.default.ops"
+    val expected = Row(300L, 1L, 300L, (1L to 300L).map(_ % 7).sum, 300L)
+    try {
+      val (ruleOn, a) = optimized(flat)
+      assert(ruleOn <= 2, s"rule on: $ruleOn version listings")
+      assert(isMetadataOnly(a) && a.collect().head == expected)
+      spark.conf.set("spark.graft.metadataCount.enabled", "false")
+      val (ruleOff, b) = optimized(flat)
+      assert(ruleOff <= 3, s"rule off: $ruleOff version listings")
+      assert(metaAggScan(b) && b.collect().head == expected)
+      val (grouped, c) = optimized(
+        s"SELECT p, count(*), min(id), max(id), sum(ts) FROM $cat.default.ops GROUP BY p")
+      assert(grouped <= 3, s"grouped, rule off: $grouped version listings")
+      assert(metaAggScan(c))
+      val byP = (1L to 300L).groupBy(i => s"g${i % 3}")
+      assert(c.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSet == byP.map { case (p, is) =>
+        (p, is.size.toLong, is.min, is.max, is.map(_ % 7).sum)
+      }.toSet)
+    } finally {
+      spark.conf.set("spark.graft.metadataCount.enabled", "true")
+      spark.sql(s"DROP TABLE IF EXISTS $cat.default.ops")
+    }
+  }
+
+  test("DESCRIBE DETAIL answers every column from one snapshot") {
+    val t = mk("detail")
+    t.deleteVectors(col("k") <= 10L)
+    t.upsert(Seq((2000L, 2L, "new")).toDF("k", "ts", "v"))
+    var detail: Row = null
+    val c = LogOpsProbe.ops { detail = spark.sql(s"DESCRIBE DETAIL '${t.path}'").collect().head }
+    assert(c.versionListings <= 2, s"DESCRIBE DETAIL: $c")
+    val s = t.snapshot()
+    assert(detail.getAs[Long]("num_files") == s.live.size.toLong)
+    assert(detail.getAs[Long]("num_rows") == 991L)
+    assert(detail.getAs[Long]("size_bytes") == t.sizeBytes())
+    assert(detail.getAs[Long]("latest_version") == s.version)
   }
 
   test("the escape hatch restores the scanning plan") {

@@ -105,7 +105,9 @@ class TextIndexSpec extends AnyFunSuite {
     // the BM25 corpus scalars still come from commit-log metadata (the
     // exactness gate survives the replacement's delete + upsert rewrites)
     val dt = graft.lake.LakeTable.load(spark, s"$path/docs")
-    assert(dt.fileSums("dl").isDefined,
+    assert(graft.sql.GraftMetadataOnlyCount.answer(dt.snapshot(),
+      Seq(graft.sql.GraftMetadataOnlyCount.WantSum("dl", org.apache.spark.sql.types.LongType)),
+      None, None).isDefined,
       "docs-table dl sums must stay metadata-exact after replacement")
     // vanished terms truly left the postings
     val old = docs.filter(col("doc_id") === victim).select("text").head().getString(0)
